@@ -43,8 +43,6 @@ object StreamFloorProbe {
           .select(col("event_id"))
       case other => sys.error(s"unknown variant $other")
     }
-    val mode = if (variant == "agg") "append" else "append"
-
     var n = 0
     (0 until iters).foreach { i =>
       n += 1
@@ -56,7 +54,7 @@ object StreamFloorProbe {
       spark.conf.set("spark.sql.shuffle.partitions",
         sys.env.getOrElse("FLOOR_PARTS", "4"))
       val w = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).trigger(Trigger.AvailableNow())
+        .outputMode("append").trigger(Trigger.AvailableNow())
         .option("checkpointLocation", s"/dev/shm/graft-floorprobe/$name")
       val q = w.start()
       spark.conf.set("spark.sql.shuffle.partitions", prev)

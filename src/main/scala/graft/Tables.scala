@@ -64,17 +64,19 @@ object Tables {
     val target = spark.conf.getOption("spark.graft.scan.minPartitions")
       .map(_.toInt).getOrElse(
         math.min(16, math.max(2, spark.sparkContext.defaultParallelism / 8)))
-    // split count memoized per file path (r16 advice): df.rdd instantiates
-    // a full QueryExecution + RDD lineage just to count scan splits —
-    // 10-50 ms of driver work previously paid on EVERY table() call. The
-    // count is a property of the file set + session split config, both
-    // fixed per process here; a long-lived service keyed this on
-    // (path, maxPartitionBytes) would be equally safe.
-    val parts = scanSplits.computeIfAbsent(key, _ => df.rdd.getNumPartitions)
+    // split count memoized (r16 advice): df.rdd instantiates a full
+    // QueryExecution + RDD lineage just to count scan splits — 10-50 ms
+    // of driver work previously paid on EVERY table() call. The count is
+    // a function of the file set, the split size and the parallelism
+    // that bounds it (FilePartition.maxSplitBytes), so all three key it.
+    val splitKey = (key, spark.conf.get("spark.sql.files.maxPartitionBytes"),
+      spark.sparkContext.defaultParallelism)
+    val parts = scanSplits.computeIfAbsent(splitKey, _ => df.rdd.getNumPartitions)
     if (target > 1 && parts < target) df.repartition(target) else df
   }
 
-  private val scanSplits = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val scanSplits =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), Integer]()
 
   def lineitem(spark: SparkSession, dir: String, fanOut: Boolean = false): DataFrame =
     table(spark, dir, "lineitem", fanOut)

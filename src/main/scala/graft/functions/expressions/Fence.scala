@@ -24,9 +24,13 @@ import org.apache.spark.sql.types.DataType
   * projection and the projection above the exchange: the kernel runs
   * once, wide.
   *
-  * Use it on the expensive column only (§4.4's own caveat: blanket
-  * non-determinism blocks legitimate pushes of OTHER filters). Codegen
-  * pass-through, so the fenced column costs nothing at runtime.
+  * The fence acts on the whole Project, not on the fenced column:
+  * Catalyst pushes a filter through a Project only when every projected
+  * expression is deterministic, so ONE fenced column holds back every
+  * filter above that Project, including filters on other, cheap
+  * columns. Fence only projections whose filters should stay above
+  * them (§4.4's own caveat). Codegen pass-through, so the fenced column
+  * costs nothing at runtime.
   */
 case class Fence(child: Expression)
     extends UnaryExpression with Nondeterministic {

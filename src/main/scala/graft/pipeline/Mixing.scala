@@ -236,43 +236,25 @@ object Mixing {
       stateDir: Option[String] = None)(
       implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
-    import graft.streaming.DriverFold
-    val resumed = stateDir.flatMap(DriverFold.loadLatest)
-    val counts = resumed.map(r => decodeKeyedCounts(r._2))
-      .getOrElse(scala.collection.mutable.HashMap.empty[String, Long])
-    var lastBatch = resumed.map(_._1).getOrElse(-1L)
-    DriverFold.run(
-      stream.select(col(srcCol).cast("string").as("s"),
-        size(graft.functions.GraftFunctions.tokens(col(textCol)))
-          .cast("long").as("nt")),
-      (batch, batchId) => {
-        if (batchId > lastBatch) {
-          batch.groupBy("s").agg(sum("nt").as("n")).collect().foreach { r =>
-            counts.update(r.getString(0),
-              counts.getOrElse(r.getString(0), 0L) + r.getLong(1))
-          }
-          lastBatch = batchId
-          stateDir.foreach(d =>
-            DriverFold.save(d, batchId, encodeKeyedCounts(counts)))
+    val counts = graft.streaming.DriverFold.fold(
+        stream.select(col(srcCol).cast("string").as("s"),
+          size(graft.functions.GraftFunctions.tokens(col(textCol)))
+            .cast("long").as("nt")),
+        scala.collection.mutable.HashMap.empty[String, Long],
+        checkpoint, stateDir)(
+      (counts, batch) => {
+        batch.groupBy("s").agg(sum("nt").as("n")).collect().foreach { r =>
+          counts.update(r.getString(0),
+            counts.getOrElse(r.getString(0), 0L) + r.getLong(1))
         }
-        onBatch(counts.size)
+        counts
       },
-      checkpoint)
+      counts => onBatch(counts.size))
     import spark.implicits._
     val stats = counts.toSeq
     dataBudget(stats, stats.foldLeft(0L)((a, c) => a + c._2))
       .toDF(srcCol, "n_tokens", "alloc_q", "epochs", "eff_tokens_q")
   }
-
-  // the string→long map wire format already exists for the heavy-hitter
-  // fold state — one encoding, one place to fix
-  private def encodeKeyedCounts(
-      m: scala.collection.mutable.HashMap[String, Long]): Array[Byte] =
-    graft.functions.expressions.MisraGriesAgg.serializeBuffer(m)
-
-  private def decodeKeyedCounts(
-      bytes: Array[Byte]): scala.collection.mutable.HashMap[String, Long] =
-    graft.functions.expressions.MisraGriesAgg.deserializeBuffer(bytes)
 
   def doremiWeights(stats: Seq[(String, Long, Long, Long)],
       nTarget: Long, eta: Double): Seq[(String, Double)] = {
@@ -358,30 +340,23 @@ object Mixing {
       checkpoint: Option[String] = None,
       stateDir: Option[String] = None)(
       implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import graft.streaming.DriverFold
     require(k > 0, s"sample size must be positive: $k")
-    val resumed = stateDir.flatMap(DriverFold.loadLatest)
-    val state = resumed.map(r => decodePairs(r._2))
-      .getOrElse(scala.collection.mutable.TreeSet.empty[(Long, Long)])
-    var lastBatch = resumed.map(_._1).getOrElse(-1L)
-    DriverFold.run(
-      stream.select(col(idCol).cast("long").as("id"),
-        graft.functions.GraftFunctions.hash60(col(idCol)).as("sample_h")),
-      (batch, batchId) => {
-        if (batchId > lastBatch) {
-          batch.orderBy(col("sample_h"), col("id")).limit(k).collect()
-            .foreach { r =>
-              val p = (r.getLong(1), r.getLong(0))
-              if (state.size < k) state.add(p)
-              else if (Ordering[(Long, Long)].lt(p, state.last) && state.add(p))
-                state.remove(state.last)
-            }
-          lastBatch = batchId
-          stateDir.foreach(d => DriverFold.save(d, batchId, encodePairs(state)))
-        }
-        onBatch(state.size)
+    val state = graft.streaming.DriverFold.fold(
+        stream.select(col(idCol).cast("long").as("id"),
+          graft.functions.GraftFunctions.hash60(col(idCol)).as("sample_h")),
+        scala.collection.mutable.TreeSet.empty[(Long, Long)],
+        checkpoint, stateDir)(
+      (state, batch) => {
+        batch.orderBy(col("sample_h"), col("id")).limit(k).collect()
+          .foreach { r =>
+            val p = (r.getLong(1), r.getLong(0))
+            if (state.size < k) state.add(p)
+            else if (Ordering[(Long, Long)].lt(p, state.last) && state.add(p))
+              state.remove(state.last)
+          }
+        state
       },
-      checkpoint)
+      state => onBatch(state.size))
     import spark.implicits._
     state.toSeq.map { case (h, id) => (id, h) }.toDF(idCol, "sample_h")
   }
@@ -436,7 +411,6 @@ object Mixing {
       checkpoint: Option[String] = None,
       stateDir: Option[String] = None)(
       implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import graft.streaming.DriverFold
     require(k > 0, s"sample size must be positive: $k")
     // ascending-first element = the WORST retained row: (-es_key, id)
     // ascending puts the largest key first in reverse, so keep the set
@@ -444,70 +418,29 @@ object Mixing {
     // key, the sample's boundary row)
     implicit val ord: Ordering[(Double, Long, Double)] =
       Ordering.by { case (key, id, _) => (-key, id) }
-    val resumed = stateDir.flatMap(DriverFold.loadLatest)
-    val state = resumed.map(r => decodeWeighted(r._2))
-      .getOrElse(scala.collection.mutable.TreeSet.empty[(Double, Long, Double)])
-    var lastBatch = resumed.map(_._1).getOrElse(-1L)
     val u = (graft.functions.GraftFunctions.hash60(col(idCol)).cast("double") +
       lit(1.0)) / lit(1152921504606846976L.toDouble)
-    DriverFold.run(
-      stream.filter(weightCol > lit(0)).select(col(idCol).cast("long").as("id"),
-        weightCol.cast("double").as("w"),
-        (graft.functions.PortableLog.plogCol(u) / weightCol.cast("double"))
-          .as("es_key")),
-      (batch, batchId) => {
-        if (batchId > lastBatch) {
-          batch.orderBy(col("es_key").desc, col("id")).limit(k).collect()
-            .foreach { r =>
-              val t = (r.getDouble(2), r.getLong(0), r.getDouble(1))
-              if (state.size < k) state.add(t)
-              else if (ord.lt(t, state.last) && state.add(t))
-                state.remove(state.last)
-            }
-          lastBatch = batchId
-          stateDir.foreach(d =>
-            DriverFold.save(d, batchId, encodeWeighted(state)))
-        }
-        onBatch(state.size)
+    val state = graft.streaming.DriverFold.fold(
+        stream.filter(weightCol > lit(0)).select(col(idCol).cast("long").as("id"),
+          weightCol.cast("double").as("w"),
+          (graft.functions.PortableLog.plogCol(u) / weightCol.cast("double"))
+            .as("es_key")),
+        scala.collection.mutable.TreeSet.empty[(Double, Long, Double)],
+        checkpoint, stateDir)(
+      (state, batch) => {
+        batch.orderBy(col("es_key").desc, col("id")).limit(k).collect()
+          .foreach { r =>
+            val t = (r.getDouble(2), r.getLong(0), r.getDouble(1))
+            if (state.size < k) state.add(t)
+            else if (ord.lt(t, state.last) && state.add(t))
+              state.remove(state.last)
+          }
+        state
       },
-      checkpoint)
+      state => onBatch(state.size))
     import spark.implicits._
     state.toSeq.map { case (key, id, w) => (id, w, key) }
       .toDF(idCol, "w", "es_key")
-  }
-
-  private def encodeWeighted(
-      s: scala.collection.mutable.TreeSet[(Double, Long, Double)]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(24 * s.size)
-    s.foreach { case (key, id, w) =>
-      bb.putLong(java.lang.Double.doubleToLongBits(key)); bb.putLong(id)
-      bb.putLong(java.lang.Double.doubleToLongBits(w))
-    }
-    bb.array()
-  }
-
-  private def decodeWeighted(bytes: Array[Byte])(
-      implicit ord: Ordering[(Double, Long, Double)])
-      : scala.collection.mutable.TreeSet[(Double, Long, Double)] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val s = scala.collection.mutable.TreeSet.empty[(Double, Long, Double)]
-    while (bb.hasRemaining)
-      s.add((java.lang.Double.longBitsToDouble(bb.getLong), bb.getLong,
-        java.lang.Double.longBitsToDouble(bb.getLong)))
-    s
-  }
-
-  private def encodePairs(s: scala.collection.mutable.TreeSet[(Long, Long)]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(16 * s.size)
-    s.foreach { case (h, id) => bb.putLong(h); bb.putLong(id) }
-    bb.array()
-  }
-
-  private def decodePairs(bytes: Array[Byte]): scala.collection.mutable.TreeSet[(Long, Long)] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val s = scala.collection.mutable.TreeSet.empty[(Long, Long)]
-    while (bb.hasRemaining) s.add((bb.getLong, bb.getLong))
-    s
   }
 
   /** Deterministic hash-bucketed corpus split (train/val/test) — the

@@ -99,25 +99,18 @@ object Profiling {
       checkpoint: Option[String] = None,
       stateDir: Option[String] = None)(
       implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import graft.streaming.DriverFold
-    val resumed = stateDir.flatMap(DriverFold.loadLatest)
-    val bins = resumed.map(r => decodeBins(r._2))
-      .getOrElse(scala.collection.mutable.HashMap.empty[Long, Long])
-    var lastBatch = resumed.map(_._1).getOrElse(-1L)
-    DriverFold.run(
-      stream.select(length(col(textCol)).cast("long").as("len")),
-      (batch, batchId) => {
-        if (batchId > lastBatch) {
-          histogram(batch, col("len"), width).collect().foreach { r =>
-            val bin = r.getLong(0)
-            bins.update(bin, bins.getOrElse(bin, 0L) + r.getLong(1))
-          }
-          lastBatch = batchId
-          stateDir.foreach(d => DriverFold.save(d, batchId, encodeBins(bins)))
+    val bins = graft.streaming.DriverFold.fold(
+        stream.select(length(col(textCol)).cast("long").as("len")),
+        scala.collection.mutable.HashMap.empty[Long, Long],
+        checkpoint, stateDir)(
+      (bins, batch) => {
+        histogram(batch, col("len"), width).collect().foreach { r =>
+          val bin = r.getLong(0)
+          bins.update(bin, bins.getOrElse(bin, 0L) + r.getLong(1))
         }
-        onBatch(bins.size)
+        bins
       },
-      checkpoint)
+      bins => onBatch(bins.size))
     import spark.implicits._
     quantileReport(bins.toSeq.toDF("bin", "cnt"), width, percents)
   }
@@ -197,26 +190,18 @@ object Profiling {
       checkpoint: Option[String],
       stateDir: Option[String])(
       implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import graft.streaming.DriverFold
-    val resumed = stateDir.flatMap(DriverFold.loadLatest)
-    val bins = resumed.map(r => decodeKeyedBins(r._2))
-      .getOrElse(scala.collection.mutable.HashMap.empty[(String, Long), Long])
-    var lastBatch = resumed.map(_._1).getOrElse(-1L)
-    DriverFold.run(binned,
-      (batch, batchId) => {
-        if (batchId > lastBatch) {
-          batch.groupBy("k", "bin").agg(count(lit(1)).as("cnt"))
-            .collect().foreach { r =>
-              val key = (r.getString(0), r.getLong(1))
-              bins.update(key, bins.getOrElse(key, 0L) + r.getLong(2))
-            }
-          lastBatch = batchId
-          stateDir.foreach(d =>
-            DriverFold.save(d, batchId, encodeKeyedBins(bins)))
-        }
-        onBatch(bins.size)
+    val bins = graft.streaming.DriverFold.fold(binned,
+        scala.collection.mutable.HashMap.empty[(String, Long), Long],
+        checkpoint, stateDir)(
+      (bins, batch) => {
+        batch.groupBy("k", "bin").agg(count(lit(1)).as("cnt"))
+          .collect().foreach { r =>
+            val key = (r.getString(0), r.getLong(1))
+            bins.update(key, bins.getOrElse(key, 0L) + r.getLong(2))
+          }
+        bins
       },
-      checkpoint)
+      bins => onBatch(bins.size))
     import spark.implicits._
     bins.toSeq.map { case ((k, b), c) => (k, b, c) }.toDF("k", "bin", "cnt")
   }
@@ -577,119 +562,31 @@ object Profiling {
       checkpoint: Option[String],
       stateDir: Option[String])(
       implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import graft.streaming.DriverFold
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    val resumed = stateDir.flatMap(DriverFold.loadLatest)
-    val st = resumed.map(r => decodeKeyedSums(r._2)).getOrElse(
-      scala.collection.mutable.HashMap.empty[(String, Long), (Long, BigInt, BigInt)])
-    var lastBatch = resumed.map(_._1).getOrElse(-1L)
-    DriverFold.run(binned,
-      (batch, batchId) => {
-        if (batchId > lastBatch) {
-          batch.groupBy("k", "bin")
-            .agg(count(lit(1)).as("cnt"),
-              sum(col("v1").cast(dec)).as("s1"),
-              sum(col("v2").cast(dec)).as("s2"))
-            .collect().foreach { r =>
-              val key = (r.getString(0), r.getLong(1))
-              val (c0, a0, b0) = st.getOrElse(key, (0L, BigInt(0), BigInt(0)))
-              st.update(key, (c0 + r.getLong(2),
-                a0 + BigInt(r.getDecimal(3).toBigInteger),
-                b0 + BigInt(r.getDecimal(4).toBigInteger)))
-            }
-          lastBatch = batchId
-          stateDir.foreach(d =>
-            DriverFold.save(d, batchId, encodeKeyedSums(st)))
-        }
-        onBatch(st.size)
+    val st = graft.streaming.DriverFold.fold(binned,
+        scala.collection.mutable.HashMap
+          .empty[(String, Long), (Long, BigInt, BigInt)],
+        checkpoint, stateDir)(
+      (st, batch) => {
+        batch.groupBy("k", "bin")
+          .agg(count(lit(1)).as("cnt"),
+            sum(col("v1").cast(dec)).as("s1"),
+            sum(col("v2").cast(dec)).as("s2"))
+          .collect().foreach { r =>
+            val key = (r.getString(0), r.getLong(1))
+            val (c0, a0, b0) = st.getOrElse(key, (0L, BigInt(0), BigInt(0)))
+            st.update(key, (c0 + r.getLong(2),
+              a0 + BigInt(r.getDecimal(3).toBigInteger),
+              b0 + BigInt(r.getDecimal(4).toBigInteger)))
+          }
+        st
       },
-      checkpoint)
+      st => onBatch(st.size))
     import spark.implicits._
     st.toSeq.map { case ((k, b), (c, s1, s2)) =>
         (k, b, c, s1.toString, s2.toString) }
       .toDF("k", "bin", "cnt", "s1", "s2")
       .select(col("k"), col("bin"), col("cnt"),
         col("s1").cast(dec).as("s1"), col("s2").cast(dec).as("s2"))
-  }
-
-  private def encodeKeyedSums(
-      m: scala.collection.mutable.HashMap[(String, Long), (Long, BigInt, BigInt)])
-      : Array[Byte] = {
-    val items = m.toArray.map { case ((k, b), (c, s1, s2)) =>
-      (k.getBytes(java.nio.charset.StandardCharsets.UTF_8), b, c,
-        s1.toByteArray, s2.toByteArray)
-    }
-    val bb = java.nio.ByteBuffer.allocate(
-      4 + items.map(i => 4 + i._1.length + 16 + 8 + i._4.length + i._5.length).sum)
-    bb.putInt(items.length)
-    items.foreach { case (kb, b, c, s1b, s2b) =>
-      bb.putInt(kb.length); bb.put(kb); bb.putLong(b); bb.putLong(c)
-      bb.putInt(s1b.length); bb.put(s1b)
-      bb.putInt(s2b.length); bb.put(s2b)
-    }
-    bb.array()
-  }
-
-  private def decodeKeyedSums(bytes: Array[Byte])
-      : scala.collection.mutable.HashMap[(String, Long), (Long, BigInt, BigInt)] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val m = scala.collection.mutable
-      .HashMap.empty[(String, Long), (Long, BigInt, BigInt)]
-    var i = 0
-    while (i < n) {
-      val kl = bb.getInt
-      val kb = new Array[Byte](kl); bb.get(kb)
-      val b = bb.getLong; val c = bb.getLong
-      val l1 = bb.getInt; val s1 = new Array[Byte](l1); bb.get(s1)
-      val l2 = bb.getInt; val s2 = new Array[Byte](l2); bb.get(s2)
-      m.put((new String(kb, java.nio.charset.StandardCharsets.UTF_8), b),
-        (c, BigInt(s1), BigInt(s2)))
-      i += 1
-    }
-    m
-  }
-
-  private def encodeKeyedBins(
-      m: scala.collection.mutable.HashMap[(String, Long), Long]): Array[Byte] = {
-    val items = m.toArray.map { case ((k, b), c) =>
-      (k.getBytes(java.nio.charset.StandardCharsets.UTF_8), b, c)
-    }
-    val bb = java.nio.ByteBuffer.allocate(4 + items.map(_._1.length + 20).sum)
-    bb.putInt(items.length)
-    items.foreach { case (kb, b, c) =>
-      bb.putInt(kb.length); bb.put(kb); bb.putLong(b); bb.putLong(c)
-    }
-    bb.array()
-  }
-
-  private def decodeKeyedBins(
-      bytes: Array[Byte]): scala.collection.mutable.HashMap[(String, Long), Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val m = scala.collection.mutable.HashMap.empty[(String, Long), Long]
-    var i = 0
-    while (i < n) {
-      val kl = bb.getInt
-      val kb = new Array[Byte](kl)
-      bb.get(kb)
-      m.put((new String(kb, java.nio.charset.StandardCharsets.UTF_8),
-        bb.getLong), bb.getLong)
-      i += 1
-    }
-    m
-  }
-
-  private def encodeBins(m: scala.collection.mutable.HashMap[Long, Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(16 * m.size)
-    m.foreach { case (b, c) => bb.putLong(b); bb.putLong(c) }
-    bb.array()
-  }
-
-  private def decodeBins(bytes: Array[Byte]): scala.collection.mutable.HashMap[Long, Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val m = scala.collection.mutable.HashMap.empty[Long, Long]
-    while (bb.hasRemaining) m.put(bb.getLong, bb.getLong)
-    m
   }
 }

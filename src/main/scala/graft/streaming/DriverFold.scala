@@ -1,91 +1,204 @@
 package graft.streaming
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
-/** Harness + persistence for DRIVER-side cross-batch fold state — the
-  * shape every sketch-at-ingestion operator shares (incremental heavy
-  * hitters, KMV distinct counting, bottom-k sampling, histogram
-  * profiling): each micro-batch reduces IN THE CLUSTER to a bounded
-  * summary (one aggregation row / ≤ k rows), which then merges into
-  * running driver state with the sketch's own mergeable combine. The
-  * state is O(sketch) bytes however long the stream runs — but it lives
-  * on the driver, so without persistence a restart would silently forget
-  * every batch the checkpoint's offset log says are done.
+/** DRIVER-side cross-batch fold state — the shape every
+  * sketch-at-ingestion operator shares (incremental heavy hitters, KMV
+  * distinct counting, bottom-k sampling, histogram profiling): each
+  * micro-batch reduces IN THE CLUSTER to a bounded summary (one
+  * aggregation row / ≤ k rows), which then merges into running driver
+  * state with the sketch's own mergeable combine. The state is
+  * O(sketch) bytes however long the stream runs — but it lives on the
+  * driver, so without persistence a restart would silently forget every
+  * batch the checkpoint's offset log says are done.
   *
-  * [[save]]/[[loadLatest]] are the commit protocol the export writer and
-  * [[graft.text.CorpusStats]]'s HhState use, factored for reuse: after
-  * folding batch b the caller persists (b, payload) via atomic
-  * tmp+rename, so on restart the newest file IS the last completed fold
-  * and every batch id at or below it must skip its merge on replay
-  * (idempotence). Either crash window is safe: before the state write,
-  * the replayed batch re-merges from the previous fold (the partial
-  * never persisted); after it, the id check skips the merge (the offset
-  * commit is the only thing the crash lost). All but the newest two
-  * files are pruned on each save.
+  * [[fold]] owns the whole exactly-once-on-restart protocol, so no
+  * operator re-implements it: resume from the newest persisted fold,
+  * skip every replayed batch id at or below it, and after merging batch
+  * b persist (b, state) via fsynced tmp + atomic rename. Either crash
+  * window is safe: before the state write, the replayed batch re-merges
+  * from the previous fold (the partial never persisted); after it, the
+  * id check skips the merge (the offset commit is the only thing the
+  * crash lost). All but the newest two files are pruned on each save.
+  *
+  * State files are written by the one type-directed [[StateCodec]]: the
+  * header names the state's shape and a CRC32 trails the payload, so a
+  * file decodes only into the state type the fold declares, and a
+  * truncated or corrupt file fails the resume loudly — it never resumes
+  * from empty.
   */
 object DriverFold {
-  import java.nio.file.{Files, Paths, StandardCopyOption}
+
+  /** Binary codec for fold state, resolved from the state's static type
+    * — decoding can only build the values the fold declares, never an
+    * arbitrary class. `shape` is written into each file's header and
+    * checked on load. */
+  trait StateCodec[S] {
+    def shape: String
+    def write(out: DataOutputStream, s: S): Unit
+    def read(in: DataInputStream): S
+  }
+
+  object StateCodec {
+    private def of[S](sh: String)(w: (DataOutputStream, S) => Unit,
+        r: DataInputStream => S): StateCodec[S] = new StateCodec[S] {
+      val shape = sh
+      def write(out: DataOutputStream, s: S): Unit = w(out, s)
+      def read(in: DataInputStream): S = r(in)
+    }
+
+    private def writeBytes(out: DataOutputStream, b: Array[Byte]): Unit = {
+      out.writeInt(b.length); out.write(b)
+    }
+
+    private def readBytes(in: DataInputStream): Array[Byte] = {
+      val b = new Array[Byte](in.readInt()); in.readFully(b); b
+    }
+
+    implicit val long: StateCodec[Long] = of[Long]("J")(_.writeLong(_), _.readLong())
+    implicit val double: StateCodec[Double] =
+      of[Double]("D")(_.writeDouble(_), _.readDouble())
+    implicit val string: StateCodec[String] = of[String]("S")(
+      (o, s) => writeBytes(o, s.getBytes(UTF_8)), i => new String(readBytes(i), UTF_8))
+    implicit val bigInt: StateCodec[BigInt] = of[BigInt]("I")(
+      (o, v) => writeBytes(o, v.toByteArray), i => BigInt(readBytes(i)))
+
+    implicit def tuple2[A, B](implicit a: StateCodec[A],
+        b: StateCodec[B]): StateCodec[(A, B)] =
+      of[(A, B)](s"(${a.shape},${b.shape})")(
+        (o, t) => { a.write(o, t._1); b.write(o, t._2) },
+        i => { val x = a.read(i); (x, b.read(i)) })
+
+    implicit def tuple3[A, B, C](implicit a: StateCodec[A], b: StateCodec[B],
+        c: StateCodec[C]): StateCodec[(A, B, C)] =
+      of[(A, B, C)](s"(${a.shape},${b.shape},${c.shape})")(
+        (o, t) => { a.write(o, t._1); b.write(o, t._2); c.write(o, t._3) },
+        i => { val x = a.read(i); val y = b.read(i); (x, y, c.read(i)) })
+
+    implicit def hashMap[K, V](
+        implicit e: StateCodec[(K, V)]): StateCodec[mutable.HashMap[K, V]] =
+      growable[(K, V), mutable.HashMap[K, V]](e, mutable.HashMap.empty)
+
+    implicit def treeSet[A: Ordering](
+        implicit e: StateCodec[A]): StateCodec[mutable.TreeSet[A]] =
+      growable[A, mutable.TreeSet[A]](e, mutable.TreeSet.empty)
+
+    private def growable[A, C <: mutable.Growable[A] with Iterable[A]](
+        e: StateCodec[A], empty: => C): StateCodec[C] =
+      of[C](s"${empty.getClass.getSimpleName}[${e.shape}]")(
+        (o, c) => { o.writeInt(c.size); c.foreach(e.write(o, _)) },
+        i => {
+          val c = empty
+          var n = i.readInt()
+          while (n > 0) { c += e.read(i); n -= 1 }
+          c
+        })
+  }
+
+  /** Fold `stream` to completion (AvailableNow) into driver state:
+    * `merge` folds one micro-batch into the state and returns it (a
+    * mutable sketch may merge in place and return itself); `onBatch`
+    * observes the state after every batch, replayed ones included. With
+    * `stateDir` set, the fold resumes from and persists to it under the
+    * protocol above. An explicit `checkpoint` (the restart path) is kept;
+    * without one the query runs on a throwaway checkpoint.
+    */
+  def fold[S](stream: DataFrame, init: S, checkpoint: Option[String],
+      stateDir: Option[String])(merge: (S, Dataset[Row]) => S,
+      onBatch: S => Unit)(
+      implicit codec: StateCodec[S], spark: SparkSession): S = {
+    val resumed = stateDir.flatMap(loadLatest[S])
+    var state = resumed.fold(init)(_._2)
+    var lastBatch = resumed.fold(-1L)(_._1)
+    StreamRun.withCheckpoint(checkpoint, "graft_fold") { ckpt =>
+      stream.writeStream
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+          // a replayed id at or below the persisted fold is already IN
+          // the state (the crash fell between the state write and the
+          // offset commit) — merging again would double-count
+          if (batchId > lastBatch) {
+            state = merge(state, batch)
+            lastBatch = batchId
+            stateDir.foreach(save(_, batchId, state))
+          }
+          onBatch(state)
+          ()
+        }
+        .start().awaitTermination()
+    }
+    state
+  }
+
+  private val Magic = 0x47524644 // "GRFD"
   private val Pat = """fold-(\d+)\.bin""".r
 
-  def save(dir: String, batchId: Long, payload: Array[Byte]): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-    bb.putLong(batchId); bb.put(payload)
-    val tmp = Paths.get(dir, s".fold-$batchId.tmp")
-    Files.write(tmp, bb.array())
-    Files.move(tmp, Paths.get(dir, s"fold-$batchId.bin"),
+  private def save[S](dir: String, batchId: Long, state: S)(
+      implicit codec: StateCodec[S]): Unit = {
+    val buf = new ByteArrayOutputStream()
+    val out = new DataOutputStream(buf)
+    out.writeInt(Magic); out.writeUTF(codec.shape); out.writeLong(batchId)
+    codec.write(out, state)
+    out.flush()
+    val body = buf.toByteArray
+    val crc = new java.util.zip.CRC32()
+    crc.update(body)
+    val bb = ByteBuffer.allocate(body.length + 8).put(body).putLong(crc.getValue)
+    bb.flip()
+    val d = Files.createDirectories(Paths.get(dir))
+    val tmp = d.resolve(s".fold-$batchId.tmp")
+    val ch = FileChannel.open(tmp, StandardOpenOption.CREATE,
+      StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
+    try { while (bb.hasRemaining) ch.write(bb); ch.force(true) }
+    finally ch.close()
+    Files.move(tmp, d.resolve(s"fold-$batchId.bin"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    forceDir(d)
     batchIds(dir).sorted.dropRight(2)
-      .foreach(b => Files.deleteIfExists(Paths.get(dir, s"fold-$b.bin")))
+      .foreach(b => Files.deleteIfExists(d.resolve(s"fold-$b.bin")))
   }
 
-  def loadLatest(dir: String): Option[(Long, Array[Byte])] = {
-    val ids = batchIds(dir)
-    if (ids.isEmpty) None
-    else {
-      val b = ids.max
-      val bytes = Files.readAllBytes(Paths.get(dir, s"fold-$b.bin"))
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-      val batchId = bb.getLong
-      val rest = new Array[Byte](bytes.length - 8)
-      bb.get(rest)
-      Some((batchId, rest))
+  /** Make the rename itself durable. Best effort: not every platform
+    * can open a directory for sync. */
+  private def forceDir(d: Path): Unit =
+    try {
+      val ch = FileChannel.open(d, StandardOpenOption.READ)
+      try ch.force(true) finally ch.close()
+    } catch { case _: java.io.IOException => () }
+
+  private def loadLatest[S](dir: String)(
+      implicit codec: StateCodec[S]): Option[(Long, S)] =
+    batchIds(dir).maxOption.map { b =>
+      val f = Paths.get(dir, s"fold-$b.bin")
+      val bytes = Files.readAllBytes(f)
+      def corrupt(why: String) = new IllegalStateException(
+        s"fold state $f is unreadable ($why); refusing to resume from it")
+      if (bytes.length < 8) throw corrupt("truncated")
+      val crc = new java.util.zip.CRC32()
+      crc.update(bytes, 0, bytes.length - 8)
+      if (crc.getValue != ByteBuffer.wrap(bytes, bytes.length - 8, 8).getLong)
+        throw corrupt("checksum mismatch: truncated or corrupt")
+      val in = new DataInputStream(
+        new ByteArrayInputStream(bytes, 0, bytes.length - 8))
+      if (in.readInt() != Magic) throw corrupt("not a fold state file")
+      val shape = in.readUTF()
+      if (shape != codec.shape)
+        throw corrupt(s"holds state of shape $shape, expected ${codec.shape}")
+      if (in.readLong() != b) throw corrupt("batch id disagrees with file name")
+      val state = codec.read(in)
+      if (in.available() != 0) throw corrupt("trailing bytes")
+      (b, state)
     }
-  }
 
-  private def batchIds(dir: String): Seq[Long] = {
-    val d = new java.io.File(dir)
-    if (!d.isDirectory) Seq.empty
-    else d.list().toSeq.collect { case Pat(b) => b.toLong }
-  }
-
-  /** Run `stream` to completion (AvailableNow) through a foreachBatch
-    * fold. `onBatch` receives every (batch, batchId) — idempotence
-    * against replayed ids is the CALLER's job (it owns the persisted
-    * fold watermark). Checkpoint handling matches
-    * [[StreamRun.toBatch]]: tmpfs when no explicit location is given,
-    * deleted on exit (an explicit checkpoint — the restart-evidence
-    * path — is kept).
-    */
-  def run(stream: DataFrame, onBatch: (Dataset[Row], Long) => Unit,
-      checkpoint: Option[String] = None)(
-      implicit spark: SparkSession): Unit = {
-    val shm = new java.io.File("/dev/shm")
-    val base =
-      if (shm.isDirectory && shm.canWrite) shm.toPath
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val ckpt = checkpoint.getOrElse(
-      java.nio.file.Files.createTempDirectory(base, "graft-fold").toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        onBatch(batch, batchId)
-        ()
-      }
-      .start()
-    try q.awaitTermination()
-    finally if (checkpoint.isEmpty)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-  }
+  private def batchIds(dir: String): Seq[Long] =
+    Option(new java.io.File(dir).list()).toSeq.flatten
+      .collect { case Pat(b) => b.toLong }
 }

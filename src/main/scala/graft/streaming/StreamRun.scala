@@ -57,22 +57,14 @@ object StreamRun {
       spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
     if (!noDataBatch)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val w = df.writeStream
+    try withCheckpoint(None, name) { ckpt =>
+      val q = df.writeStream
         .format("memory")
         .queryName(name)
         .outputMode(outputMode)
         .trigger(Trigger.AvailableNow())
-      // bounded verification runs are throwaway: put the checkpoint (offset
-      // log + state snapshots, fsync-heavy) on tmpfs when available. A
-      // durable deployment points this at real storage instead.
-      val shm = new java.io.File("/dev/shm")
-      val ckpt = if (shm.isDirectory && shm.canWrite) {
-        val d = s"/dev/shm/graft-ckpt/$jvmTag/$name"
-        w.option("checkpointLocation", d)
-        Some(d)
-      } else None
-      val q = w.start()
+        .option("checkpointLocation", ckpt)
+        .start()
       // restore the two session-global confs as soon as start() returns:
       // MicroBatchExecution clones the session (and thus captures both) at
       // start, so the query keeps its values, while any other query started
@@ -81,29 +73,24 @@ object StreamRun {
       // sees the session defaults instead of this run's overrides.
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      try {
-        q.awaitTermination()
-        // perf-debug lever: dump the last micro-batch's physical plan
-        // (how stream-static joins actually planned — broadcast vs SMJ —
-        // is invisible from the result DF's trivial memory-sink plan)
-        if (sys.env.get("SPARK_GRAFT_EXPLAIN_STREAM").contains("1")) {
-          System.err.println(s"==== $name last-execution plan ====")
-          q.explain(extended = false)
-          q.recentProgress.foreach(p => System.err.println(
-            s"---- $name batch ${p.batchId}: rows=${p.numInputRows} " +
-              s"durations=${p.durationMs}"))
-        }
-        if (requireSingleDataBatch) {
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches == 1,
-            s"expected exactly one data batch (AvailableNow file source, no " +
-              s"maxFilesPerTrigger), saw $dataBatches — the shared non-TTL " +
-              "oracle is invalid under multi-batch delivery")
-        }
-      } finally
-        // cleanup runs even when the require throws — repeated failing runs
-        // must not leak checkpoint directories on tmpfs
-        ckpt.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+      q.awaitTermination()
+      // perf-debug lever: dump the last micro-batch's physical plan
+      // (how stream-static joins actually planned — broadcast vs SMJ —
+      // is invisible from the result DF's trivial memory-sink plan)
+      if (sys.env.get("SPARK_GRAFT_EXPLAIN_STREAM").contains("1")) {
+        System.err.println(s"==== $name last-execution plan ====")
+        q.explain(extended = false)
+        q.recentProgress.foreach(p => System.err.println(
+          s"---- $name batch ${p.batchId}: rows=${p.numInputRows} " +
+            s"durations=${p.durationMs}"))
+      }
+      if (requireSingleDataBatch) {
+        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+        require(dataBatches == 1,
+          s"expected exactly one data batch (AvailableNow file source, no " +
+            s"maxFilesPerTrigger), saw $dataBatches — the shared non-TTL " +
+            "oracle is invalid under multi-batch delivery")
+      }
     } finally {
       // idempotent re-restore: covers the start()-throws path, where the
       // early restore above never ran
@@ -120,17 +107,31 @@ object StreamRun {
     * cleaned up after termination. The caller supplies the writer with
     * format/options already set (e.g. [[graft.api.Pipe.kafkaSink]]).
     */
-  def drain[T](w: org.apache.spark.sql.streaming.DataStreamWriter[T]): Unit = {
-    val name = s"graft_drain_${n.incrementAndGet()}"
-    val root = {
+  def drain[T](w: org.apache.spark.sql.streaming.DataStreamWriter[T]): Unit =
+    withCheckpoint(None, "graft_drain") { ckpt =>
+      w.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .start().awaitTermination()
+    }
+
+  /** Run `body` against a checkpoint location. An `explicit` one (the
+    * restart path) is used and kept. Otherwise the run is throwaway: the
+    * checkpoint (offset log + state snapshots, fsync-heavy) goes on tmpfs
+    * when writable, else under java.io.tmpdir, and is deleted afterwards
+    * — also when `body` throws, so repeated failing runs leak nothing. A
+    * durable deployment passes real storage explicitly.
+    */
+  private[streaming] def withCheckpoint[T](explicit: Option[String],
+      name: String)(body: String => T): T = {
+    val ckpt = explicit.getOrElse {
       val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) s"/dev/shm/graft-ckpt/$jvmTag/$name"
+      if (shm.isDirectory && shm.canWrite)
+        s"/dev/shm/graft-ckpt/$jvmTag/$name-${n.incrementAndGet()}"
       else java.nio.file.Files.createTempDirectory(s"graft-ckpt-$name").toString
     }
-    try w.trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", root)
-      .start().awaitTermination()
-    finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root)): Unit
+    try body(ckpt)
+    finally if (explicit.isEmpty)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
   }
 
   /** Foreach sink with the reference Sink's lifecycle: per-tuple process

@@ -63,9 +63,9 @@ object StreamSources {
   def documents(spark: SparkSession, dir: String): DataFrame = {
     GraftSession.adopt(spark)
     val schema = parquetSchema(spark, s"$dir/documents.parquet")
-    fanOut(spark, spark.readStream.schema(schema)
+    spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir))
+      .parquet(dir)
   }
 
 
@@ -76,34 +76,9 @@ object StreamSources {
   def embeddings(spark: SparkSession, dir: String): DataFrame = {
     GraftSession.adopt(spark)
     val schema = parquetSchema(spark, s"$dir/embeddings.parquet")
-    fanOut(spark, spark.readStream.schema(schema)
+    spark.readStream.schema(schema)
       .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir))
-  }
-
-  /** Streaming twin of `graft.Tables.scanParallel` (optimization guide
-    * §2.5): a single-file micro-batch plans its whole pre-shuffle stage —
-    * per-row gates, gram explosions, model-probe joins — as ONE task, so
-    * the ingest rows' map work serialized onto one core. One round-robin
-    * exchange right after the source fans the micro-batch out to the
-    * session's parallelism target before any per-row kernel runs. Every
-    * downstream stateful operator re-keys with its own exchange anyway
-    * (state partitioning is unchanged), and all engine operators are
-    * partitioning/order-independent by design — re-proved against the
-    * full oracle after this change. Parameterised via
-    * `spark.graft.stream.scanMinPartitions`; the DEFAULT IS OFF: once
-    * the batch-side guard fixed the stream-static frames (the real
-    * bottleneck those rows shared), A/B medians showed the stream-side
-    * exchange roughly neutral on the heavy ingest rows (reject_v6 9.5 →
-    * 9.1) and a 0.3-1.7 s loss on light ones (the exchange costs more
-    * than the 1-task map stage it parallelizes at local micro-batch
-    * sizes). A deployment ingesting fat micro-batches from a few
-    * unsplittable files can opt in with the conf.
-    */
-  private def fanOut(spark: SparkSession, df: DataFrame): DataFrame = {
-    val target = spark.conf.getOption("spark.graft.stream.scanMinPartitions")
-      .map(_.toInt).getOrElse(1)
-    if (target > 1) df.repartition(target) else df
+      .parquet(dir)
   }
 
   /** INGRESS_TIME flavor: arrival-stamped synthetic rate source

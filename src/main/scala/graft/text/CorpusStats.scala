@@ -143,7 +143,9 @@ object CorpusStats {
     * operator does, so the output is the same EXACT, partitioning- and
     * batch-split-independent head: {token : count ≥ T}, T = N div (m+1)
     * + 1. Candidates and total ride the stream; only they — never a
-    * vocabulary — touch the second pass.
+    * vocabulary — touch the second pass. The (sketch, N) fold is on the
+    * [[graft.streaming.DriverFold]] persisted-state protocol, so with
+    * `stateDir` set a restart resumes without double-counting.
     */
   def heavyHittersIngest(stream: DataFrame, archive: DataFrame,
       textCol: String, m: Int = HeavyHitterCounters,
@@ -152,93 +154,22 @@ object CorpusStats {
       stateDir: Option[String] = None)(
       implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import org.apache.spark.sql.Row
-    // resume from the latest persisted fold, if any (see HhState): the
-    // sketch is DRIVER state, so without persistence a restart would
-    // silently forget every batch the checkpoint says are done
-    val resumed = stateDir.flatMap(HhState.loadLatest)
-    val sketch = resumed.map(_.sketch)
-      .getOrElse(scala.collection.mutable.HashMap.empty[String, Long])
-    var n = resumed.map(_.n).getOrElse(0L)
-    var lastBatch = resumed.map(_.batchId).getOrElse(-1L)
-    graft.streaming.DriverFold.run(
-      stream.select(explode(tokens(col(textCol))).as("token")),
-      (batch, batchId) => {
-        // idempotent per batch: a replayed id at or below the persisted
-        // fold is already IN the state (the crash fell between the state
-        // write and the offset commit) — merging again would double-count
-        if (batchId > lastBatch) {
-          val row = batch.agg(
-            graft.functions.expressions.MisraGriesAgg
-              .sketchOf(col("token"), m).as("sk"),
-            count(lit(1)).as("nb")).head()
-          val entries = row.getSeq[Row](0).map(r => (r.getString(0), r.getLong(1)))
-          graft.functions.expressions.MisraGriesAgg.mergeInto(sketch, entries, m)
-          n += row.getLong(1)
-          lastBatch = batchId
-          stateDir.foreach(d => HhState.save(d, HhState(sketch, n, batchId)))
-        }
-        onBatch(sketch.size, n)
+    val (sketch, n) = graft.streaming.DriverFold.fold(
+        stream.select(explode(tokens(col(textCol))).as("token")),
+        (scala.collection.mutable.HashMap.empty[String, Long], 0L),
+        checkpoint, stateDir)(
+      (st, batch) => {
+        val row = batch.agg(
+          graft.functions.expressions.MisraGriesAgg
+            .sketchOf(col("token"), m).as("sk"),
+          count(lit(1)).as("nb")).head()
+        val entries = row.getSeq[Row](0).map(r => (r.getString(0), r.getLong(1)))
+        (graft.functions.expressions.MisraGriesAgg.mergeInto(st._1, entries, m),
+          st._2 + row.getLong(1))
       },
-      checkpoint)
+      st => onBatch(st._1.size, st._2))
     exactHead(archive.select(explode(tokens(col(textCol))).as("token")),
       sketch.keys.toSeq, n, m)
-  }
-
-  /** Persisted cross-batch fold for [[heavyHittersIngest]] — the commit
-    * protocol the export writer uses, applied to DRIVER state: after
-    * merging batch b the fold (sketch, running N, b) writes atomically
-    * to `state-<b>.bin` (tmp + rename), so on restart the latest file
-    * IS the last completed fold and every batch id at or below it is
-    * skipped on replay. Either crash window is safe: before the state
-    * write the replayed batch re-merges from the previous fold (the
-    * partial never persisted); after it, the id check skips the merge
-    * (the offset commit is the only thing the crash lost). O(m) bytes
-    * per file; all but the newest two are pruned on each save.
-    */
-  private[text] final case class HhState(
-      sketch: scala.collection.mutable.HashMap[String, Long], n: Long,
-      batchId: Long)
-
-  private[text] object HhState {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    private val Pat = """state-(\d+)\.bin""".r
-
-    def save(dir: String, st: HhState): Unit = {
-      Files.createDirectories(Paths.get(dir))
-      val buf = graft.functions.expressions.MisraGriesAgg
-        .serializeBuffer(st.sketch)
-      val bb = java.nio.ByteBuffer.allocate(16 + buf.length)
-      bb.putLong(st.batchId); bb.putLong(st.n); bb.put(buf)
-      val tmp = Paths.get(dir, s".state-${st.batchId}.tmp")
-      Files.write(tmp, bb.array())
-      Files.move(tmp, Paths.get(dir, s"state-${st.batchId}.bin"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      // prune all but the newest two (the previous fold stays as safety)
-      batchIds(dir).sorted.dropRight(2)
-        .foreach(b => Files.deleteIfExists(Paths.get(dir, s"state-$b.bin")))
-    }
-
-    def loadLatest(dir: String): Option[HhState] = {
-      val ids = batchIds(dir)
-      if (ids.isEmpty) None
-      else {
-        val b = ids.max
-        val bytes = Files.readAllBytes(Paths.get(dir, s"state-$b.bin"))
-        val bb = java.nio.ByteBuffer.wrap(bytes)
-        val batchId = bb.getLong
-        val n = bb.getLong
-        val rest = new Array[Byte](bytes.length - 16)
-        bb.get(rest)
-        Some(HhState(graft.functions.expressions.MisraGriesAgg
-          .deserializeBuffer(rest), n, batchId))
-      }
-    }
-
-    private def batchIds(dir: String): Seq[Long] = {
-      val d = new java.io.File(dir)
-      if (!d.isDirectory) Seq.empty
-      else d.list().toSeq.collect { case Pat(b) => b.toLong }
-    }
   }
 
   /** Retained-minima budget for the KMV distinct-count sketch. 256
@@ -362,42 +293,17 @@ object CorpusStats {
       onBatch: Int => Unit, checkpoint: Option[String],
       stateDir: Option[String])(
       implicit spark: org.apache.spark.sql.SparkSession)
-      : scala.collection.mutable.TreeSet[Long] = {
-    import graft.streaming.DriverFold
-    val resumed = stateDir.flatMap(DriverFold.loadLatest)
-    val sketch = resumed.map(r => kmvDecode(r._2))
-      .getOrElse(scala.collection.mutable.TreeSet.empty[Long])
-    var lastBatch = resumed.map(_._1).getOrElse(-1L)
-    DriverFold.run(
-      stream.select(explode(tokens(col(textCol))).as("token")),
-      (batch, batchId) => {
-        if (batchId > lastBatch) {
-          val arr = batch.agg(graft.functions.expressions.BottomKDistinctAgg
+      : scala.collection.mutable.TreeSet[Long] =
+    graft.streaming.DriverFold.fold(
+        stream.select(explode(tokens(col(textCol))).as("token")),
+        scala.collection.mutable.TreeSet.empty[Long], checkpoint, stateDir)(
+      (sketch, batch) => {
+        batch.agg(graft.functions.expressions.BottomKDistinctAgg
             .of(hash60(col("token")), k).as("sk")).head().getSeq[Long](0)
-          arr.foreach(
-            graft.functions.expressions.BottomKDistinctAgg.add(sketch, _, k))
-          lastBatch = batchId
-          stateDir.foreach(d =>
-            DriverFold.save(d, batchId, kmvEncode(sketch)))
-        }
-        onBatch(sketch.size)
+          .foreach(graft.functions.expressions.BottomKDistinctAgg.add(sketch, _, k))
+        sketch
       },
-      checkpoint)
-    sketch
-  }
-
-  private def kmvEncode(s: scala.collection.mutable.TreeSet[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 * s.size)
-    s.foreach(bb.putLong)
-    bb.array()
-  }
-
-  private def kmvDecode(bytes: Array[Byte]): scala.collection.mutable.TreeSet[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val s = scala.collection.mutable.TreeSet.empty[Long]
-    while (bb.hasRemaining) s.add(bb.getLong)
-    s
-  }
+      sketch => onBatch(sketch.size))
 
   /** KMV corpus-overlap estimation — union size, Jaccard and
     * intersection size of two corpora's token-type SETS from two bounded
@@ -525,33 +431,25 @@ object CorpusStats {
       checkpoint: Option[String],
       stateDir: Option[String])(
       implicit spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import graft.streaming.DriverFold
-    val resumed = stateDir.flatMap(DriverFold.loadLatest)
-    val sketches = resumed.map(r => decodeKeyedKmv(r._2))
-      .getOrElse(scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.TreeSet[Long]])
-    var lastBatch = resumed.map(_._1).getOrElse(-1L)
-    DriverFold.run(
-      stream.select(col(keyCol).cast("string").as("k"),
-        explode(tokens(col(textCol))).as("token")),
-      (batch, batchId) => {
-        if (batchId > lastBatch) {
-          batch.groupBy("k")
-            .agg(graft.functions.expressions.BottomKDistinctAgg
-              .of(hash60(col("token")), k).as("sk"))
-            .collect().foreach { r =>
-              val s = sketches.getOrElseUpdate(r.getString(0),
-                scala.collection.mutable.TreeSet.empty[Long])
-              r.getSeq[Long](1).foreach(
-                graft.functions.expressions.BottomKDistinctAgg.add(s, _, k))
-            }
-          lastBatch = batchId
-          stateDir.foreach(d =>
-            DriverFold.save(d, batchId, encodeKeyedKmv(sketches)))
-        }
-        onBatch(sketches.size)
+    val sketches = graft.streaming.DriverFold.fold(
+        stream.select(col(keyCol).cast("string").as("k"),
+          explode(tokens(col(textCol))).as("token")),
+        scala.collection.mutable.HashMap
+          .empty[String, scala.collection.mutable.TreeSet[Long]],
+        checkpoint, stateDir)(
+      (sketches, batch) => {
+        batch.groupBy("k")
+          .agg(graft.functions.expressions.BottomKDistinctAgg
+            .of(hash60(col("token")), k).as("sk"))
+          .collect().foreach { r =>
+            val s = sketches.getOrElseUpdate(r.getString(0),
+              scala.collection.mutable.TreeSet.empty[Long])
+            r.getSeq[Long](1).foreach(
+              graft.functions.expressions.BottomKDistinctAgg.add(s, _, k))
+          }
+        sketches
       },
-      checkpoint)
+      sketches => onBatch(sketches.size))
     import spark.implicits._
     sketches.toSeq.map { case (key, s) => (key, s.toSeq) }
       .toDF(keyCol, "sk")
@@ -581,41 +479,6 @@ object CorpusStats {
     matrixFromSketches(
       keyedKmvFold(stream, keyCol, textCol, k, onBatch, checkpoint, stateDir),
       keyCol, k)
-
-  private def encodeKeyedKmv(
-      m: scala.collection.mutable.HashMap[String, scala.collection.mutable.TreeSet[Long]])
-      : Array[Byte] = {
-    val items = m.toArray.map { case (k, s) =>
-      (k.getBytes(java.nio.charset.StandardCharsets.UTF_8), s.toArray)
-    }
-    val bb = java.nio.ByteBuffer.allocate(
-      4 + items.map(i => 8 + i._1.length + 8 * i._2.length).sum)
-    bb.putInt(items.length)
-    items.foreach { case (kb, arr) =>
-      bb.putInt(kb.length); bb.put(kb)
-      bb.putInt(arr.length); arr.foreach(bb.putLong)
-    }
-    bb.array()
-  }
-
-  private def decodeKeyedKmv(bytes: Array[Byte])
-      : scala.collection.mutable.HashMap[String, scala.collection.mutable.TreeSet[Long]] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val m = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.TreeSet[Long]]
-    var i = 0
-    while (i < n) {
-      val kb = new Array[Byte](bb.getInt)
-      bb.get(kb)
-      val s = scala.collection.mutable.TreeSet.empty[Long]
-      var j = bb.getInt
-      while (j > 0) { s.add(bb.getLong); j -= 1 }
-      m.put(new String(kb, java.nio.charset.StandardCharsets.UTF_8), s)
-      i += 1
-    }
-    m
-  }
 
   /** [[corpusOverlapKmv]] AT INGESTION — the overlap monitor a pipeline
     * runs while a new crawl streams in ("how much of this is already in

@@ -10,21 +10,18 @@ class PlanQualitySpec extends AnyFunSuite
     with org.scalatest.BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
 
-  // The degenerate-input scan fan-out (Tables.scanParallel /
-  // StreamSources.fanOut, r16) adds ONE documented round-robin exchange
-  // when a LOCAL single-split fixture is scanned; it is a no-op on any
-  // input with enough splits (i.e. at scale). The assertions in this
-  // spec pin the shuffles the OPERATORS add — the 100 TB design
-  // properties — so the guard is disabled for the whole suite (suites
-  // run sequentially in the forked test JVM) and pinned by its own
-  // dedicated test below.
+  // The degenerate-input scan fan-out (Tables.scanParallel, r16) adds
+  // ONE documented round-robin exchange when a LOCAL single-split
+  // fixture is scanned; it is a no-op on any input with enough splits
+  // (i.e. at scale). The assertions in this spec pin the shuffles the
+  // OPERATORS add — the 100 TB design properties — so the guard is
+  // disabled for the whole suite (suites run sequentially in the forked
+  // test JVM) and pinned by its own dedicated test below.
   override def beforeAll(): Unit = {
     spark.conf.set("spark.graft.scan.minPartitions", "0")
-    spark.conf.set("spark.graft.stream.scanMinPartitions", "0")
   }
   override def afterAll(): Unit = {
     spark.conf.unset("spark.graft.scan.minPartitions")
-    spark.conf.unset("spark.graft.stream.scanMinPartitions")
   }
 
   test("single-split scan guard: fans out when degenerate, absent when disabled") {

@@ -13,6 +13,26 @@ import graft.text.CorpusStats
 class ProfilingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** Crash an ingestion fold in the nastiest window (its second state
+    * commit written, that batch's offset NOT committed), then resume it
+    * from the same checkpoint and state. `run` gets the `onBatch` tick,
+    * the checkpoint and the state dir; returns what the resumed run
+    * returns, which must equal the uncrashed result. */
+  private def crashThenResume[T](root: String)(
+      run: (() => Unit, Option[String], Option[String]) => T): T = {
+    var calls = 0
+    val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      run(() => {
+          calls += 1
+          if (calls == 2) throw new RuntimeException("injected crash after fold")
+        },
+        Some(s"$root/ckpt"), Some(s"$root/state"))
+    }
+    assert(crashed.getMessage.contains("injected crash") ||
+      crashed.getCause.getMessage.contains("injected crash"))
+    run(() => (), Some(s"$root/ckpt"), Some(s"$root/state"))
+  }
+
   // ---------- KMV distinct counting ----------
 
   test("bottom-k-distinct sketch is the k smallest distinct values, any partitioning") {
@@ -130,21 +150,11 @@ class ProfilingSpec extends AnyFunSuite {
       val got = Mixing.bottomKSampleIngest(stream, "doc_id", 50)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq
       assert(got == want, "ingested sample must equal the batch sample")
-      var calls = 0
-      val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val resumed = crashThenResume(root) { (tick, ckpt, state) =>
         Mixing.bottomKSampleIngest(stream, "doc_id", 50,
-          onBatch = _ => {
-            calls += 1
-            if (calls == 2) throw new RuntimeException("injected crash after fold")
-            ()
-          },
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .orderBy("doc_id").collect().map(_.toSeq).toSeq
       }
-      assert(crashed.getMessage.contains("injected crash") ||
-        crashed.getCause.getMessage.contains("injected crash"))
-      val resumed = Mixing.bottomKSampleIngest(stream, "doc_id", 50,
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
       assert(resumed == want, "resumed sample must equal the batch sample")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
@@ -202,7 +212,8 @@ class ProfilingSpec extends AnyFunSuite {
   test("histogram-quantile ingestion fold: batch-split independent, crash-safe (no double counts)") {
     import spark.implicits._
     implicit val sp = spark
-    val docs = (1 to 1500).map(i => (i.toLong, "x" * (i % 400))).toDF("doc_id", "text")
+    val docs = (1 to 1500).map(i => (i.toLong, s"s${i % 3}", "x" * (i % 400)))
+      .toDF("doc_id", "source", "text")
     val root = java.nio.file.Files.createTempDirectory("graft-lq").toString
     try {
       docs.repartition(5).write.mode("overwrite").parquet(s"$root/in")
@@ -215,22 +226,22 @@ class ProfilingSpec extends AnyFunSuite {
       assert(got == want, "ingested quantiles must equal the batch profile")
       // histogram counts ADD on merge, so a replayed batch would shift
       // cum_cnt — the crash-resume equality is the double-count detector
-      var calls = 0
-      val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        Profiling.lengthQuantilesIngest(stream, "text",
-          onBatch = _ => {
-            calls += 1
-            if (calls == 2) throw new RuntimeException("injected crash after fold")
-            ()
-          },
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
+      val resumed = crashThenResume(root) { (tick, ckpt, state) =>
+        Profiling.lengthQuantilesIngest(stream, "text", onBatch = _ => tick(),
+            checkpoint = ckpt, stateDir = state)
+          .orderBy("pct").collect().map(_.toSeq).toSeq
       }
-      assert(crashed.getMessage.contains("injected crash") ||
-        crashed.getCause.getMessage.contains("injected crash"))
-      val resumed = Profiling.lengthQuantilesIngest(stream, "text",
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
-        .orderBy("pct").collect().map(_.toSeq).toSeq
       assert(resumed == want, "resumed quantiles must equal the batch profile")
+      // the grouped twin rides the keyed histogram fold
+      val wantBy = Profiling.lengthQuantilesBy(spark.read.parquet(s"$root/in"),
+          "source", "text")
+        .orderBy("source", "pct").collect().map(_.toSeq).toSeq
+      val resumedBy = crashThenResume(s"$root/by") { (tick, ckpt, state) =>
+        Profiling.lengthQuantilesByIngest(stream, "source", "text",
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .orderBy("source", "pct").collect().map(_.toSeq).toSeq
+      }
+      assert(resumedBy == wantBy, "resumed grouped quantiles must equal the batch profile")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
@@ -257,21 +268,11 @@ class ProfilingSpec extends AnyFunSuite {
         .orderBy("k", "bin").collect().map(_.toSeq).toSeq
       assert(got == want, "fold must equal the batch sums exactly")
       // sums ADD on merge — crash-resume equality detects double-adds
-      var calls = 0
-      val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val resumed = crashThenResume(root) { (tick, ckpt, state) =>
         Profiling.keyedBinSumsFold(stream,
-          onBatch = _ => {
-            calls += 1
-            if (calls == 2) throw new RuntimeException("injected crash after fold")
-            ()
-          },
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .orderBy("k", "bin").collect().map(_.toSeq).toSeq
       }
-      assert(crashed.getMessage.contains("injected crash") ||
-        crashed.getCause.getMessage.contains("injected crash"))
-      val resumed = Profiling.keyedBinSumsFold(stream, onBatch = _ => (),
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
-        .orderBy("k", "bin").collect().map(_.toSeq).toSeq
       assert(resumed == want, "resumed fold must equal the batch sums")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
@@ -445,23 +446,11 @@ class ProfilingSpec extends AnyFunSuite {
           stream, "doc_id", col("w"), 150)
         .orderBy("doc_id").collect().map(_.toSeq).toSeq
       assert(got == want, "ingested weighted sample must equal the batch draw")
-      var calls = 0
-      val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val resumed = crashThenResume(root) { (tick, ckpt, state) =>
         graft.pipeline.Mixing.weightedSampleIngest(stream, "doc_id", col("w"),
-          150,
-          onBatch = _ => {
-            calls += 1
-            if (calls == 2) throw new RuntimeException("injected crash after fold")
-            ()
-          },
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
+            150, onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .orderBy("doc_id").collect().map(_.toSeq).toSeq
       }
-      assert(crashed.getMessage.contains("injected crash") ||
-        crashed.getCause.getMessage.contains("injected crash"))
-      val resumed = graft.pipeline.Mixing.weightedSampleIngest(
-          stream, "doc_id", col("w"), 150,
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
       assert(resumed == want, "resumed weighted sample must equal the batch draw")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
@@ -538,9 +527,15 @@ class ProfilingSpec extends AnyFunSuite {
   test("PSI ingestion fold equals the batch report; crash resumes exactly") {
     import spark.implicits._
     implicit val sp = spark
+    // g2's vectors sit in one quadrant: a cell-mass drift for the
+    // embedding monitor, the one fold with no other crash coverage
     val docs = (1 to 900).map { i =>
-      (i.toLong, s"g${i % 3}", "x" * (20 + (i % 7) * 30 + (i % 3) * 40))
-    }.toDF("doc_id", "grp", "text")
+      val (x, y) = (math.cos(i * 0.7), math.sin(i * 0.7))
+      (i.toLong, s"g${i % 3}", "x" * (20 + (i % 7) * 30 + (i % 3) * 40),
+        if (i % 3 == 2) Seq(math.abs(x), math.abs(y)) else Seq(x, y))
+    }.toDF("doc_id", "grp", "text", "vec")
+    val cents = Seq((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)), (2, Seq(-1.0, 0.0)),
+      (3, Seq(0.0, -1.0))).toDF("cent_id", "cv")
     val root = java.nio.file.Files.createTempDirectory("graft-psi").toString
     try {
       docs.repartition(5).write.mode("overwrite").parquet(s"$root/in")
@@ -552,22 +547,22 @@ class ProfilingSpec extends AnyFunSuite {
       val got = Profiling.lengthDriftPsiIngest(stream, batchDocs, "grp", "text")
         .orderBy("grp").collect().map(_.toSeq).toSeq
       assert(got == want, "ingested PSI must equal the batch report")
-      var calls = 0
-      val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val resumed = crashThenResume(root) { (tick, ckpt, state) =>
         Profiling.lengthDriftPsiIngest(stream, batchDocs, "grp", "text",
-          onBatch = _ => {
-            calls += 1
-            if (calls == 2) throw new RuntimeException("injected crash after fold")
-            ()
-          },
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .orderBy("grp").collect().map(_.toSeq).toSeq
       }
-      assert(crashed.getMessage.contains("injected crash") ||
-        crashed.getCause.getMessage.contains("injected crash"))
-      val resumed = Profiling.lengthDriftPsiIngest(stream, batchDocs, "grp",
-          "text", checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
-        .orderBy("grp").collect().map(_.toSeq).toSeq
       assert(resumed == want, "resumed PSI must equal the batch report")
+      val wantEmb = Profiling.embeddingDriftPsi(batchDocs, "grp", "vec", cents)
+        .orderBy("grp").collect().map(_.toSeq).toSeq
+      val resumedEmb = crashThenResume(s"$root/emb") { (tick, ckpt, state) =>
+        Profiling.embeddingDriftPsiIngest(stream, batchDocs, "grp", "vec", cents,
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .orderBy("grp").collect().map(_.toSeq).toSeq
+      }
+      assert(resumedEmb == wantEmb, "resumed embedding PSI must equal the batch report")
+      assert(wantEmb.map(_(2).asInstanceOf[Long]).max > 0L,
+        "the planted quadrant shift must score")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
@@ -614,23 +609,18 @@ class ProfilingSpec extends AnyFunSuite {
       val gotM = CorpusStats.sourceOverlapMatrixIngest(stream, "grp", "text",
         k = 64).orderBy("key_a", "key_b").collect().map(_.toSeq).toSeq
       assert(gotM == wantM, "ingested matrix must equal the batch matrix")
-      var calls = 0
-      val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val resumed = crashThenResume(root) { (tick, ckpt, state) =>
         CorpusStats.distinctKmvByIngest(stream, "grp", "text", k = 64,
-          onBatch = _ => {
-            calls += 1
-            if (calls == 2) throw new RuntimeException("injected crash after fold")
-            ()
-          },
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .orderBy("grp").collect().map(_.toSeq).toSeq
       }
-      assert(crashed.getMessage.contains("injected crash") ||
-        crashed.getCause.getMessage.contains("injected crash"))
-      val resumed = CorpusStats.distinctKmvByIngest(stream, "grp", "text",
-          k = 64, checkpoint = Some(s"$root/ckpt"),
-          stateDir = Some(s"$root/state"))
-        .orderBy("grp").collect().map(_.toSeq).toSeq
       assert(resumed == want, "resumed keyed sketches must equal the batch row")
+      val resumedM = crashThenResume(s"$root/matrix") { (tick, ckpt, state) =>
+        CorpusStats.sourceOverlapMatrixIngest(stream, "grp", "text", k = 64,
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .orderBy("key_a", "key_b").collect().map(_.toSeq).toSeq
+      }
+      assert(resumedM == wantM, "resumed matrix must equal the batch matrix")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
@@ -706,21 +696,11 @@ class ProfilingSpec extends AnyFunSuite {
       val got = CorpusStats.corpusOverlapKmvIngest(stream, bDocs, "text")
         .head().toSeq
       assert(got == want, "ingested overlap must equal the batch report")
-      var calls = 0
-      val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val resumed = crashThenResume(root) { (tick, ckpt, state) =>
         CorpusStats.corpusOverlapKmvIngest(stream, bDocs, "text",
-          onBatch = _ => {
-            calls += 1
-            if (calls == 2) throw new RuntimeException("injected crash after fold")
-            ()
-          },
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .head().toSeq
       }
-      assert(crashed.getMessage.contains("injected crash") ||
-        crashed.getCause.getMessage.contains("injected crash"))
-      val resumed = CorpusStats.corpusOverlapKmvIngest(stream, bDocs, "text",
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
-        .head().toSeq
       assert(resumed == want, "resumed overlap must equal the batch report")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
@@ -812,22 +792,12 @@ class ProfilingSpec extends AnyFunSuite {
       assert(got == want, "the multi-batch fold must equal the batch table")
       // counts ADD on merge, so a replayed batch would inflate them —
       // crash-resume equality is the double-count detector
-      var calls = 0
-      val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val resumed = crashThenResume(root) { (tick, ckpt, state) =>
         Mixing.dataBudgetIngest(stream, "source", "text",
-          onBatch = _ => {
-            calls += 1
-            if (calls == 2) throw new RuntimeException("injected crash after fold")
-            ()
-          },
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+            r.getDouble(3), r.getLong(4))).sortBy(_._1).toSeq
       }
-      assert(crashed.getMessage.contains("injected crash") ||
-        crashed.getCause.getMessage.contains("injected crash"))
-      val resumed = Mixing.dataBudgetIngest(stream, "source", "text",
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3), r.getLong(4))).sortBy(_._1).toSeq
       assert(resumed == want, "the resumed fold must not double-count")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
@@ -884,21 +854,11 @@ class ProfilingSpec extends AnyFunSuite {
       val got = Profiling.tokenDriftPsiIngest(stream, batchDocs, "grp", "text")
         .orderBy("grp").collect().map(_.toSeq).toSeq
       assert(got == want, "ingested token PSI must equal the batch report")
-      var calls = 0
-      val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      val resumed = crashThenResume(root) { (tick, ckpt, state) =>
         Profiling.tokenDriftPsiIngest(stream, batchDocs, "grp", "text",
-          onBatch = _ => {
-            calls += 1
-            if (calls == 2) throw new RuntimeException("injected crash after fold")
-            ()
-          },
-          checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
+            onBatch = _ => tick(), checkpoint = ckpt, stateDir = state)
+          .orderBy("grp").collect().map(_.toSeq).toSeq
       }
-      assert(crashed.getMessage.contains("injected crash") ||
-        crashed.getCause.getMessage.contains("injected crash"))
-      val resumed = Profiling.tokenDriftPsiIngest(stream, batchDocs, "grp",
-          "text", checkpoint = Some(s"$root/ckpt"), stateDir = Some(s"$root/state"))
-        .orderBy("grp").collect().map(_.toSeq).toSeq
       assert(resumed == want, "resumed token PSI must equal the batch report")
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
