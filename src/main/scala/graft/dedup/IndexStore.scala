@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
+import graft.pipeline.ModelStore
 
 /** Durable store for DEDUP-SIDE INDEXES — the static archive half every
   * incremental dedup twin probes: the k-token span index (span → min
@@ -15,11 +16,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * windows, retention), and every ingest deployment LOADS it instead of
   * re-scanning the archive corpus per run.
   *
-  * Everything here is a thin typed layer over ModelStore: index
-  * relations are ordinary parquet relations (a 10¹⁰-row span index loads
-  * as a distributed scan and re-enters the identical probe joins), so
-  * the only genuine codec is the Bloom filter (bit array + (n, fpp)
-  * params — Spark's sketch serializes via its own stable stream format).
+  * Index relations are ordinary ModelStore relations — callers save,
+  * ensure and load them through [[graft.pipeline.ModelStore]] directly
+  * (a 10¹⁰-row span index loads as a distributed scan and re-enters the
+  * identical probe joins). What lives here is what ModelStore does not
+  * know: the Bloom codec (bit array + (n, fpp) params — Spark's sketch
+  * serializes via its own stable stream format) and the span index's
+  * append algorithm.
   *
   * MAINTENANCE is where the index families differ:
   *  - the span index's keep-first rule (min owner per span) is an
@@ -35,36 +38,14 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object IndexStore {
 
-  /** Commit index relations as one generation; returns the gen id. */
-  def save(spark: SparkSession, root: String,
-      relations: Seq[(String, DataFrame)],
-      params: Map[String, String] = Map.empty): Long =
-    graft.pipeline.ModelStore.save(spark, root, relations, params)
-
-  /** [[save]] only if `root` holds no generation yet (the serve-path
-    * memo — see [[graft.pipeline.ModelStore.ensure]]): the nightly
-    * index build runs once per root; every later touch loads and
-    * probes. Callers key `root` by corpus identity. Not for the
-    * append flows, which control generations explicitly. */
-  def ensure(spark: SparkSession, root: String,
-      relations: => Seq[(String, DataFrame)],
-      params: => Map[String, String] = Map.empty): Long =
-    graft.pipeline.ModelStore.ensure(spark, root, relations, params)
-
   /** [[saveBloom]] only if `root` holds no generation yet; `build`
     * (filter, digest relation, n) runs only on a miss. */
   def ensureBloom(spark: SparkSession, root: String,
       build: => (BloomFilter, DataFrame, Long), fpp: Double): Long =
-    graft.pipeline.ModelStore.latestGen(spark, root).getOrElse {
+    ModelStore.latestGen(spark, root).getOrElse {
       val (bf, digests, n) = build
       saveBloom(spark, root, bf, digests, n, fpp)
     }
-
-  def load(spark: SparkSession, root: String, name: String): DataFrame =
-    graft.pipeline.ModelStore.loadRelation(spark, root, name)
-
-  def params(spark: SparkSession, root: String): Map[String, String] =
-    graft.pipeline.ModelStore.loadParams(spark, root)
 
   /** Fold a day's span increment into the committed generation: union +
     * re-min per span — the keep-first representative is a commutative
@@ -75,8 +56,8 @@ object IndexStore {
     * family's standing contract). */
   def appendSpanIndex(spark: SparkSession, root: String,
       delta: DataFrame, relName: String = "span_index"): Long =
-    save(spark, root, Seq(relName ->
-      load(spark, root, relName).unionByName(delta)
+    ModelStore.save(spark, root, Seq(relName ->
+      ModelStore.loadRelation(spark, root, relName).unionByName(delta)
         .groupBy("gram").agg(min(col("first_id")).as("first_id"))))
 
   // ---- Bloom codec: Spark's sketch has a stable stream format ----
@@ -98,13 +79,13 @@ object IndexStore {
   def saveBloom(spark: SparkSession, root: String, bf: BloomFilter,
       digests: DataFrame, n: Long, fpp: Double): Long = {
     import spark.implicits._
-    save(spark, root,
+    ModelStore.save(spark, root,
       Seq("digests" -> digests,
         "bloom" -> Seq(bloomBytes(bf)).toDF("bits").coalesce(1)),
       Map("n" -> n.toString, "fpp" -> fpp.toString))
   }
 
   def loadBloom(spark: SparkSession, root: String): BloomFilter =
-    bloomFromBytes(load(spark, root, "bloom")
+    bloomFromBytes(ModelStore.loadRelation(spark, root, "bloom")
       .head().getAs[Array[Byte]](0))
 }

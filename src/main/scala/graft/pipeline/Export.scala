@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Commit
 
 /** Training-artifact export — the last step of a curation run: write the
   * assembled examples as split/shard-partitioned parquet plus a manifest
@@ -18,29 +20,50 @@ import org.apache.spark.sql.functions._
   * counts matter more than avoiding the exchange).
   *
   * Manifest: `<root>/_graft_manifest/` — one parquet row per (split,
-  * shard): row count + exact token sum. Written AFTER the data (a
-  * manifest that exists implies its shards are complete — the
-  * two-phase-commit-lite every file-based pipeline needs), derived from
-  * the same DataFrame in the same job, and verified in spec against a
-  * re-scan of the written files.
+  * shard): row count + exact token sum, derived from the same DataFrame
+  * and verified in spec against a re-scan of the written files. The
+  * manifest is this store's commit marker: it is staged AFTER the data
+  * in `_graft_manifest_tmp` and published whole through
+  * [[graft.Commit.publishDir]], so a manifest that exists implies its
+  * shards are complete. (Spark creates a write's target directory when
+  * the job starts, so writing the manifest in place would leave an
+  * existing but incomplete manifest after a crash.)
   */
 object Export {
 
   val ManifestDir = "_graft_manifest"
 
+  private def perShard(data: DataFrame, splitCol: String, shardCol: String,
+      tokenCol: String): DataFrame =
+    data.groupBy(col(splitCol), col(shardCol))
+      .agg(count(lit(1)).as("n_rows"), sum(col(tokenCol)).as("n_tokens"))
+
+  /** Stage `manifest` at `tmp`, then publish it at `target`. */
+  private def publishManifest(manifest: DataFrame, tmp: Path, target: Path,
+      at: Commit.Point => Unit): Unit = {
+    manifest.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    at(Commit.Point.Staged)
+    Commit.publishDir(Commit.fs(manifest.sparkSession, target), tmp, target)
+  }
+
   /** Write `df` partitioned by (splitCol, shardCol) with a per-shard
     * manifest; returns the manifest as a DataFrame. `tokenCol` is the
-    * exact-summable per-row token count the manifest totals.
+    * exact-summable per-row token count the manifest totals. `at` is
+    * called at [[graft.Commit.Point.Written]] (data written, manifest not
+    * staged) and [[graft.Commit.Point.Staged]] (manifest staged, not
+    * published). A rerun overwrites the whole tree.
     */
   def writeShards(df: DataFrame, root: String, splitCol: String,
-      shardCol: String, tokenCol: String): DataFrame = {
+      shardCol: String, tokenCol: String,
+      at: Commit.Point => Unit = Commit.NoHook): DataFrame = {
     val data = graft.Caches.track(df)
     data.write.mode(SaveMode.Overwrite)
       .partitionBy(splitCol, shardCol)
       .parquet(root)
-    val manifest = data.groupBy(col(splitCol), col(shardCol))
-      .agg(count(lit(1)).as("n_rows"), sum(col(tokenCol)).as("n_tokens"))
-    manifest.write.mode(SaveMode.Overwrite).parquet(s"$root/$ManifestDir")
+    val manifest = perShard(data, splitCol, shardCol, tokenCol)
+    at(Commit.Point.Written)
+    publishManifest(manifest, new Path(s"$root/${ManifestDir}_tmp"),
+      new Path(root, ManifestDir), at)
     manifest
   }
 
@@ -64,19 +87,18 @@ object Export {
     * parquet part files get fresh UUID names per attempt, so a replay
     * would silently double the batch.
     *
-    * `beforeCommit` runs between the data write and the manifest write —
-    * the crash window the design defends; specs inject faults there.
+    * `at` sees each batch's crash points with its batch id (see
+    * [[writeShardsBatch]]).
     */
   def writeShardsIngest(stream: DataFrame, root: String, splitCol: String,
       shardCol: String, tokenCol: String, checkpoint: String,
-      beforeCommit: Long => Unit = _ => (),
-      beforeMarker: Long => Unit = _ => ()): Unit = {
+      at: (Long, Commit.Point) => Unit = (_, _) => ()): Unit = {
     val q = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         writeShardsBatch(df, root, splitCol, shardCol, tokenCol, batchId,
-          beforeCommit, beforeMarker)
+          at(batchId, _))
       }
       .start()
     q.awaitTermination()
@@ -87,38 +109,30 @@ object Export {
     * foreachBatch (different trigger, extra sinks) reuses the exact
     * commit protocol.
     *
-    * The commit marker is ATOMIC: the manifest parquet writes to a
-    * staging tree OUTSIDE the manifest directory
-    * (`_graft_manifest_tmp/batch=<b>` — a sibling inside the tmp dir
-    * would poison the manifest reader's partition inference with a
-    * conflicting partition-column name) and renames into
-    * `_graft_manifest/batch=<b>` only when complete. A marker that
-    * exists therefore implies a FULLY WRITTEN manifest — a crash DURING
-    * the manifest write leaves only the staging dir, so the replay does
-    * not mistake the batch for committed (the directory-existence check
-    * alone had that hole: Spark creates the target dir at job start).
-    * `beforeCommit` injects between data and manifest write;
-    * `beforeMarker` between manifest write and the rename — the two
-    * crash windows specs drive.
+    * The commit marker is ATOMIC: the manifest stages OUTSIDE the
+    * manifest directory (`_graft_manifest_tmp/batch=<b>` — a sibling
+    * inside it would poison the manifest reader's partition inference
+    * with a conflicting partition-column name) and is published to
+    * `_graft_manifest/batch=<b>` through [[graft.Commit.publishDir]]
+    * only when complete, so a crash during the manifest write leaves
+    * only the staging dir and the replay does not mistake the batch for
+    * committed. `at` is called at [[graft.Commit.Point.Written]] (data
+    * appended, manifest not staged) and [[graft.Commit.Point.Staged]]
+    * (manifest staged, not published).
     */
   def writeShardsBatch(df: DataFrame, root: String, splitCol: String,
       shardCol: String, tokenCol: String, batchId: Long,
-      beforeCommit: Long => Unit = _ => (),
-      beforeMarker: Long => Unit = _ => ()): Unit = {
-    val spark = df.sparkSession
-    val hconf = spark.sessionState.newHadoopConf()
-    val mPath = new org.apache.hadoop.fs.Path(s"$root/$ManifestDir/batch=$batchId")
-    val tmpM = new org.apache.hadoop.fs.Path(s"$root/${ManifestDir}_tmp/batch=$batchId")
-    val fs = mPath.getFileSystem(hconf)
+      at: Commit.Point => Unit = Commit.NoHook): Unit = {
+    val mPath = new Path(s"$root/$ManifestDir/batch=$batchId")
+    val tmpM = new Path(s"$root/${ManifestDir}_tmp/batch=$batchId")
+    val fs = Commit.fs(df.sparkSession, mPath)
     if (fs.exists(mPath)) return // fully committed by a prior attempt
     // scrub the leftovers of a crashed attempt: its half-written manifest
     // temp dir plus exactly the three-level batch=<id> data leaves (the
     // two-level manifest path cannot match the glob)
     fs.delete(tmpM, true)
-    val partials = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$root/*/*/batch=$batchId"))
-    if (partials != null)
-      partials.foreach(st => fs.delete(st.getPath, true))
+    Option(fs.globStatus(new Path(s"$root/*/*/batch=$batchId"))).toSeq.flatten
+      .foreach(st => fs.delete(st.getPath, true))
     // the batch feeds the data write AND the manifest aggregation — one
     // persist, released before the next trigger
     val data = df.persist()
@@ -127,13 +141,9 @@ object Export {
         .write.mode(SaveMode.Append)
         .partitionBy(splitCol, shardCol, "batch")
         .parquet(root)
-      val manifest = data.groupBy(col(splitCol), col(shardCol))
-        .agg(count(lit(1)).as("n_rows"), sum(col(tokenCol)).as("n_tokens"))
-      beforeCommit(batchId)
-      manifest.write.mode(SaveMode.Overwrite).parquet(tmpM.toString)
-      beforeMarker(batchId)
-      fs.mkdirs(mPath.getParent) // rename needs an existing parent
-      require(fs.rename(tmpM, mPath), s"manifest commit rename failed: $mPath")
+      val manifest = perShard(data, splitCol, shardCol, tokenCol)
+      at(Commit.Point.Written)
+      publishManifest(manifest, tmpM, mPath, at)
     } finally data.unpersist(blocking = false)
   }
 
@@ -141,13 +151,13 @@ object Export {
     * COMMITTED batches appear (the manifest is the commit marker), so
     * aggregating it equals a re-scan of exactly the trustworthy data.
     */
-  def readIngestManifest(spark: org.apache.spark.sql.SparkSession,
+  def readIngestManifest(spark: SparkSession,
       root: String): DataFrame =
     spark.read.parquet(s"$root/$ManifestDir")
       .withColumn("batch", col("batch").cast("long"))
 
   /** Read a split back through the partition-pruned path. */
-  def readSplit(spark: org.apache.spark.sql.SparkSession, root: String,
+  def readSplit(spark: SparkSession, root: String,
       split: String): DataFrame = {
     // the manifest directory is not Hive-partitioned data; read the
     // partitioned tree by its root and prune on the split column
@@ -155,7 +165,7 @@ object Export {
       .parquet(root + "/split=" + split)
   }
 
-  def readManifest(spark: org.apache.spark.sql.SparkSession, root: String): DataFrame =
+  def readManifest(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(s"$root/$ManifestDir")
 
   /** COMPACTION — the maintenance pass a long-running ingest tree
@@ -183,43 +193,22 @@ object Export {
     *     abort with the original tree untouched (token sums transfer
     *     from the manifests they already describe; the staged manifest
     *     writes only AFTER the staged data, the writer's contract);
-    *  5. swap: rename root → `<root>.compact-backup`, staging → root,
-    *     delete the backup. A crash between the renames leaves a
+    *  5. swap: move root → `<root>.compact-backup`, publish staging →
+    *     root, delete the backup. A crash between the two leaves a
     *     missing root plus a complete staging or backup — step 1 rolls
     *     FORWARD when the staged manifest exists (the verified new
     *     generation wins) and BACK otherwise, so every crash lands on
     *     a complete, manifest-consistent tree.
-    *
-    * `beforeSwap` runs after verification, before the first rename;
-    * `midSwap` runs between the two renames — the crash windows specs
-    * inject into. Returns the compacted manifest.
+    * Every move and publish is [[graft.Commit]]'s. `at` is called at
+    * [[graft.Commit.Point.Staged]] (verified, before the first move) and
+    * [[graft.Commit.Point.Vacated]] (root moved aside, staging not yet
+    * published). Returns the compacted manifest.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, root: String,
+  def compact(spark: SparkSession, root: String,
       splitCol: String, shardCol: String,
-      beforeSwap: () => Unit = () => (),
-      midSwap: () => Unit = () => ()): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val hconf = spark.sessionState.newHadoopConf()
-    val rootP = new Path(root)
-    val fs = rootP.getFileSystem(hconf)
-    val staging = new Path(root + ".compact-staging")
-    val backup = new Path(root + ".compact-backup")
-    // 1. recovery from an interrupted swap: root missing means a swap
-    // was cut between its renames
-    if (!fs.exists(rootP)) {
-      val stagedManifest = new Path(s"$staging/$ManifestDir")
-      if (fs.exists(stagedManifest)) {
-        require(fs.rename(staging, rootP), s"roll-forward rename failed: $staging")
-        fs.delete(backup, true)
-      } else if (fs.exists(backup)) {
-        require(fs.rename(backup, rootP), s"roll-back rename failed: $backup")
-        fs.delete(staging, true)
-      } else {
-        throw new IllegalStateException(s"nothing to compact: $root missing")
-      }
-    }
-    fs.delete(staging, true) // a pre-swap crashed attempt is just discarded
-    fs.delete(backup, true) // a crash between promote and cleanup leaves one
+      at: Commit.Point => Unit = Commit.NoHook): DataFrame = {
+    val (fs, rootP, staging, backup) = swapLayout(spark, root)
+    recoverSwap(spark, root)
     // 2. the committed batches and their expected totals
     val manifest = readIngestManifest(spark, root)
     val expected = manifest.groupBy(col(splitCol), col(shardCol))
@@ -247,12 +236,33 @@ object Export {
       s"compaction verify failed: $mism (split, shard) groups mismatch the manifests")
     expected.write.mode(SaveMode.Overwrite)
       .parquet(s"$staging/$ManifestDir/batch=$gen")
-    beforeSwap()
+    at(Commit.Point.Staged)
     // 5. the swap
-    require(fs.rename(rootP, backup), s"backup rename failed: $root")
-    midSwap()
-    require(fs.rename(staging, rootP), s"promote rename failed: $staging")
+    Commit.move(fs, rootP, backup)
+    at(Commit.Point.Vacated)
+    Commit.publishDir(fs, staging, rootP)
     fs.delete(backup, true)
     readIngestManifest(spark, root)
+  }
+
+  /** (fs, root, staging, backup) of a compaction swap. */
+  private def swapLayout(spark: SparkSession, root: String) = {
+    val rootP = new Path(root)
+    (Commit.fs(spark, rootP), rootP, new Path(root + ".compact-staging"),
+      new Path(root + ".compact-backup"))
+  }
+
+  /** Step 1 of [[compact]]: finish or undo a swap that a crash cut
+    * between its two renames (root missing), then discard a pre-swap
+    * attempt's staging and a post-swap leftover backup. */
+  private[graft] def recoverSwap(spark: SparkSession, root: String): Unit = {
+    val (fs, rootP, staging, backup) = swapLayout(spark, root)
+    if (!fs.exists(rootP)) {
+      if (fs.exists(new Path(staging, ManifestDir))) Commit.publishDir(fs, staging, rootP)
+      else if (fs.exists(backup)) Commit.move(fs, backup, rootP)
+      else throw new IllegalStateException(s"nothing to compact: $root missing")
+    }
+    fs.delete(staging, true)
+    fs.delete(backup, true)
   }
 }

@@ -1,8 +1,9 @@
 package graft.pipeline
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.Commit
 
 /** Durable store for TRAINED ARTIFACTS — classifier weights, LM count
   * tables, BPE merge lists, IVF centroids, threshold/boundary scalars:
@@ -22,34 +23,31 @@ import org.apache.spark.sql.functions._
   * same codec as every other relation (a double is stored via
   * `java.lang.Double.toString`, whose parse round-trip is exact by spec).
   *
-  * Commit protocol — the Export/DriverFold doctrine applied to models:
+  * Commit protocol — the store's own policy; every step that makes bytes
+  * durable or visible is [[graft.Commit]]'s:
   *  1. everything (relations + params) writes under a PER-SAVE staging
   *     directory (`_staging-<uuid>` — two concurrent saves can never
   *     touch each other's scratch);
   *  2. the generation id is CLAIMED by atomically creating
   *     `.gen-<k>.claim` with overwrite=false (create-fails-if-exists is
-  *     atomic on HDFS-semantics filesystems — `rename` is NOT a usable
-  *     CAS here: renaming onto an existing directory moves the source
-  *     INSIDE it on both HDFS and local fs); a saver that loses the
-  *     claim re-scans, bumps k and retries, so concurrent savers
-  *     serialize into distinct generations (r12 advice). Claims persist
-  *     until their generation prunes — deleting one early would let a
-  *     racer with a stale scan re-claim a committed id. Then ONE atomic
-  *     rename promotes staging to `gen=<k>` (a generation directory
-  *     that exists is complete by construction);
-  *  3. the LATEST pointer updates by tmp-write → delete → rename —
-  *     single-file renames are atomic on HDFS-semantics filesystems.
-  *     (Two savers flipping the pointer concurrently settle on whichever
-  *     rename lands last — both targets are complete generations.)
-  * Crash windows: during staging → LATEST untouched, readers serve the
-  * previous generation, the orphan scrubs once idle past
-  * [[StagingTtlMs]] (age-gated so an ACTIVE concurrent save's staging
-  * survives); between gen rename and pointer → same (the
-  * complete-but-unpointed generation is simply superseded); between
-  * pointer delete and rename → the tmp pointer is complete (it is
-  * written BEFORE the delete), so [[latestGen]] rolls forward by reading
-  * it. Every window lands on a loadable store (spec-driven in
-  * ModelStoreSpec).
+  *     atomic on HDFS-semantics filesystems, where a directory rename is
+  *     not a usable CAS); a saver that loses the claim re-scans, bumps k
+  *     and retries, so concurrent savers serialize into distinct
+  *     generations. Claims persist until their generation prunes —
+  *     deleting one early would let a racer with a stale scan re-claim a
+  *     committed id. Then [[graft.Commit.publishDir]] promotes staging
+  *     to `gen=<k>` (a generation directory that exists is complete);
+  *  3. the LATEST pointer is one [[graft.Commit.writeFile]]. (Two savers
+  *     flipping the pointer concurrently settle on whichever rename lands
+  *     last — both targets are complete generations.)
+  * Crash windows: at [[graft.Commit.Point.Staged]] LATEST is untouched,
+  * readers serve the previous generation, and the orphan scrubs once
+  * idle past [[StagingTtlMs]] (age-gated so an ACTIVE concurrent save's
+  * staging survives); at [[graft.Commit.Point.Published]] the same (the
+  * complete-but-unpointed generation is simply superseded); inside the
+  * pointer write, [[latestGen]] reads the old pointer or rolls forward
+  * from the complete tmp. Every window lands on a loadable store
+  * (ModelStoreSpec, CommitSpec).
   *
   * Readers pin a generation: [[latestGen]] once, then load every
   * relation from that generation — a concurrent save can commit a new
@@ -78,57 +76,22 @@ object ModelStore {
   // through a fallback path (and WARN-noisy)
   val ParamsRel = "meta_params"
 
-  private def fsFor(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
   /** The generation-id claim marker — see the commit protocol above. */
   private def claimPath(root: Path, gen: Long): Path =
     new Path(root, s".gen-$gen.claim")
 
-  /** Committed generation ids under `root`, newest first (directory
-    * scan — includes committed-but-unpointed generations, which is what
-    * the next-gen allocator needs; readers use [[latestGen]]). */
-  private def genDirs(fs: FileSystem, root: Path): Seq[Long] = {
-    val st = fs.globStatus(new Path(root, "gen=*"))
-    if (st == null) Seq.empty
-    else st.toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      scala.util.Try(n.stripPrefix("gen=").toLong).toOption
-    }.sorted.reverse
-  }
+  /** The next free generation id: one past every committed directory
+    * (pointed or not). */
+  private def nextGen(fs: FileSystem, root: Path): Long =
+    Commit.numbered(fs, root, "gen=").lastOption.fold(0L)(_ + 1L)
 
-  /** The generation the LATEST pointer commits — rolling forward from
-    * the pointer's own crash window (a complete tmp pointer with the
-    * target missing means the delete happened but not the rename). */
+  /** The generation the LATEST pointer commits. */
   def latestGen(spark: SparkSession, root: String): Option[Long] = {
-    val rootP = new Path(root)
-    val fs = fsFor(spark, rootP)
-    val latest = new Path(rootP, LatestFile)
-    val tmp = new Path(rootP, s".$LatestFile.tmp")
-    def readLong(p: Path): Option[Long] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](256)
-          var n = in.read(chunk)
-          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          val s = new String(buf.toByteArray,
-            java.nio.charset.StandardCharsets.UTF_8).trim
-          scala.util.Try(s.toLong).toOption
-        } finally in.close()
-      }
-    readLong(latest).orElse(readLong(tmp))
+    val latest = new Path(root, LatestFile)
+    Commit.readFile(Commit.fs(spark, latest), latest)
+      .flatMap(b => new String(b, UTF_8).trim.toLongOption)
   }
 
-  /** Save one model version: all relations + params commit as one new
-    * generation, the pointer flips atomically, generations beyond `keep`
-    * prune. Returns the committed generation id. `beforeCommit` runs
-    * after staging is fully written, before the generation rename;
-    * `beforePointer` between the rename and the pointer flip — the crash
-    * windows specs inject into.
-    */
   /** [[save]] only if `root` has NO committed generation yet; otherwise
     * return the existing one untouched. This is the serve-path memo for
     * rows whose store content is a pure function of the root's identity
@@ -144,28 +107,31 @@ object ModelStore {
       params: => Map[String, String] = Map.empty): Long =
     latestGen(spark, root).getOrElse(save(spark, root, relations, params))
 
+  /** Save one model version: all relations + params commit as one new
+    * generation, the pointer flips atomically, generations beyond `keep`
+    * prune. Returns the committed generation id. `at` is called at
+    * [[graft.Commit.Point.Staged]] (staging fully written, before the
+    * claim) and [[graft.Commit.Point.Published]] (between the generation
+    * rename and the pointer write).
+    */
   def save(spark: SparkSession, root: String,
       relations: Seq[(String, DataFrame)],
       params: Map[String, String] = Map.empty,
       keep: Int = 2,
-      beforeCommit: Long => Unit = _ => (),
-      beforePointer: Long => Unit = _ => (),
+      at: Commit.Point => Unit = Commit.NoHook,
       stagingTtlMs: Long = StagingTtlMs): Long = {
     require(keep >= 1, s"must retain at least one generation: $keep")
     require(!relations.exists(_._1 == ParamsRel),
       s"$ParamsRel is the reserved params relation name")
     val rootP = new Path(root)
-    val fs = fsFor(spark, rootP)
+    val fs = Commit.fs(spark, rootP)
     fs.mkdirs(rootP)
     // scrub ORPHANED staging trees (crashed saves) — age-gated, so a
     // concurrent save's live staging is never touched
-    val stale = fs.globStatus(new Path(rootP, s"$StagingPrefix-*"))
-    if (stale != null) {
-      val now = System.currentTimeMillis()
-      stale.foreach { s =>
-        if (now - s.getModificationTime > stagingTtlMs) fs.delete(s.getPath, true)
-      }
-    }
+    val now = System.currentTimeMillis()
+    Option(fs.globStatus(new Path(rootP, s"$StagingPrefix-*"))).toSeq.flatten
+      .filter(now - _.getModificationTime > stagingTtlMs)
+      .foreach(s => fs.delete(s.getPath, true))
     val staging = new Path(rootP,
       s"$StagingPrefix-${java.util.UUID.randomUUID().toString}")
     relations.foreach { case (name, df) =>
@@ -176,55 +142,31 @@ object ModelStore {
     params.toSeq.sortBy(_._1).toDF("k", "v")
       .coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(new Path(staging, ParamsRel).toString)
-    var gen = genDirs(fs, rootP).headOption.map(_ + 1L).getOrElse(0L)
-    beforeCommit(gen)
     // generation CAS: atomically claim the id (create-fails-if-exists);
     // a lost claim → re-scan, bump, retry into the next free slot
-    var attempts = 0
-    var claimed = false
-    while (!claimed) {
-      claimed =
-        try { fs.create(claimPath(rootP, gen), false).close(); true }
-        catch { case _: java.io.IOException => false }
-      if (!claimed) {
-        attempts += 1
-        if (attempts >= 64) {
+    def claim(g: Long, attempt: Int): Long =
+      try { fs.create(claimPath(rootP, g), false).close(); g }
+      catch {
+        case _: java.io.IOException if attempt < 64 =>
+          claim(math.max(g + 1L, nextGen(fs, rootP)), attempt + 1)
+        case e: java.io.IOException =>
           fs.delete(staging, true)
           throw new IllegalStateException(
-            s"generation claim failed after $attempts races under $root")
-        }
-        val rescanned = genDirs(fs, rootP).headOption.map(_ + 1L).getOrElse(0L)
-        gen = math.max(gen + 1L, rescanned)
+            s"generation claim failed after $attempt races under $root", e)
       }
-    }
-    val genP = new Path(rootP, s"gen=$gen")
-    require(fs.rename(staging, genP), s"generation commit rename failed: $genP")
-    beforePointer(gen)
-    // atomic pointer flip: tmp is complete before the old pointer goes
-    val tmp = new Path(rootP, s".$LatestFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(gen.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val latest = new Path(rootP, LatestFile)
-    fs.delete(latest, false)
-    require(fs.rename(tmp, latest), s"pointer rename failed: $latest")
+    val candidate = nextGen(fs, rootP)
+    at(Commit.Point.Staged)
+    val gen = claim(candidate, 1)
+    Commit.publishDir(fs, staging, new Path(rootP, s"gen=$gen"))
+    at(Commit.Point.Published)
+    Commit.writeFile(fs, new Path(rootP, LatestFile), gen.toString.getBytes(UTF_8))
     // retention: prune beyond `keep` generations (never the one just
-    // committed — it sorts first), each with its claim marker; claims
-    // BELOW the retained window with no surviving directory (crashed
-    // between claim and rename) scrub too
-    val retained = genDirs(fs, rootP)
-    retained.drop(keep).foreach { g =>
-      fs.delete(new Path(rootP, s"gen=$g"), true)
-      fs.delete(claimPath(rootP, g), false)
-    }
-    val floor = retained.take(keep).lastOption.getOrElse(0L)
-    val claims = fs.globStatus(new Path(rootP, ".gen-*.claim"))
-    if (claims != null) claims.foreach { c =>
-      scala.util.Try(c.getPath.getName
-          .stripPrefix(".gen-").stripSuffix(".claim").toLong)
-        .toOption.filter(_ < floor)
-        .foreach(g => fs.delete(claimPath(rootP, g), false))
-    }
+    // committed — it is the newest); claims below the retained window —
+    // pruned generations', and those of saves that crashed between claim
+    // and publish — scrub too
+    val floor = Commit.prune(fs, rootP, "gen=", "", keep).head
+    Commit.numbered(fs, rootP, ".gen-", ".claim").filter(_ < floor)
+      .foreach(g => fs.delete(claimPath(rootP, g), false))
     gen
   }
 
@@ -242,7 +184,7 @@ object ModelStore {
     * relation only when the generation has one). */
   def hasRelation(spark: SparkSession, root: String, name: String): Boolean = {
     val p = new Path(s"$root/gen=${pinnedGen(spark, root)}/$name")
-    fsFor(spark, p).exists(p)
+    Commit.fs(spark, p).exists(p)
   }
 
   /** Load the params map from the committed generation. */

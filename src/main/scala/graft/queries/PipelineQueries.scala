@@ -5923,16 +5923,16 @@ object PipelineQueries {
       (s, dir) => {
         val docs = plantRareTokens(Tables.documents(s, dir))
         val root = modelRoot("df_vocab")
-        graft.dedup.IndexStore.save(s, root, Seq("vocab" ->
+        graft.pipeline.ModelStore.save(s, root, Seq("vocab" ->
           CorpusStats.vocabulary(
             docs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text")))
-        graft.dedup.IndexStore.save(s, root, Seq("vocab" ->
+        graft.pipeline.ModelStore.save(s, root, Seq("vocab" ->
           CorpusStats.mergeVocab(
-            graft.dedup.IndexStore.load(s, root, "vocab"),
+            graft.pipeline.ModelStore.loadRelation(s, root, "vocab"),
             CorpusStats.vocabulary(
               docs.filter(pmod(col("doc_id"), lit(2)) === 1), "doc_id", "text"))))
         CorpusStats.dfScoreWith(docs, "doc_id", "text",
-          graft.dedup.IndexStore.load(s, root, "vocab")).orderBy("doc_id")
+          graft.pipeline.ModelStore.loadRelation(s, root, "vocab")).orderBy("doc_id")
       },
       Some(dfScoreOracleSql)),
 

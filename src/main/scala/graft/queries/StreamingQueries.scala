@@ -678,14 +678,14 @@ object StreamingQueries {
       (s, dir) => {
         implicit val sp = s
         val root = PipelineQueries.serveRoot("span_index", dir)
-        graft.dedup.IndexStore.ensure(s, root, Seq("span_index" ->
+        graft.pipeline.ModelStore.ensure(s, root, Seq("span_index" ->
           graft.dedup.Dedup.shingles(
             graft.Tables.documents(s, dir)
               .filter(pmod(col("doc_id"), lit(4)) === 0),
             "doc_id", "text", PipelineQueries.SpanDedupK)
             .groupBy(col("gram")).agg(min(col("doc_id")).as("first_id"))))
         val idx = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "span_index"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "span_index"))
         val spans = StreamSources.documents(s, dir)
           .select(col("doc_id"),
             explode(graft.functions.GraftFunctions.wordShingles(
@@ -719,12 +719,12 @@ object StreamingQueries {
             "doc_id", "text", PipelineQueries.SpanDedupK)
             .groupBy(col("gram")).agg(min(col("doc_id")).as("first_id"))
         val root = PipelineQueries.modelRootShared("span_index_app")
-        graft.dedup.IndexStore.save(s, root,
+        graft.pipeline.ModelStore.save(s, root,
           Seq("span_index" -> spansOf(pmod(col("doc_id"), lit(4)) === 0)))
         graft.dedup.IndexStore.appendSpanIndex(s, root,
           spansOf(pmod(col("doc_id"), lit(4)) === 2))
         val idx = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "span_index"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "span_index"))
         val spans = StreamSources.documents(s, dir)
           .select(col("doc_id"),
             explode(graft.functions.GraftFunctions.wordShingles(
@@ -803,7 +803,7 @@ object StreamingQueries {
         val trainSet = graft.Tables.embeddings(s, dir)
           .filter(pmod(col("vec_id"), lit(4)) === 0)
         val root = PipelineQueries.serveRoot("semantic_index", dir)
-        graft.dedup.IndexStore.ensure(s, root, {
+        graft.pipeline.ModelStore.ensure(s, root, {
           val cents0 = graft.similarity.Similarity.kmeansCentroidsQuantized(
             trainSet, "vec_id", "embedding", k = 16, iters = 2)
           Seq(
@@ -815,9 +815,9 @@ object StreamingQueries {
                 sqrt(graft.functions.GraftFunctions.dot(
                   col("embedding"), col("embedding"))).as("na")))
         })
-        val cents = graft.dedup.IndexStore.load(s, root, "centroids")
+        val cents = graft.pipeline.ModelStore.loadRelation(s, root, "centroids")
         val members = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "members"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "members"))
         val incoming = graft.similarity.Similarity.ivfAssignWith(
             StreamSources.embeddings(s, dir), "vec_id", "embedding", cents)
           .select(col("cell"), col("vec_id"), col("embedding").as("vb"),
@@ -863,21 +863,21 @@ object StreamingQueries {
                 col("embedding"), col("embedding"))).as("na"))
         val root = PipelineQueries.modelRootShared("semantic_index_app")
         // gen k: half the archive's members under the frozen centroids
-        graft.dedup.IndexStore.save(s, root, Seq(
+        graft.pipeline.ModelStore.save(s, root, Seq(
           "centroids" -> cents0,
           "members" -> membersOf(
             trainSet.filter(pmod(col("vec_id"), lit(8)) === 0), cents0)))
         // gen k+1: the disjoint increment assigns under the LOADED
         // centroids and appends by union
-        val centsL = graft.dedup.IndexStore.load(s, root, "centroids")
-        graft.dedup.IndexStore.save(s, root, Seq(
+        val centsL = graft.pipeline.ModelStore.loadRelation(s, root, "centroids")
+        graft.pipeline.ModelStore.save(s, root, Seq(
           "centroids" -> centsL,
-          "members" -> graft.dedup.IndexStore.load(s, root, "members")
+          "members" -> graft.pipeline.ModelStore.loadRelation(s, root, "members")
             .unionByName(membersOf(
               trainSet.filter(pmod(col("vec_id"), lit(8)) === 4), centsL))))
-        val cents = graft.dedup.IndexStore.load(s, root, "centroids")
+        val cents = graft.pipeline.ModelStore.loadRelation(s, root, "centroids")
         val members = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "members"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "members"))
         val incoming = graft.similarity.Similarity.ivfAssignWith(
             StreamSources.embeddings(s, dir), "vec_id", "embedding", cents)
           .select(col("cell"), col("vec_id"), col("embedding").as("vb"),
@@ -1097,7 +1097,7 @@ object StreamingQueries {
         val train = graft.Tables.documents(s, dir)
           .filter(graft.pipeline.Mixing.mixHash("doc_id") < lit(thr))
         val root = PipelineQueries.serveRoot("splitleak_index", dir)
-        graft.dedup.IndexStore.ensure(s, root, Seq(
+        graft.pipeline.ModelStore.ensure(s, root, Seq(
           "bands" -> graft.dedup.Dedup.lshBands(
             graft.dedup.Dedup.minhashSignatures(
               train.select(col("doc_id"),
@@ -1108,9 +1108,9 @@ object StreamingQueries {
           "verify" -> train.select(col("doc_id").as("a_id"),
             sort_array(wordShingles(col("text"), 3)).as("sh_a"))))
         val trBands = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "bands"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
         val trVerify = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "verify"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "verify"))
         val incoming = StreamSources.documents(s, dir)
           .filter(graft.pipeline.Mixing.mixHash("doc_id") >= lit(thr))
           .select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
@@ -1278,7 +1278,7 @@ object StreamingQueries {
         val training = graft.Tables.documents(s, dir)
           .filter(pmod(col("doc_id"), lit(4)) === 0)
         val root = PipelineQueries.serveRoot("minhash_index", dir)
-        graft.dedup.IndexStore.ensure(s, root, Seq(
+        graft.pipeline.ModelStore.ensure(s, root, Seq(
           "bands" -> graft.dedup.Dedup.lshBands(
             graft.dedup.Dedup.minhashSignatures(
               training.select(col("doc_id"),
@@ -1289,9 +1289,9 @@ object StreamingQueries {
           "verify" -> training.select(col("doc_id").as("a_id"),
             sort_array(wordShingles(col("text"), 3)).as("sh_a"))))
         val trBands = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "bands"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
         val trVerify = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "verify"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "verify"))
         val incoming = StreamSources.documents(s, dir)
           .select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
           .withColumn("sigs", graft.functions.expressions.MinHashSigs.of(
@@ -1330,7 +1330,7 @@ object StreamingQueries {
         // the persisted index stores 60-bit gram DIGESTS (int64) instead
         // of gram strings — fixed-width probe keys, no text in the index;
         // exactness rides the SortedJaccard verify (see the inline twin)
-        graft.dedup.IndexStore.ensure(s, root, Seq(
+        graft.pipeline.ModelStore.ensure(s, root, Seq(
           "grams" -> graft.dedup.Dedup.dfCapped(
             graft.dedup.Dedup.shingles(training, "doc_id", "text", 3)
               .select(col("doc_id").as("a_id"),
@@ -1339,9 +1339,9 @@ object StreamingQueries {
           "verify" -> training.select(col("doc_id").as("a_id"),
             sort_array(wordShingles(col("text"), 3)).as("sh_a"))))
         val trGrams = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "grams"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "grams"))
         val trVerify = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "verify"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "verify"))
         val incoming = fanOut(StreamSources.documents(s, dir))
           .select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
           .select(col("doc_id"), col("sh_b"), explode(col("sh_b")).as("gram"))
@@ -1374,7 +1374,7 @@ object StreamingQueries {
         implicit val sp = s
         import graft.functions.GraftFunctions.{hash60, tokens}
         val root = PipelineQueries.serveRoot("simhash_index", dir)
-        graft.dedup.IndexStore.ensure(s, root, Seq(
+        graft.pipeline.ModelStore.ensure(s, root, Seq(
           "bands" -> graft.dedup.Dedup.simhash(
             graft.Tables.documents(s, dir)
               .filter(pmod(col("doc_id"), lit(4)) === 0),
@@ -1384,7 +1384,7 @@ object StreamingQueries {
             .withColumn("bkey",
               expr("shiftright(sh_a, CAST(band * 15 AS INT)) & 32767"))))
         val trBanded = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "bands"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
         val incoming = StreamSources.documents(s, dir)
           .select(col("doc_id"),
             transform(tokens(col("text")), t => hash60(t)).as("hs"))
@@ -1491,11 +1491,11 @@ object StreamingQueries {
       (s, dir) => {
         implicit val sp = s
         val root = PipelineQueries.serveRoot("phash_index", dir)
-        graft.dedup.IndexStore.ensure(s, root, Seq(
+        graft.pipeline.ModelStore.ensure(s, root, Seq(
           "bands" -> phashBandFrame(s,
             graft.Tables.documents(s, dir).select("doc_id", "text"))))
         val archive = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "bands"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
         StreamRun.toBatch(phashProbe(s, dir, archive), "update",
           numPartitions = 4, requireSingleDataBatch = true)
           .orderBy("media_id")
@@ -1514,15 +1514,15 @@ object StreamingQueries {
         implicit val sp = s
         val docs = graft.Tables.documents(s, dir).select("doc_id", "text")
         val root = PipelineQueries.modelRootShared("phash_index_app")
-        graft.dedup.IndexStore.save(s, root, Seq(
+        graft.pipeline.ModelStore.save(s, root, Seq(
           "bands" -> phashBandFrame(s,
             docs.filter(pmod(col("doc_id"), lit(2)) === 0))))
-        graft.dedup.IndexStore.save(s, root, Seq(
-          "bands" -> graft.dedup.IndexStore.load(s, root, "bands")
+        graft.pipeline.ModelStore.save(s, root, Seq(
+          "bands" -> graft.pipeline.ModelStore.loadRelation(s, root, "bands")
             .unionByName(phashBandFrame(s,
               docs.filter(pmod(col("doc_id"), lit(2)) === 1)))))
         val archive = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "bands"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
         StreamRun.toBatch(phashProbe(s, dir, archive), "update",
           numPartitions = 4, requireSingleDataBatch = true)
           .orderBy("media_id")
@@ -2093,7 +2093,7 @@ object StreamingQueries {
         implicit val sp = s
         val ck = graft.pipeline.Chunking
         val root = PipelineQueries.serveRoot("cdc_digest_index", dir)
-        graft.dedup.IndexStore.ensure(s, root, Seq("reps" ->
+        graft.pipeline.ModelStore.ensure(s, root, Seq("reps" ->
           ck.chunkDigestReps(
             ck.cdcChunks(
               graft.Tables.documents(s, dir)
@@ -2103,7 +2103,7 @@ object StreamingQueries {
         val out = ck.chunkDedupAgainstReps(
           ck.cdcChunks(StreamSources.documents(s, dir), "doc_id", "text",
             mask = PipelineQueries.CdcMask),
-          graft.Caches.track(graft.dedup.IndexStore.load(s, root, "reps")),
+          graft.Caches.track(graft.pipeline.ModelStore.loadRelation(s, root, "reps")),
           "doc_id", "chunk_no", "chunk_text")
         StreamRun.toBatch(out, "append", numPartitions = 4)
           .orderBy("doc_id", "chunk_no")
@@ -3080,7 +3080,7 @@ object StreamingQueries {
             trBuild, n)
         }, 0.01)
         val tr = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "digests"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "digests"))
         val bc = s.sparkContext.broadcast(
           graft.dedup.IndexStore.loadBloom(s, root))
         val probed = StreamSources.documents(s, dir)
@@ -3124,7 +3124,7 @@ object StreamingQueries {
         val root = PipelineQueries.modelRootShared("bloom_index_app")
         graft.dedup.IndexStore.saveBloom(s, root, bf, tr, n, 0.01)
         val trL = graft.Caches.track(
-          graft.dedup.IndexStore.load(s, root, "digests"))
+          graft.pipeline.ModelStore.loadRelation(s, root, "digests"))
         val bc = s.sparkContext.broadcast(
           graft.dedup.IndexStore.loadBloom(s, root))
         val probed = StreamSources.documents(s, dir)

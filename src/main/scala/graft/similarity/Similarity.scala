@@ -996,8 +996,7 @@ object Similarity {
     * 4.21 → 2.67 s). */
   private def encodeFanOut(v: DataFrame): DataFrame = {
     val spark = v.sparkSession
-    val target = spark.conf.getOption("spark.graft.knn.encodeParts")
-      .map(_.toInt).getOrElse(math.min(16, spark.sparkContext.defaultParallelism))
+    val target = math.min(16, spark.sparkContext.defaultParallelism)
     if (target > 1 && v.rdd.getNumPartitions < target) v.repartition(target)
     else v
   }

@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.collection.mutable
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
+import graft.Commit
 
 /** DRIVER-side cross-batch fold state — the shape every
   * sketch-at-ingestion operator shares (incremental heavy hitters, KMV
@@ -22,11 +22,13 @@ import org.apache.spark.sql.streaming.Trigger
   * [[fold]] owns the whole exactly-once-on-restart protocol, so no
   * operator re-implements it: resume from the newest persisted fold,
   * skip every replayed batch id at or below it, and after merging batch
-  * b persist (b, state) via fsynced tmp + atomic rename. Either crash
-  * window is safe: before the state write, the replayed batch re-merges
-  * from the previous fold (the partial never persisted); after it, the
-  * id check skips the merge (the offset commit is the only thing the
-  * crash lost). All but the newest two files are pruned on each save.
+  * b persist (b, state) as `fold-<b>.bin` in `stateDir` (any Hadoop
+  * URI) through [[graft.Commit.writeFile]], which makes it durable and
+  * visible. Either crash window is safe: before the state write, the
+  * replayed batch re-merges from the previous fold (the partial never
+  * persisted); after it, the id check skips the merge (the offset
+  * commit is the only thing the crash lost). All but the newest two
+  * files are pruned on each save.
   *
   * State files are written by the one type-directed [[StateCodec]]: the
   * header names the state's shape and a CRC32 trails the payload, so a
@@ -114,7 +116,8 @@ object DriverFold {
       stateDir: Option[String])(merge: (S, Dataset[Row]) => S,
       onBatch: S => Unit)(
       implicit codec: StateCodec[S], spark: SparkSession): S = {
-    val resumed = stateDir.flatMap(loadLatest[S])
+    val store = stateDir.map { d => val p = new Path(d); (Commit.fs(spark, p), p) }
+    val resumed = store.flatMap { case (fs, d) => loadLatest[S](fs, d) }
     var state = resumed.fold(init)(_._2)
     var lastBatch = resumed.fold(-1L)(_._1)
     StreamRun.withCheckpoint(checkpoint, "graft_fold") { ckpt =>
@@ -128,7 +131,7 @@ object DriverFold {
           if (batchId > lastBatch) {
             state = merge(state, batch)
             lastBatch = batchId
-            stateDir.foreach(save(_, batchId, state))
+            store.foreach { case (fs, d) => save(fs, d, batchId, state) }
           }
           onBatch(state)
           ()
@@ -139,52 +142,33 @@ object DriverFold {
   }
 
   private val Magic = 0x47524644 // "GRFD"
-  private val Pat = """fold-(\d+)\.bin""".r
 
-  private def save[S](dir: String, batchId: Long, state: S)(
+  private def foldFile(dir: Path, b: Long) = new Path(dir, s"fold-$b.bin")
+
+  private def crc32(b: Array[Byte], n: Int): Long = {
+    val c = new java.util.zip.CRC32(); c.update(b, 0, n); c.getValue
+  }
+
+  private def save[S](fs: FileSystem, dir: Path, batchId: Long, state: S)(
       implicit codec: StateCodec[S]): Unit = {
     val buf = new ByteArrayOutputStream()
     val out = new DataOutputStream(buf)
     out.writeInt(Magic); out.writeUTF(codec.shape); out.writeLong(batchId)
     codec.write(out, state)
-    out.flush()
-    val body = buf.toByteArray
-    val crc = new java.util.zip.CRC32()
-    crc.update(body)
-    val bb = ByteBuffer.allocate(body.length + 8).put(body).putLong(crc.getValue)
-    bb.flip()
-    val d = Files.createDirectories(Paths.get(dir))
-    val tmp = d.resolve(s".fold-$batchId.tmp")
-    val ch = FileChannel.open(tmp, StandardOpenOption.CREATE,
-      StandardOpenOption.TRUNCATE_EXISTING, StandardOpenOption.WRITE)
-    try { while (bb.hasRemaining) ch.write(bb); ch.force(true) }
-    finally ch.close()
-    Files.move(tmp, d.resolve(s"fold-$batchId.bin"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    forceDir(d)
-    batchIds(dir).sorted.dropRight(2)
-      .foreach(b => Files.deleteIfExists(d.resolve(s"fold-$b.bin")))
+    out.writeLong(crc32(buf.toByteArray, buf.size))
+    Commit.writeFile(fs, foldFile(dir, batchId), buf.toByteArray)
+    Commit.prune(fs, dir, "fold-", ".bin", keep = 2)
   }
 
-  /** Make the rename itself durable. Best effort: not every platform
-    * can open a directory for sync. */
-  private def forceDir(d: Path): Unit =
-    try {
-      val ch = FileChannel.open(d, StandardOpenOption.READ)
-      try ch.force(true) finally ch.close()
-    } catch { case _: java.io.IOException => () }
-
-  private def loadLatest[S](dir: String)(
+  private def loadLatest[S](fs: FileSystem, dir: Path)(
       implicit codec: StateCodec[S]): Option[(Long, S)] =
-    batchIds(dir).maxOption.map { b =>
-      val f = Paths.get(dir, s"fold-$b.bin")
-      val bytes = Files.readAllBytes(f)
+    Commit.numbered(fs, dir, "fold-", ".bin").lastOption.map { b =>
+      val f = foldFile(dir, b)
       def corrupt(why: String) = new IllegalStateException(
         s"fold state $f is unreadable ($why); refusing to resume from it")
+      val bytes = Commit.readFile(fs, f).getOrElse(Array.emptyByteArray)
       if (bytes.length < 8) throw corrupt("truncated")
-      val crc = new java.util.zip.CRC32()
-      crc.update(bytes, 0, bytes.length - 8)
-      if (crc.getValue != ByteBuffer.wrap(bytes, bytes.length - 8, 8).getLong)
+      if (crc32(bytes, bytes.length - 8) != ByteBuffer.wrap(bytes, bytes.length - 8, 8).getLong)
         throw corrupt("checksum mismatch: truncated or corrupt")
       val in = new DataInputStream(
         new ByteArrayInputStream(bytes, 0, bytes.length - 8))
@@ -197,8 +181,4 @@ object DriverFold {
       if (in.available() != 0) throw corrupt("trailing bytes")
       (b, state)
     }
-
-  private def batchIds(dir: String): Seq[Long] =
-    Option(new java.io.File(dir).list()).toSeq.flatten
-      .collect { case Pat(b) => b.toLong }
 }

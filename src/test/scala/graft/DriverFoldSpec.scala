@@ -42,13 +42,16 @@ class DriverFoldSpec extends AnyFunSuite {
   /** One fold run. `merged` records the parts this run merges;
     * `crashBeforeSave` throws inside the merge of that part (before the
     * state write), `crashAfterSave` throws from `onBatch` once that part
-    * is folded (state written, offset commit not yet). */
+    * is folded (state written, offset commit not yet). `uri` names the
+    * state dir as a `file://` URI instead of a plain path. */
   private def fold(stream: DataFrame, root: Option[String],
       merged: mutable.Buffer[Long] = mutable.Buffer.empty,
-      crashBeforeSave: Long = -1L, crashAfterSave: Long = -1L): St = {
+      crashBeforeSave: Long = -1L, crashAfterSave: Long = -1L,
+      uri: Boolean = false): St = {
     implicit val sp = spark
     DriverFold.fold(stream, (0L, mutable.TreeSet.empty[Long]),
-        root.map(r => s"$r/ckpt"), root.map(r => s"$r/state"))(
+        root.map(r => s"$r/ckpt"),
+        root.map(r => s"${if (uri) "file://" else ""}$r/state"))(
       (st: St, batch) => {
         val parts = batch.select("part").distinct().collect().map(_.getLong(0))
         merged ++= parts
@@ -96,11 +99,12 @@ class DriverFoldSpec extends AnyFunSuite {
   }
 
   test("crash after the save, before the offset commit: the replayed batch is skipped") {
-    withInput { (root, stream) =>
+    // the state dir given both as a plain path and as a file:// URI
+    for (uri <- Seq(false, true)) withInput { (root, stream) =>
       val before = mutable.Buffer.empty[Long]
-      crash(fold(stream(), Some(root), before, crashAfterSave = 2L))
+      crash(fold(stream(), Some(root), before, crashAfterSave = 2L, uri = uri))
       val merged = mutable.Buffer.empty[Long]
-      assert(fold(stream(), Some(root), merged) == want)
+      assert(fold(stream(), Some(root), merged, uri = uri) == want)
       assert(before.last == 2L &&
         merged.toSet == want._2.toSet -- before && merged.distinct == merged,
         s"the replayed, already-persisted batch must skip its merge: $before / $merged")

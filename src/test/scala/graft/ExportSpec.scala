@@ -48,6 +48,28 @@ class ExportSpec extends AnyFunSuite {
     assert(manifest.keySet.map(_._1) == Set("train", "val"))
   }
 
+  test("batch writer: a crash at the manifest publish leaves no manifest; a rerun equals the uncrashed write") {
+    // Spark creates a write's target directory at job start, so a manifest
+    // written in place would exist, incomplete, after this crash
+    def readBack(root: String) = (
+      spark.read.parquet(root).orderBy("doc_id").collect().map(_.toSeq).toSeq,
+      Export.readManifest(spark, root).orderBy("split", "shard_id")
+        .collect().map(_.toSeq).toSeq)
+    val rootA = tmpDir(); val rootB = tmpDir()
+    Export.writeShards(shards, rootA, "split", "shard_id", "n_tokens")
+    intercept[RuntimeException] {
+      Export.writeShards(shards, rootB, "split", "shard_id", "n_tokens",
+        at = p => if (p == Commit.Point.Staged)
+          throw new RuntimeException("injected crash at the manifest publish"))
+    }
+    val fs = new org.apache.hadoop.fs.Path(rootB)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(rootB, Export.ManifestDir)),
+      "no manifest may be visible before its publish")
+    Export.writeShards(shards, rootB, "split", "shard_id", "n_tokens")
+    assert(readBack(rootB) == readBack(rootA), "rerun must equal the uncrashed write")
+  }
+
   test("ingest writer: crash between data and manifest replays idempotently") {
     // the assembled shards staged as FOUR files → four micro-batches
     // (maxFilesPerTrigger=1); a control run and a crash-resume run must
@@ -73,7 +95,7 @@ class ExportSpec extends AnyFunSuite {
     val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       Export.writeShardsIngest(stream, rootB, "split", "shard_id", "n_tokens",
         checkpoint = ckptB,
-        beforeCommit = id => if (id == 1 && armed) {
+        at = (id, p) => if (id == 1 && p == Commit.Point.Written && armed) {
           armed = false
           throw new RuntimeException("injected crash in the commit window")
         })
@@ -144,7 +166,7 @@ class ExportSpec extends AnyFunSuite {
     val crashed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       Export.writeShardsIngest(stream, rootB, "split", "shard_id", "n_tokens",
         checkpoint = ckptB,
-        beforeMarker = id => if (id == 1 && armed) {
+        at = (id, p) => if (id == 1 && p == Commit.Point.Staged && armed) {
           armed = false
           throw new RuntimeException("injected crash before the marker rename")
         })
@@ -223,7 +245,7 @@ class ExportSpec extends AnyFunSuite {
     // crash BEFORE the swap: the original tree is untouched
     intercept[RuntimeException] {
       Export.compact(spark, root, "split", "shard_id",
-        beforeSwap = () => throw new RuntimeException("injected pre-swap crash"))
+        at = p => if (p == Commit.Point.Staged) throw new RuntimeException("injected pre-swap crash"))
     }
     assert(readData(root) == before, "pre-swap crash must leave root untouched")
     assert(manifestAgg(root) == beforeManifest)
@@ -232,7 +254,7 @@ class ExportSpec extends AnyFunSuite {
     // compact rolls the verified staging FORWARD and completes
     intercept[RuntimeException] {
       Export.compact(spark, root, "split", "shard_id",
-        midSwap = () => throw new RuntimeException("injected mid-swap crash"))
+        at = p => if (p == Commit.Point.Vacated) throw new RuntimeException("injected mid-swap crash"))
     }
     Export.compact(spark, root, "split", "shard_id")
     assert(readData(root) == before, "rolled-forward tree must hold the data")

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.dedup.IndexStore
+import graft.pipeline.ModelStore
 
 /** Dedup-index persistence: Bloom bit-exact round trip, and span-index
   * APPEND ≡ rebuild-from-scratch (the keep-first monoid argument).
@@ -29,9 +30,9 @@ class IndexStoreSpec extends AnyFunSuite {
       assert(loaded.mightContainLong(h) == bf.mightContainLong(h),
         s"probe $p diverged after the round trip")
     }
-    assert(IndexStore.params(spark, root) ==
+    assert(ModelStore.loadParams(spark, root) ==
       Map("n" -> items.size.toString, "fpp" -> "0.01"))
-    assert(IndexStore.load(spark, root, "digests").count() == items.size.toLong)
+    assert(ModelStore.loadRelation(spark, root, "digests").count() == items.size.toLong)
   }
 
   test("Bloom OR-merge at equal params ≡ a single build over the union") {
@@ -60,9 +61,9 @@ class IndexStoreSpec extends AnyFunSuite {
     val base = Seq(("a b c", 8L), ("c d e", 4L), ("x y z", 12L))
     val delta = Seq(("a b c", 2L), ("p q r", 6L))
     val root = tmpRoot()
-    IndexStore.save(spark, root, Seq("span_index" -> idxOf(base)))
+    ModelStore.save(spark, root, Seq("span_index" -> idxOf(base)))
     IndexStore.appendSpanIndex(spark, root, idxOf(delta))
-    val appended = IndexStore.load(spark, root, "span_index")
+    val appended = ModelStore.loadRelation(spark, root, "span_index")
       .orderBy("gram").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val rebuilt = idxOf(base ++ delta)
       .orderBy("gram").collect().map(r => (r.getString(0), r.getLong(1))).toSeq

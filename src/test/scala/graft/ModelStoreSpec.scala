@@ -47,7 +47,7 @@ class ModelStoreSpec extends AnyFunSuite {
     ModelStore.save(spark, root, Seq("r" -> rel), Map("v" -> "old"))
     val boom = intercept[RuntimeException] {
       ModelStore.save(spark, root, Seq("r" -> rel), Map("v" -> "new"),
-        beforeCommit = _ => throw new RuntimeException("injected staging crash"))
+        at = p => if (p == Commit.Point.Staged) throw new RuntimeException("injected staging crash"))
     }
     assert(boom.getMessage.contains("injected"))
     // the store still serves the OLD generation
@@ -78,7 +78,7 @@ class ModelStoreSpec extends AnyFunSuite {
     var bGen = -1L
     val aGen = ModelStore.save(spark, root, Seq("r" -> rel), Map("who" -> "A"),
       keep = 10,
-      beforeCommit = _ => {
+      at = p => if (p == Commit.Point.Staged) {
         bGen = ModelStore.save(spark, root, Seq("r" -> rel),
           Map("who" -> "B"), keep = 10)
       })
@@ -104,7 +104,7 @@ class ModelStoreSpec extends AnyFunSuite {
     ModelStore.save(spark, root, Seq("r" -> rel), Map("v" -> "old"))
     intercept[RuntimeException] {
       ModelStore.save(spark, root, Seq("r" -> rel), Map("v" -> "lost"),
-        beforePointer = _ => throw new RuntimeException("injected pointer crash"))
+        at = p => if (p == Commit.Point.Published) throw new RuntimeException("injected pointer crash"))
     }
     // gen=1 is complete on disk but UNPOINTED: readers serve gen 0
     assert(ModelStore.latestGen(spark, root).contains(0L))

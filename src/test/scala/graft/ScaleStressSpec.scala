@@ -1146,7 +1146,7 @@ class ScaleStressSpec extends AnyFunSuite {
           .groupBy(col("gram")).agg(min(col("doc_id")).as("first_id"))
       val root = java.nio.file.Files
         .createTempDirectory("graft-span-stress").toString + "/idx"
-      graft.dedup.IndexStore.save(spark, root,
+      graft.pipeline.ModelStore.save(spark, root,
         Seq("span_index" -> idxOf(docsOf(0L, n))))
       val t0 = System.nanoTime()
       graft.dedup.IndexStore.appendSpanIndex(spark, root,
@@ -1156,7 +1156,7 @@ class ScaleStressSpec extends AnyFunSuite {
       val rebuilt = idxOf(docsOf(0L, n + n / 10))
       val rebuildCnt = rebuilt.count()
       val rebuildS = (System.nanoTime() - t1) / 1e9
-      val appended = graft.dedup.IndexStore.load(spark, root, "span_index")
+      val appended = graft.pipeline.ModelStore.loadRelation(spark, root, "span_index")
       assert(appended.count() == rebuildCnt)
       // exact equality, not just counts: anti-join both directions empty
       assert(appended.join(rebuilt, Seq("gram", "first_id"), "left_anti").count() == 0L)
