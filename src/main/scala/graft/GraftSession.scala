@@ -11,6 +11,14 @@ import org.apache.spark.sql.SparkSession
   * store (the Spark-native replacement for the reference's entire
   * `wf/persistent/` RocksDB family, cf. /root/reference/wf/persistent/
   * db_handle.hpp:54) keeps streaming state off-heap and spillable.
+  *
+  * Streaming checkpoints on `file:` paths are written by
+  * [[graft.streaming.LocalCheckpointFileManager]] (java.nio only): Spark's
+  * default manager goes through Hadoop's local `FileContext`, which, without
+  * Hadoop's native library, starts a `chmod` or `readlink` process for
+  * nearly every checkpoint file, several per micro-batch. Other schemes keep
+  * Spark's default. Setting `spark.sql.streaming.checkpointFileManagerClass`
+  * after `configure` (or with `spark.conf.set`) overrides it.
   */
 object GraftSession {
 
@@ -37,6 +45,8 @@ object GraftSession {
       // yields after its µs-truncating read (`epoch_us(ts)`) — so oracle
       // comparisons are integer-exact.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = configure(

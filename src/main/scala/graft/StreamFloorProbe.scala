@@ -20,13 +20,11 @@ object StreamFloorProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val variant = args.headOption.getOrElse("agg")
     val iters = args.drop(1).headOption.map(_.toInt).getOrElse(6)
-    val b = GraftSession.configure(
+    val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]").appName("graft-floor"),
       shufflePartitions = cpus)
       .config("spark.ui.enabled", "false")
-    if (sys.env.get("FLOOR_RAWFS").contains("1"))
-      b.config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-    val spark = b.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     implicit val sp: SparkSession = spark
 
@@ -50,21 +48,21 @@ object StreamFloorProbe {
       val t0 = System.nanoTime()
       val df = floorDf()
       val t1 = System.nanoTime()
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("FLOOR_PARTS", "4"))
-      val w = df.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"/dev/shm/graft-floorprobe/$name")
-      val q = w.start()
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      val t2 = System.nanoTime()
-      q.awaitTermination()
-      val t3 = System.nanoTime()
-      spark.table(name).count()
-      val t4 = System.nanoTime()
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(s"/dev/shm/graft-floorprobe/$name"))
+      val (q, t2, t3, t4) = graft.streaming.StreamRun.withCheckpoint(None, name) { ckpt =>
+        val prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions",
+          sys.env.getOrElse("FLOOR_PARTS", "4"))
+        val q = df.writeStream.format("memory").queryName(name)
+          .outputMode("append").trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", ckpt)
+          .start()
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        val t2 = System.nanoTime()
+        q.awaitTermination()
+        val t3 = System.nanoTime()
+        spark.table(name).count()
+        (q, t2, t3, System.nanoTime())
+      }
       val t5 = System.nanoTime()
       def ms(a: Long, b: Long): Double = (b - a) / 1e6
       println(f"[$i] total ${ms(t0, t5)}%8.1f ms = build ${ms(t0, t1)}%7.1f + start ${ms(t1, t2)}%7.1f + await ${ms(t2, t3)}%7.1f + read ${ms(t3, t4)}%6.1f + rm ${ms(t4, t5)}%5.1f")

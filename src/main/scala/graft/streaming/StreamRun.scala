@@ -37,10 +37,11 @@ object StreamRun {
       implicit spark: SparkSession): DataFrame = {
     val name = s"graft_stream_${n.incrementAndGet()}"
     // Streaming state operators instantiate one state store per shuffle
-    // partition per operator; for these bounded verification runs the
-    // store-commit overhead dominates, so run the stream with a small
-    // fixed partition count (restored after). A continuous deployment
-    // sizes this to key cardinality instead.
+    // partition per operator, and every store loads, writes a delta file
+    // and commits in every micro-batch whether or not it holds any keys;
+    // these bounded verification runs hold little state, so run the
+    // stream with a small fixed partition count (restored after). A
+    // continuous deployment sizes this to key cardinality instead.
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", numPartitions.toString)
     // noDataBatch = false skips the trailing no-data micro-batch (one
@@ -116,12 +117,13 @@ object StreamRun {
 
   /** Run `body` against a checkpoint location. An `explicit` one (the
     * restart path) is used and kept. Otherwise the run is throwaway: the
-    * checkpoint (offset log + state snapshots, fsync-heavy) goes on tmpfs
-    * when writable, else under java.io.tmpdir, and is deleted afterwards
-    * — also when `body` throws, so repeated failing runs leak nothing. A
-    * durable deployment passes real storage explicitly.
+    * checkpoint (offset and commit logs plus state-store files, a few
+    * small files per micro-batch) goes on tmpfs when writable, else under
+    * java.io.tmpdir, and is deleted afterwards — also when `body` throws,
+    * so repeated failing runs leak nothing. A durable deployment passes
+    * real storage explicitly.
     */
-  private[streaming] def withCheckpoint[T](explicit: Option[String],
+  private[graft] def withCheckpoint[T](explicit: Option[String],
       name: String)(body: String => T): T = {
     val ckpt = explicit.getOrElse {
       val shm = new java.io.File("/dev/shm")

@@ -205,9 +205,11 @@ class RecoverySpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory(base, s"graft-recovery-$tag").toFile
   }
 
+  /** `managers` = the checkpoint file manager class of run 1 and of run 2
+    * (and the control run); None keeps the session's. */
   private def recoveryCase(tag: String, rocksDb: Boolean,
       frame: (SparkSession, String) => DataFrame,
-      mode: String): Unit = {
+      mode: String, managers: Option[(String, String)] = None): Unit = {
     val s = spark.newSession()
     GraftSession.adopt(s)
     s.conf.set("spark.sql.shuffle.partitions", "4")
@@ -224,13 +226,23 @@ class RecoverySpec extends AnyFunSuite {
       // so early windows fire and evict DURING run 1
       writeFile(s, dataDir, mkRows(0 until 120), stamped, clock)
       writeFile(s, dataDir, mkRows(120 until 240), stamped, clock)
+      managers.foreach { case (first, _) => s.conf.set(ManagerKey, first) }
       val out1 = runToBuffer(frame(s, dataDir.getPath), ckptInterrupted, mode)
+      val sidecars1 = offsetSidecars(ckptInterrupted)
+      managers.foreach { case (first, second) =>
+        assert((sidecars1 > 0) == (first == SparkManager), s"$tag: run 1 did not write through $first")
+        s.conf.set(ManagerKey, second)
+      }
 
       // phase B: two more files + the far-future sentinel that flushes
       // trailing state
       writeFile(s, dataDir, mkRows(240 until 360), stamped, clock)
       writeFile(s, dataDir, mkRows(360 until 480) :+ Sentinel, stamped, clock)
       val out2 = runToBuffer(frame(s, dataDir.getPath), ckptInterrupted, mode)
+      managers.foreach { case (_, second) =>
+        assert((offsetSidecars(ckptInterrupted) > sidecars1) == (second == SparkManager),
+          s"$tag: run 2 did not write through $second")
+      }
 
       // uninterrupted control: fresh checkpoint, same files, same
       // (modTime, path) order → same per-batch watermark sequence
@@ -500,6 +512,33 @@ class RecoverySpec extends AnyFunSuite {
   }
   test("ingestion scoring agg resumes cumulative state from a checkpoint (RocksDB state store)") {
     scoringRecoveryCase(rocksDb = true)
+  }
+
+  // ---- checkpoints written by one file manager resume under the other:
+  // Spark's FileContext-based manager leaves Hadoop `.<name>.crc` sidecars
+  // beside every file, LocalCheckpointFileManager writes none; either
+  // order must resume exactly-once, so existing checkpoints keep working
+  // and a deployment can drop the class again.
+
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private val SparkManager = classOf[org.apache.spark.sql.execution.streaming.checkpointing.
+    FileContextBasedCheckpointFileManager].getName
+  private val GraftManager = classOf[LocalCheckpointFileManager].getName
+
+  /** Hadoop `.crc` sidecars in the offset log, which only the checkpoint
+    * file manager writes: Spark's leaves one per entry, ours none. */
+  private def offsetSidecars(ckpt: String): Int =
+    new java.io.File(ckpt, "offsets").list()
+      .count(n => n.startsWith(".") && n.endsWith(".crc"))
+
+  for ((first, second, order) <- Seq(
+      (SparkManager, GraftManager, "Spark's manager then LocalCheckpointFileManager"),
+      (GraftManager, SparkManager, "LocalCheckpointFileManager then Spark's manager"));
+      rocksDb <- Seq(false, true)) {
+    val store = if (rocksDb) "RocksDB" else "HDFS-backed"
+    test(s"ffat-append resumes across checkpoint file managers: $order ($store state store)") {
+      recoveryCase("ffat-append", rocksDb, ffatFrame _, "append", Some((first, second)))
+    }
   }
 
   private val cases: Seq[(String, (SparkSession, String) => DataFrame, String)] = Seq(
