@@ -48,11 +48,18 @@ object GraftSession {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         classOf[graft.streaming.LocalCheckpointFileManager].getName)
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  /** The one place a Graft main builds its session: `local[cores]`,
+    * [[configure]]d with `cores` shuffle partitions, no web UI, WARN
+    * logging. */
+  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    local(cores, cores)
+
+  def local(cores: Int, shufflePartitions: Int): SparkSession = {
     val spark = configure(
       SparkSession.builder().master(s"local[$cores]").appName("graft"),
-      shufflePartitions = cores
-    ).getOrCreate()
+      shufflePartitions)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -757,11 +757,7 @@ object Dedup {
       // that's a small fraction of `ids`, so every round's joins run over
       // the pair graph, not the corpus; singletons are restored by the
       // final left join (rep = own id)
-      val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-      val tP = System.nanoTime()
       val np = p.count() // materializes the persisted pair graph once
-      if (dbg) System.err.println(
-        s"[cc] pairs materialize: ${(System.nanoTime() - tP) / 1e9}s ($np pairs)")
       // SCALE-ADAPTIVE round partitioning (guide §2.2 — size partitions to
       // the data, not the session): every round's joins/aggs run over the
       // edge-touching vertex set, a small and shrinking fraction of the
@@ -779,16 +775,12 @@ object Dedup {
       val roundParts = math.max(2L, math.min(prevParts.toLong, np / 50000L + 1L))
       spark.conf.set("spark.sql.shuffle.partitions", roundParts.toString)
       try {
-      val tInit = System.nanoTime()
       var labels = edges.select(col("a_id").as("id")).distinct()
         .select(col("id"), col("id").as("rep_id"))
         .localCheckpoint(true)
-      if (dbg) System.err.println(
-        s"[cc] init (pair pipeline + vertex set): ${(System.nanoTime() - tInit) / 1e9}s")
       var converged = false
       var iter = 0
       while (!converged && iter < maxIter) {
-        val t0 = System.nanoTime()
         val viaNeighbors = labels.join(edges, col("id") === col("a_id"), "left")
           .select(col("id"), col("rep_id"), col("b_id"))
           .join(labels.select(col("id").as("b_id"), col("rep_id").as("rep_b")), Seq("b_id"), "left")
@@ -822,8 +814,6 @@ object Dedup {
         converged = next.agg(coalesce(max("chg"), lit(0)).as("c")).first().getInt(0) == 0
         labels = next.select("id", "rep_id")
         iter += 1
-        if (dbg) System.err.println(
-          s"[cc] round $iter: ${(System.nanoTime() - t0) / 1e9}s converged=$converged")
       }
       if (!converged)
         throw new IllegalStateException(

@@ -106,9 +106,6 @@ object GraftFunctions {
     when(size(t) >= n, grams).otherwise(array().cast("array<string>"))
   }
 
-  /** Token count (whitespace segmentation). */
-  def tokenCount(text: Column): Column = size(tokens(text))
-
   /** In-order double dot product — native codegen'd Expression
     * ([[graft.functions.expressions.ArrayDotProduct]]); identical IEEE
     * fold order to DuckSql's list_reduce rendering, so bit-exact

@@ -65,13 +65,6 @@ object PortableLog {
   def seriesSql(z: String): String =
     s"131072.0e0*(($z)*(1.0e0 + ($z)*($z)/3.0e0 + (($z)*($z))*(($z)*($z))/5.0e0))"
 
-  /** One-expression DuckDB rendering (no CTE staging needed): the same
-    * dag with z's subtree textually replicated — recomputation of a
-    * deterministic subtree is value-identical. Keep `x` simple (a column
-    * reference or a cast of one) or stage it first.
-    */
-  def plogSql(x: String): String = seriesSql(zSql(sqrtNestSql(x)))
-
   // ---- portable exponential (same doctrine, inverse trick) ------------
 
   /** pexp: e^u as a fixed dag — scale u down by 2^16 (exact: division by

@@ -27,6 +27,29 @@ object JoinQueries {
 
   private val JoinBoundUs = 30L * Q.MinuteUs
 
+  // oracles the stream twins in StreamingQueries share by value
+  private[queries] val intervalJoinOracleSql: String = s"""
+        WITH e AS (SELECT event_id, user_id, event_type, ${Q.TsUsDuck} AS ts_us, value FROM events)
+        SELECT a.event_id AS a_id, b.event_id AS b_id, a.user_id AS user_id,
+               greatest(a.ts_us, b.ts_us) AS out_ts_us,
+               a.value + b.value AS pair_value
+        FROM e a JOIN e b
+          ON a.user_id = b.user_id
+         AND a.event_type = 'purchase' AND b.event_type = 'click'
+         AND b.ts_us BETWEEN a.ts_us - $JoinBoundUs AND a.ts_us + $JoinBoundUs
+        ORDER BY a_id, b_id"""
+
+  private[queries] val joinAsofOracleSql: String = s"""
+        WITH e AS (SELECT event_id, user_id, event_type, ${Q.TsUsDuck} AS ts_us, value FROM events),
+        c AS (SELECT event_id, user_id, ts_us FROM e WHERE event_type = 'click'),
+        p AS (SELECT user_id, ts_us, max(value) AS p_value FROM e
+              WHERE event_type = 'purchase' GROUP BY user_id, ts_us)
+        SELECT c.event_id, c.user_id, c.ts_us,
+               p.ts_us AS asof_ts_us, p.p_value AS asof_p_value
+        FROM c ASOF LEFT JOIN p
+          ON c.user_id = p.user_id AND c.ts_us >= p.ts_us
+        ORDER BY c.event_id"""
+
   def all: Seq[Q] = Seq(
     Q("interval_join",
       (s, dir) => {
@@ -47,16 +70,7 @@ object JoinQueries {
             (col("a_value") + col("b_value")).as("pair_value"))
           .orderBy("a_id", "b_id")
       },
-      Some(s"""
-        WITH e AS (SELECT event_id, user_id, event_type, ${Q.TsUsDuck} AS ts_us, value FROM events)
-        SELECT a.event_id AS a_id, b.event_id AS b_id, a.user_id AS user_id,
-               greatest(a.ts_us, b.ts_us) AS out_ts_us,
-               a.value + b.value AS pair_value
-        FROM e a JOIN e b
-          ON a.user_id = b.user_id
-         AND a.event_type = 'purchase' AND b.event_type = 'click'
-         AND b.ts_us BETWEEN a.ts_us - $JoinBoundUs AND a.ts_us + $JoinBoundUs
-        ORDER BY a_id, b_id""")),
+      Some(intervalJoinOracleSql)),
 
     // asymmetric/negative bounds (the reference allows both bounds negative
     // — wf/interval_join.hpp:279-295; join_tests matrix in FIXTURES.md §4):
@@ -105,16 +119,7 @@ object JoinQueries {
         graft.operators.AsofJoin.lastAtOrBefore(clicks, purchases, "user_id", "ts_us")
           .orderBy("event_id")
       },
-      Some(s"""
-        WITH e AS (SELECT event_id, user_id, event_type, ${Q.TsUsDuck} AS ts_us, value FROM events),
-        c AS (SELECT event_id, user_id, ts_us FROM e WHERE event_type = 'click'),
-        p AS (SELECT user_id, ts_us, max(value) AS p_value FROM e
-              WHERE event_type = 'purchase' GROUP BY user_id, ts_us)
-        SELECT c.event_id, c.user_id, c.ts_us,
-               p.ts_us AS asof_ts_us, p.p_value AS asof_p_value
-        FROM c ASOF LEFT JOIN p
-          ON c.user_id = p.user_id AND c.ts_us >= p.ts_us
-        ORDER BY c.event_id""")),
+      Some(joinAsofOracleSql)),
 
     // generalized as-of: composite key (user_id, day) + max-lookback
     // tolerance — the feature-store ask ("latest snapshot at example

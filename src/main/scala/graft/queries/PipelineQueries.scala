@@ -2916,8 +2916,6 @@ object PipelineQueries {
     s"$head,\n$rounds"
   }
 
-  private[queries] val classifierTrainCtes: String = classifierTrainCtesFor("TRUE")
-
   /** Classifier core ending at `sF` (doc_id, s — the final margin over
     * the trained weights, for EVERY doc regardless of the training
     * restriction); assumes CTEs `m` and `tk` are defined.

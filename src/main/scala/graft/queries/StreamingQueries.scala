@@ -158,7 +158,7 @@ object StreamingQueries {
         StreamRun.toBatch(agg, "complete").orderBy("event_type", "win_start_us")
       },
       // identical semantics to the batch twin → same oracle
-      WindowQueries.all.find(_.name == "win_tb_tumbling").get.oracle),
+      Some(WindowQueries.winTbTumblingOracleSql)),
 
     // The bounded-state plan a CONTINUOUS deployment runs: withWatermark +
     // append output — each window is emitted exactly once, when the
@@ -182,7 +182,7 @@ object StreamingQueries {
         StreamRun.toBatch(tumblingAppendStream(s, dir), "append", numPartitions = 4)
           .orderBy("event_type", "win_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_tumbling").get.oracle),
+      Some(WindowQueries.winTbTumblingOracleSql)),
 
     // Bounded-state sliding windows: window(len 1h, slide 15m) under
     // withWatermark + append — Spark's sliding window() evicts natively
@@ -195,7 +195,7 @@ object StreamingQueries {
         StreamRun.toBatch(slidingAppendStream(s, dir), "append", numPartitions = 4)
           .orderBy("event_type", "win_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_sliding").get.oracle),
+      Some(WindowQueries.winTbSlidingOracleSql)),
 
     // Bounded-state hopping with gaps (len 10m < slide 30m): an event is
     // in a window iff ts mod slide < len, and then in exactly ONE window
@@ -210,7 +210,7 @@ object StreamingQueries {
         StreamRun.toBatch(hoppingAppendStream(s, dir), "append", numPartitions = 4)
           .orderBy("event_type", "win_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_hopping").get.oracle),
+      Some(WindowQueries.winTbHoppingOracleSql)),
 
     Q("stream_reduce_rolling",
       (s, dir) => {
@@ -219,7 +219,7 @@ object StreamingQueries {
           StatefulOps.toEvRows(StreamSources.events(s, dir)))
         StreamRun.toBatch(out.toDF(), "update").orderBy("event_id")
       },
-      WindowQueries.all.find(_.name == "reduce_rolling").get.oracle),
+      Some(WindowQueries.reduceRollingOracleSql)),
 
     // the TTL flavor of the rolling reduce (watermark-based idle-key
     // eviction, StatefulOps.rollingReduceTtl) through the full gate: the
@@ -249,7 +249,7 @@ object StreamingQueries {
           requireSingleDataBatch = true)
           .orderBy("event_id")
       },
-      WindowQueries.all.find(_.name == "reduce_rolling").get.oracle),
+      Some(WindowQueries.reduceRollingOracleSql)),
 
     // DETERMINISTIC execution mode, driver-visible: the reference's
     // ordering collector sorts each batch by (ts, id) before the operator
@@ -277,7 +277,7 @@ object StreamingQueries {
           }
         StreamRun.toBatch(out.toDF(), "update").orderBy("event_id")
       },
-      WindowQueries.all.find(_.name == "reduce_rolling").get.oracle),
+      Some(WindowQueries.reduceRollingOracleSql)),
 
     Q("stream_win_cb_tumbling",
       (s, dir) => {
@@ -286,7 +286,7 @@ object StreamingQueries {
           StatefulOps.toEvRows(StreamSources.events(s, dir)), len = 100L)
         StreamRun.toBatch(out.toDF(), "update").orderBy("user_id", "wid")
       },
-      WindowQueries.all.find(_.name == "win_cb_tumbling").get.oracle),
+      Some(WindowQueries.winCbTumblingOracleSql)),
 
     Q("stream_win_tb_sliding",
       (s, dir) => {
@@ -299,7 +299,7 @@ object StreamingQueries {
             col("cnt"), col("sum_value"))
         StreamRun.toBatch(agg, "complete").orderBy("event_type", "win_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_sliding").get.oracle),
+      Some(WindowQueries.winTbSlidingOracleSql)),
 
     Q("stream_win_cb_sliding",
       (s, dir) => {
@@ -308,7 +308,7 @@ object StreamingQueries {
           StatefulOps.toEvRows(StreamSources.events(s, dir)), len = 100L, slide = 50L)
         StreamRun.toBatch(out.toDF(), "update").orderBy("user_id", "wid")
       },
-      WindowQueries.all.find(_.name == "win_cb_sliding").get.oracle),
+      Some(WindowQueries.winCbSlidingOracleSql)),
 
     // CB hopping with gaps (len 20 < slide 50): countSlidingWindows already
     // implements the general [wmin, wmax] membership, which is empty for
@@ -320,7 +320,7 @@ object StreamingQueries {
           StatefulOps.toEvRows(StreamSources.events(s, dir)), len = 20L, slide = 50L)
         StreamRun.toBatch(out.toDF(), "update").orderBy("user_id", "wid")
       },
-      WindowQueries.all.find(_.name == "win_cb_hopping").get.oracle),
+      Some(WindowQueries.winCbHoppingOracleSql)),
 
     // TB hopping with gaps (len 10m < slide 30m): Spark's window() requires
     // slide ≤ len, so the hop membership is the same explode rendering as
@@ -341,7 +341,7 @@ object StreamingQueries {
             expr("CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE)").as("sum_value"))
         StreamRun.toBatch(agg, "complete").orderBy("event_type", "win_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_hopping").get.oracle),
+      Some(WindowQueries.winTbHoppingOracleSql)),
 
     // session windows through the streaming engine: Spark's native
     // session_window state merging, complete mode (EOS flush emits every
@@ -357,7 +357,7 @@ object StreamingQueries {
             col("cnt"), col("sum_value"))
         StreamRun.toBatch(agg, "complete").orderBy("user_id", "session_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_session").get.oracle),
+      Some(WindowQueries.winTbSessionOracleSql)),
 
     // session windows in the bounded-state continuous plan: Spark's
     // session_window state-merging under withWatermark + append output —
@@ -372,7 +372,7 @@ object StreamingQueries {
         StreamRun.toBatch(sessionAppendStream(s, dir), "append", numPartitions = 4)
           .orderBy("user_id", "session_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_session").get.oracle),
+      Some(WindowQueries.winTbSessionOracleSql)),
 
     // FlatFAT sliding windows through the STREAMING engine: the same
     // lift/comb tree as the batch win_tb_sliding_ffat aggregate, run in
@@ -399,7 +399,7 @@ object StreamingQueries {
           lenUs = Q.HourUs, slideUs = 15L * Q.MinuteUs)
         StreamRun.toBatch(out.toDF(), "update").orderBy("event_type", "win_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_sliding_ffat").get.oracle),
+      Some(WindowQueries.winTbSlidingFfatOracleSql)),
 
     // the emit-once (append) twin of stream_win_tb_sliding_ffat: same
     // per-pane partial state, each window emitted exactly once when the
@@ -415,7 +415,7 @@ object StreamingQueries {
         StreamRun.toBatch(ffatAppendStream(s, dir), "append", numPartitions = 4)
           .orderBy("event_type", "win_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_sliding_ffat").get.oracle),
+      Some(WindowQueries.winTbSlidingFfatOracleSql)),
 
     // the SALTED (sub-key DP-mode) flavor of the ffat append twin at
     // S = 4, through the full gate: rows group by (key, hash mod 4), each
@@ -448,7 +448,7 @@ object StreamingQueries {
             .orderBy("event_type", "win_start_us")
         } finally s.conf.set(conf, prev)
       },
-      WindowQueries.all.find(_.name == "win_tb_sliding_ffat").get.oracle),
+      Some(WindowQueries.winTbSlidingFfatOracleSql)),
 
     // "clean as you ingest": the cleaning pipeline through the STREAMING
     // engine — PII redaction + quality/repetition thresholds are per-row
@@ -3221,7 +3221,7 @@ object StreamingQueries {
             expr("buf[CAST(cnt AS INT) - 1] - buf[0]").as("range_cents"))
         StreamRun.toBatch(agg, "complete").orderBy("user_id", "win_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_noninc").get.oracle),
+      Some(WindowQueries.winTbNonincOracleSql)),
 
     // the BOUNDED-state plan for the Iterable flavor — per-(key, window)
     // buffer in flatMapGroupsWithState, emitted exactly once when the
@@ -3237,7 +3237,7 @@ object StreamingQueries {
         StreamRun.toBatch(nonincAppendStream(s, dir), "append", numPartitions = 4)
           .orderBy("user_id", "win_start_us")
       },
-      WindowQueries.all.find(_.name == "win_tb_noninc").get.oracle),
+      Some(WindowQueries.winTbNonincOracleSql)),
 
     // Kafka option-map semantics EXECUTED against the in-repo fake
     // broker (r13 judge #6; FakeKafkaSpec drives the rebalance/
@@ -3492,7 +3492,7 @@ object StreamingQueries {
         StreamRun.toBatch(joinAsofStream(s, dir), "append",
           numPartitions = 4).orderBy("event_id")
       },
-      JoinQueries.all.find(_.name == "join_asof").get.oracle),
+      Some(JoinQueries.joinAsofOracleSql)),
 
     // DP-mode (intra-key parallel) interval join: the reference slices a
     // hot key's archive across replicas (wf/interval_join.hpp:314-322);
@@ -3517,7 +3517,7 @@ object StreamingQueries {
           StatefulOps.intervalJoinBucketed(tagged, bound, bucketUs = bound).toDF(),
           "append", numPartitions = 4).orderBy("a_id", "b_id")
       },
-      JoinQueries.all.find(_.name == "interval_join").get.oracle),
+      Some(JoinQueries.intervalJoinOracleSql)),
 
     Q("stream_interval_join",
       (s, dir) => {
@@ -3540,7 +3540,7 @@ object StreamingQueries {
           StatefulOps.intervalJoinShared(tagged, bound).toDF(), "append",
           numPartitions = 4).orderBy("a_id", "b_id")
       },
-      JoinQueries.all.find(_.name == "interval_join").get.oracle)
+      Some(JoinQueries.intervalJoinOracleSql))
   )
 
   /** The closed-form SQL replay of the adaptive-K KSlack machine (round

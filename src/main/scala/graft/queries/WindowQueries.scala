@@ -47,6 +47,110 @@ object WindowQueries {
 
   private val SumVal = "CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE)"
 
+  // oracles the stream twins in StreamingQueries share by value
+  private[queries] val reduceRollingOracleSql: String = s"""
+        SELECT event_id, user_id,
+          CAST(SUM(CAST(value AS DECIMAL(12,2))) OVER w AS DOUBLE) AS running_sum,
+          COUNT(*) OVER w AS running_cnt
+        FROM (SELECT event_id, user_id, ${Q.TsUsDuck} AS ts_us, value FROM events)
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        ORDER BY event_id"""
+
+  private[queries] val winTbTumblingOracleSql: String = s"""
+        SELECT event_type, ((${Q.TsUsDuck}) // $H1) * $H1 AS win_start_us,
+               COUNT(*) AS cnt, $SumVal AS sum_value
+        FROM events GROUP BY event_type, win_start_us
+        ORDER BY event_type, win_start_us"""
+
+  private[queries] val winTbSlidingOracleSql: String = s"""
+        WITH e AS (SELECT event_type, ${Q.TsUsDuck} AS ts_us, value FROM events),
+        x AS (SELECT event_type, value,
+                unnest(range((ts_us - $H1) // $M15 + 1, ts_us // $M15 + 1)) AS w
+              FROM e)
+        SELECT event_type, w * $M15 AS win_start_us,
+               COUNT(*) AS cnt, $SumVal AS sum_value
+        FROM x GROUP BY event_type, win_start_us
+        ORDER BY event_type, win_start_us"""
+
+  private[queries] val winTbSlidingFfatOracleSql: String = s"""
+        WITH e AS (SELECT event_type, ${Q.TsUsDuck} AS ts_us,
+                     CAST(round(value * 100) AS BIGINT) AS cents FROM events),
+        x AS (SELECT event_type, cents,
+                unnest(range((ts_us - $H1) // $M15 + 1, ts_us // $M15 + 1)) AS w
+              FROM e)
+        SELECT event_type, w * $M15 AS win_start_us, COUNT(*) AS cnt,
+               CAST(SUM(cents) AS BIGINT) AS sum_cents,
+               MIN(cents) AS min_cents, MAX(cents) AS max_cents
+        FROM x GROUP BY event_type, win_start_us
+        ORDER BY event_type, win_start_us"""
+
+  private[queries] val winTbHoppingOracleSql: String = s"""
+        WITH e AS (SELECT event_type, ${Q.TsUsDuck} AS ts_us, value FROM events),
+        x AS (SELECT event_type, value,
+                unnest(range((ts_us - $M10) // $M30 + 1, ts_us // $M30 + 1)) AS w
+              FROM e)
+        SELECT event_type, w * $M30 AS win_start_us,
+               COUNT(*) AS cnt, $SumVal AS sum_value
+        FROM x GROUP BY event_type, win_start_us
+        ORDER BY event_type, win_start_us"""
+
+  private[queries] val winCbTumblingOracleSql: String = s"""
+        WITH e AS (SELECT user_id, event_id, ${Q.TsUsDuck} AS ts_us, value FROM events),
+        r AS (SELECT user_id, event_id, value,
+                ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) - 1 AS i
+              FROM e)
+        SELECT user_id, i // 100 AS wid, COUNT(*) AS cnt, $SumVal AS sum_value,
+               MIN(event_id) AS first_event, MAX(event_id) AS last_event
+        FROM r GROUP BY user_id, wid ORDER BY user_id, wid"""
+
+  private[queries] val winCbSlidingOracleSql: String = s"""
+        WITH e AS (SELECT user_id, event_id, ${Q.TsUsDuck} AS ts_us, value FROM events),
+        r AS (SELECT user_id, event_id, value,
+                ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) - 1 AS i
+              FROM e),
+        x AS (SELECT user_id, value,
+                unnest(range(CASE WHEN i >= 100 THEN (i - 100) // 50 + 1 ELSE 0 END, i // 50 + 1)) AS wid
+              FROM r)
+        SELECT user_id, wid, COUNT(*) AS cnt, $SumVal AS sum_value
+        FROM x GROUP BY user_id, wid ORDER BY user_id, wid"""
+
+  private[queries] val winCbHoppingOracleSql: String = s"""
+        WITH e AS (SELECT user_id, event_id, ${Q.TsUsDuck} AS ts_us, value FROM events),
+        r AS (SELECT user_id, event_id, value,
+                ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) - 1 AS i
+              FROM e),
+        x AS (SELECT user_id, value,
+                unnest(range(CASE WHEN i >= 20 THEN (i - 20) // 50 + 1 ELSE 0 END, i // 50 + 1)) AS wid
+              FROM r)
+        SELECT user_id, wid, COUNT(*) AS cnt, $SumVal AS sum_value
+        FROM x GROUP BY user_id, wid ORDER BY user_id, wid"""
+
+  private[queries] val winTbSessionOracleSql: String = s"""
+        WITH e AS (SELECT user_id, ${Q.TsUsDuck} AS ts_us, value FROM events),
+        l AS (SELECT user_id, ts_us, value,
+                CASE WHEN ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) >= ${30L * Q.MinuteUs}
+                     OR lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) IS NULL
+                     THEN 1 ELSE 0 END AS new_s
+              FROM e),
+        sgrp AS (SELECT user_id, ts_us, value,
+                   SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+                 FROM l)
+        SELECT user_id, MIN(ts_us) AS session_start_us,
+               COUNT(*) AS cnt, $SumVal AS sum_value
+        FROM sgrp GROUP BY user_id, sid
+        ORDER BY user_id, session_start_us"""
+
+  private[queries] val winTbNonincOracleSql: String = s"""
+        WITH e AS (SELECT user_id, ((${Q.TsUsDuck}) // $H6) * $H6 AS win_start_us,
+                     CAST(round(value * 100) AS BIGINT) AS cents FROM events)
+        SELECT user_id, win_start_us, COUNT(*) AS cnt,
+               (list(cents ORDER BY cents))[CAST((COUNT(*) + 1) // 2 AS INT)] AS median_cents,
+               MAX(cents) - MIN(cents) AS range_cents
+        FROM e GROUP BY user_id, win_start_us
+        ORDER BY user_id, win_start_us"""
+
   def all: Seq[Q] = Seq(
 
     // ---- Reduce: per-key rolling fold, one emission per input ----
@@ -63,14 +167,7 @@ object WindowQueries {
           .select("event_id", "user_id", "running_sum", "running_cnt")
           .orderBy("event_id")
       },
-      Some(s"""
-        SELECT event_id, user_id,
-          CAST(SUM(CAST(value AS DECIMAL(12,2))) OVER w AS DOUBLE) AS running_sum,
-          COUNT(*) OVER w AS running_cnt
-        FROM (SELECT event_id, user_id, ${Q.TsUsDuck} AS ts_us, value FROM events)
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        ORDER BY event_id""")),
+      Some(reduceRollingOracleSql)),
 
     // ---- keyless Reduce: global running fold (empty_key_t path,
     //      wf/basic.hpp:284-302) — via the distributed two-pass prefix
@@ -101,11 +198,7 @@ object WindowQueries {
         .groupBy("event_type", "win_start_us")
         .agg(count(lit(1)).as("cnt"), expr(SumVal).as("sum_value"))
         .orderBy("event_type", "win_start_us"),
-      Some(s"""
-        SELECT event_type, ((${Q.TsUsDuck}) // $H1) * $H1 AS win_start_us,
-               COUNT(*) AS cnt, $SumVal AS sum_value
-        FROM events GROUP BY event_type, win_start_us
-        ORDER BY event_type, win_start_us""")),
+      Some(winTbTumblingOracleSql)),
 
     // ---- TB sliding (len 1h > slide 15m): each row lands in len/slide
     //      windows; window id w covers [w*slide, w*slide+len) ----
@@ -118,15 +211,7 @@ object WindowQueries {
         .groupBy("event_type", "win_start_us")
         .agg(count(lit(1)).as("cnt"), expr(SumVal).as("sum_value"))
         .orderBy("event_type", "win_start_us"),
-      Some(s"""
-        WITH e AS (SELECT event_type, ${Q.TsUsDuck} AS ts_us, value FROM events),
-        x AS (SELECT event_type, value,
-                unnest(range((ts_us - $H1) // $M15 + 1, ts_us // $M15 + 1)) AS w
-              FROM e)
-        SELECT event_type, w * $M15 AS win_start_us,
-               COUNT(*) AS cnt, $SumVal AS sum_value
-        FROM x GROUP BY event_type, win_start_us
-        ORDER BY event_type, win_start_us""")),
+      Some(winTbSlidingOracleSql)),
 
     // ---- TB sliding via FlatFAT (Ffat_Windows, wf/flatfat.hpp): one
     //      shuffle on the key, no explode multiplier, O(log n) range
@@ -140,17 +225,7 @@ object WindowQueries {
           .slidingByFlatFat(ev, "ts_us", "cents", H1, M15, Seq("event_type"))
           .orderBy("event_type", "win_start_us")
       },
-      Some(s"""
-        WITH e AS (SELECT event_type, ${Q.TsUsDuck} AS ts_us,
-                     CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        x AS (SELECT event_type, cents,
-                unnest(range((ts_us - $H1) // $M15 + 1, ts_us // $M15 + 1)) AS w
-              FROM e)
-        SELECT event_type, w * $M15 AS win_start_us, COUNT(*) AS cnt,
-               CAST(SUM(cents) AS BIGINT) AS sum_cents,
-               MIN(cents) AS min_cents, MAX(cents) AS max_cents
-        FROM x GROUP BY event_type, win_start_us
-        ORDER BY event_type, win_start_us""")),
+      Some(winTbSlidingFfatOracleSql)),
 
     // ---- TB sliding via pane-fed FlatFAT (Paned_Windows PLQ feeding the
     //      Ffat tree, wf/paned_windows.hpp:140-141): rows pre-aggregate per
@@ -166,17 +241,7 @@ object WindowQueries {
           .slidingByFlatFatPaned(ev, "ts_us", "cents", H1, M15, Seq("event_type"))
           .orderBy("event_type", "win_start_us")
       },
-      Some(s"""
-        WITH e AS (SELECT event_type, ${Q.TsUsDuck} AS ts_us,
-                     CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        x AS (SELECT event_type, cents,
-                unnest(range((ts_us - $H1) // $M15 + 1, ts_us // $M15 + 1)) AS w
-              FROM e)
-        SELECT event_type, w * $M15 AS win_start_us, COUNT(*) AS cnt,
-               CAST(SUM(cents) AS BIGINT) AS sum_cents,
-               MIN(cents) AS min_cents, MAX(cents) AS max_cents
-        FROM x GROUP BY event_type, win_start_us
-        ORDER BY event_type, win_start_us""")),
+      Some(winTbSlidingFfatOracleSql)),
 
     // ---- TB hopping with gaps (len 10m < slide 30m,
     //      wf/window_replica.hpp:267-273): rows between hops match no
@@ -191,15 +256,7 @@ object WindowQueries {
         .groupBy("event_type", "win_start_us")
         .agg(count(lit(1)).as("cnt"), expr(SumVal).as("sum_value"))
         .orderBy("event_type", "win_start_us"),
-      Some(s"""
-        WITH e AS (SELECT event_type, ${Q.TsUsDuck} AS ts_us, value FROM events),
-        x AS (SELECT event_type, value,
-                unnest(range((ts_us - $M10) // $M30 + 1, ts_us // $M30 + 1)) AS w
-              FROM e)
-        SELECT event_type, w * $M30 AS win_start_us,
-               COUNT(*) AS cnt, $SumVal AS sum_value
-        FROM x GROUP BY event_type, win_start_us
-        ORDER BY event_type, win_start_us""")),
+      Some(winTbHoppingOracleSql)),
 
     // ---- CB tumbling (len 100) per key: count-index via row_number over
     //      (ts, id) — the reference's per-key arrival index
@@ -216,14 +273,7 @@ object WindowQueries {
             min("event_id").as("first_event"), max("event_id").as("last_event"))
           .orderBy("user_id", "wid")
       },
-      Some(s"""
-        WITH e AS (SELECT user_id, event_id, ${Q.TsUsDuck} AS ts_us, value FROM events),
-        r AS (SELECT user_id, event_id, value,
-                ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) - 1 AS i
-              FROM e)
-        SELECT user_id, i // 100 AS wid, COUNT(*) AS cnt, $SumVal AS sum_value,
-               MIN(event_id) AS first_event, MAX(event_id) AS last_event
-        FROM r GROUP BY user_id, wid ORDER BY user_id, wid""")),
+      Some(winCbTumblingOracleSql)),
 
     // ---- CB sliding (len 100, slide 50) per key ----
     Q("win_cb_sliding",
@@ -239,16 +289,7 @@ object WindowQueries {
           .withColumnRenamed("w", "wid")
           .orderBy("user_id", "wid")
       },
-      Some(s"""
-        WITH e AS (SELECT user_id, event_id, ${Q.TsUsDuck} AS ts_us, value FROM events),
-        r AS (SELECT user_id, event_id, value,
-                ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) - 1 AS i
-              FROM e),
-        x AS (SELECT user_id, value,
-                unnest(range(CASE WHEN i >= 100 THEN (i - 100) // 50 + 1 ELSE 0 END, i // 50 + 1)) AS wid
-              FROM r)
-        SELECT user_id, wid, COUNT(*) AS cnt, $SumVal AS sum_value
-        FROM x GROUP BY user_id, wid ORDER BY user_id, wid""")),
+      Some(winCbSlidingOracleSql)),
 
     // ---- CB sliding through the FlatFAT tree — the reference's
     //      test_win_fat_cb cell (/root/reference/tests/win_tests/
@@ -305,16 +346,7 @@ object WindowQueries {
           .withColumnRenamed("w", "wid")
           .orderBy("user_id", "wid")
       },
-      Some(s"""
-        WITH e AS (SELECT user_id, event_id, ${Q.TsUsDuck} AS ts_us, value FROM events),
-        r AS (SELECT user_id, event_id, value,
-                ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts_us, event_id) - 1 AS i
-              FROM e),
-        x AS (SELECT user_id, value,
-                unnest(range(CASE WHEN i >= 20 THEN (i - 20) // 50 + 1 ELSE 0 END, i // 50 + 1)) AS wid
-              FROM r)
-        SELECT user_id, wid, COUNT(*) AS cnt, $SumVal AS sum_value
-        FROM x GROUP BY user_id, wid ORDER BY user_id, wid""")),
+      Some(winCbHoppingOracleSql)),
 
     // ---- session windows: absent from the reference ("No session windows
     //      anywhere in the library", SURVEY §2.4) — a free win from Spark's
@@ -328,21 +360,7 @@ object WindowQueries {
         .select(col("user_id"), expr("unix_micros(session_window.start)").as("session_start_us"),
           col("cnt"), col("sum_value"))
         .orderBy("user_id", "session_start_us"),
-      Some(s"""
-        WITH e AS (SELECT user_id, ${Q.TsUsDuck} AS ts_us, value FROM events),
-        l AS (SELECT user_id, ts_us, value,
-                CASE WHEN ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) >= ${30L * Q.MinuteUs}
-                     OR lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us) IS NULL
-                     THEN 1 ELSE 0 END AS new_s
-              FROM e),
-        sgrp AS (SELECT user_id, ts_us, value,
-                   SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-                 FROM l)
-        SELECT user_id, MIN(ts_us) AS session_start_us,
-               COUNT(*) AS cnt, $SumVal AS sum_value
-        FROM sgrp GROUP BY user_id, sid
-        ORDER BY user_id, session_start_us""")),
+      Some(winTbSessionOracleSql)),
 
     // ---- non-incremental window logic: order statistics over the full
     //      sorted window buffer (Iterable flavor, wf/iterable.hpp:47-55) ----
@@ -357,13 +375,6 @@ object WindowQueries {
           expr("buf[CAST((cnt + 1) div 2 AS INT) - 1]").as("median_cents"),
           expr("buf[CAST(cnt AS INT) - 1] - buf[0]").as("range_cents"))
         .orderBy("user_id", "win_start_us"),
-      Some(s"""
-        WITH e AS (SELECT user_id, ((${Q.TsUsDuck}) // $H6) * $H6 AS win_start_us,
-                     CAST(round(value * 100) AS BIGINT) AS cents FROM events)
-        SELECT user_id, win_start_us, COUNT(*) AS cnt,
-               (list(cents ORDER BY cents))[CAST((COUNT(*) + 1) // 2 AS INT)] AS median_cents,
-               MAX(cents) - MIN(cents) AS range_cents
-        FROM e GROUP BY user_id, win_start_us
-        ORDER BY user_id, win_start_us"""))
+      Some(winTbNonincOracleSql))
   )
 }

@@ -19,9 +19,10 @@ object StreamRun {
   private val jvmTag: String = java.util.UUID.randomUUID().toString.take(8)
 
   /** Run a (possibly streaming) DataFrame to completion into an in-memory
-    * table and return it as a batch DataFrame. Single-batch for file
-    * sources (no maxFilesPerTrigger), so Update-mode state operators emit
-    * exactly once per key/window.
+    * sink and return its rows as a batch DataFrame (no catalog view is
+    * left behind; `graft.Dev explain` shows the micro-batch plans).
+    * Single-batch for file sources (no maxFilesPerTrigger), so Update-mode
+    * state operators emit exactly once per key/window.
     *
     * `requireSingleDataBatch` turns that delivery shape from an
     * assumption into an assertion (checked on the query's progress
@@ -75,16 +76,6 @@ object StreamRun {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
       q.awaitTermination()
-      // perf-debug lever: dump the last micro-batch's physical plan
-      // (how stream-static joins actually planned — broadcast vs SMJ —
-      // is invisible from the result DF's trivial memory-sink plan)
-      if (sys.env.get("SPARK_GRAFT_EXPLAIN_STREAM").contains("1")) {
-        System.err.println(s"==== $name last-execution plan ====")
-        q.explain(extended = false)
-        q.recentProgress.foreach(p => System.err.println(
-          s"---- $name batch ${p.batchId}: rows=${p.numInputRows} " +
-            s"durations=${p.durationMs}"))
-      }
       if (requireSingleDataBatch) {
         val dataBatches = q.recentProgress.count(_.numInputRows > 0)
         require(dataBatches == 1,
@@ -98,7 +89,9 @@ object StreamRun {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
     }
-    spark.table(name)
+    // the resolved frame's plan holds the sink itself, so the catalog
+    // view can go: a long-lived session no longer pins every run's rows
+    try spark.table(name) finally spark.catalog.dropTempView(name)
   }
 
   /** Run a pre-configured external-sink stream to completion — the

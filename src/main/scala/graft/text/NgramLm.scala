@@ -225,23 +225,9 @@ object NgramLm {
     BackoffModel(qSeen, c1.withColumnRenamed("token", "__w2"), n1)
   }
 
-  /** Backoff twins of [[save]]/[[load]] — count tables and quantized
-    * values are exact integers, so the round trips are value-exact. */
-  def saveBackoff(spark: org.apache.spark.sql.SparkSession, m: BackoffModel,
-      root: String): Long =
-    graft.pipeline.ModelStore.save(spark, root,
-      Seq("q_seen" -> m.qSeen, "unigrams" -> m.unigrams),
-      Map("n1" -> m.n1.toString))
-
-  def loadBackoff(spark: org.apache.spark.sql.SparkSession,
-      root: String): BackoffModel = {
-    import graft.pipeline.ModelStore
-    BackoffModel(
-      graft.Caches.track(ModelStore.loadRelation(spark, root, "q_seen")),
-      graft.Caches.track(ModelStore.loadRelation(spark, root, "unigrams")),
-      ModelStore.loadParams(spark, root)("n1").toLong)
-  }
-
+  /** Trigram-backoff twins of [[save]]/[[load]] — count tables and
+    * quantized values are exact integers, so the round trips are
+    * value-exact. */
   def saveBackoff3(spark: org.apache.spark.sql.SparkSession, m: Backoff3Model,
       root: String): Long =
     graft.pipeline.ModelStore.save(spark, root,

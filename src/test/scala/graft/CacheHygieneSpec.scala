@@ -6,7 +6,8 @@ import graft.dedup.Dedup
 
 /** Library calls that persist intermediates must not leak blocks into the
   * session: Caches.releaseAll() after materialization returns the session
-  * to its prior cache footprint. Also pins the pointer-doubling convergence
+  * to its prior cache footprint; stream rows leave no memory-sink view or
+  * running stream behind. Also pins the pointer-doubling convergence
   * of connectedComponents on a long chain (diameter >> round count).
   */
 class CacheHygieneSpec extends AnyFunSuite {
@@ -53,6 +54,22 @@ class CacheHygieneSpec extends AnyFunSuite {
     Caches.releaseAll()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked cached RDDs: $leaked")
+  }
+
+  test("stream rows leave no memory-sink view and no active stream behind") {
+    def views = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("graft_stream_")).toSeq
+    Seq("stream_win_tb_tumbling", "stream_reduce_rolling",
+        "stream_win_tb_sliding_ffat_append").foreach { name =>
+      val fn = SparkEntry.queries(name)
+      // both frames are read after both runs: a result outlives its view
+      val first = try fn(spark, TestSpark.SF) finally Caches.releaseAll()
+      val second = try fn(spark, TestSpark.SF) finally Caches.releaseAll()
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+      withClue(name) { assert(rows(first) == rows(second)) }
+    }
+    assert(views.isEmpty, s"memory-sink views left behind: $views")
+    assert(spark.streams.active.isEmpty)
   }
 
   test("connected components converge on a chain far longer than the round budget") {

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract sanity: every query runs at sf0.001, every oracle key
   * has a query, the flagship entry returns rows.
   */
@@ -78,5 +80,25 @@ class ContractSpec extends AnyFunSuite {
     assert(med("q") == 4.0, s"expected 4.0 (run-window median), got ${med("q")}")
     // and a brand-new query's median is its own measured time
     assert(Bench.historyMedians(Nil, Map("new" -> 1.5))("new") == 1.5)
+  }
+
+  test("library code reads no environment variable: only the mains do") {
+    // a debug switch inside an operator is invisible to its caller and
+    // untested; the mains own every env knob (Dev observes runs through
+    // Spark's listeners instead)
+    val mains = Set("Bench.scala", "Verify.scala", "Dev.scala")
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val offenders =
+      try files.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && !mains(p.getFileName.toString))
+        .filter { p =>
+          val src = new String(java.nio.file.Files.readAllBytes(p),
+            java.nio.charset.StandardCharsets.UTF_8)
+          src.contains("sys.env") || src.contains("System.getenv")
+        }
+        .map(root.relativize(_).toString).toList.sorted
+      finally files.close()
+    assert(offenders.isEmpty, s"env reads outside the mains: $offenders")
   }
 }

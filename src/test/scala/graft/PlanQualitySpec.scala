@@ -555,14 +555,4 @@ class PlanQualitySpec extends AnyFunSuite
     assert(!p.contains("Exchange") && !p.contains("Join"),
       "PCA scoring should be a single scan: " + p.take(3000))
   }
-
-  test("salted join is result-identical to the plain equi-join") {
-    val o = Tables.orders(spark, TestSpark.SF)
-    val c = Tables.customer(spark, TestSpark.SF)
-    val plain = o.join(c, org.apache.spark.sql.functions.col("o_custkey") ===
-      org.apache.spark.sql.functions.col("c_custkey")).count()
-    val salted = graft.operators.SkewJoin
-      .saltedEquiJoin(o, c, "o_custkey", "c_custkey", "o_orderkey", 8).count()
-    assert(plain == salted)
-  }
 }
