@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Typed event row shared by the stateful streaming operators (the
   * engine's analog of the reference test tuple
@@ -63,18 +65,37 @@ case class RollTtlState(sumCents: Long, cnt: Long, lastTsUs: Long)
   * boundary must restart the query from a fresh checkpoint (replay from
   * the source), as with any stateful-operator schema migration.
   */
-case class FfatIn(key: String, ts_us: Long, cents: Long)
+case class FfatIn(key: String, ts_us: Long, cents: Long) extends FfatEvent
 case class FfatKeyState(paneTs: Array[Long], cnt: Array[Long], sum: Array[Long],
     mn: Array[Long], mx: Array[Long])
 case class FfatStreamOut(event_type: String, win_start_us: Long, cnt: Long,
     sum_cents: Long, min_cents: Long, max_cents: Long)
 
+/** The fields of an input row that the FlatFAT twins' map-side pane
+  * stage folds (both [[FfatIn]] and [[FfatInT]] carry them). */
+trait FfatEvent {
+  def key: String
+  def ts_us: Long
+  def cents: Long
+}
+
 /** [[FfatIn]] + the watermarked event-time column, for the append twin
-  * ([[StatefulOps.slidingWindowsFfatAppend]]): `EventTimeTimeout` requires
-  * the watermark attribute to reach the stateful operator.
+  * ([[StatefulOps.slidingWindowsFfatAppend]]). It is read by the map-side
+  * pane stage, below the exchange, so column pruning cannot strip the
+  * watermark attribute; the stateful operator itself sees each pane
+  * partial's pane END as its watermarked time (`EventTimeTimeout` requires
+  * a watermark attribute there).
   */
 case class FfatInT(key: String, ts_us: Long, cents: Long,
-    event_time: java.sql.Timestamp)
+    event_time: java.sql.Timestamp) extends FfatEvent
+
+/** One map-side pane partial of the FlatFAT twins: the (cnt, sum, min,
+  * max) fold of one input partition's rows of one (key, salt) in the
+  * gcd(len, slide) pane anchored at `pane_us` (the reference's PLQ output,
+  * wf/paned_windows.hpp:140-141).
+  */
+case class FfatPane(key: String, salt: Int, pane_us: Long, cnt: Long, sum: Long,
+    mn: Long, mx: Long)
 
 /** Append-twin state: the same pane partials plus the emit-once frontier —
   * every window with end ≤ `firedThroughUs` has already been emitted.
@@ -275,56 +296,124 @@ object StatefulOps {
       }
   }
 
+  private def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
+
+  /** One (key, salt, pane anchor) slot of a partition's PLQ fold. */
+  private case class PaneKey(key: String, salt: Int, anchor: Long)
+
+  /** The PLQ (pane-level query) stage of both FlatFAT twins, run MAP-SIDE,
+    * before the exchange into their WLQ (window-level query)
+    * `flatMapGroupsWithState` — the reference's Paned_Windows split
+    * (wf/paned_windows.hpp:140-141) and the streaming
+    * analog of the batch paned path's pre-aggregation. Each input
+    * partition folds its rows into one (cnt, sum, min, max) [[FfatPane]]
+    * per (key, salt, gcd(len, slide) pane anchor), so a micro-batch
+    * shuffles, sorts and deserializes at most partitions × keys × salts ×
+    * panes touched partials instead of every row. Exact because lift/comb
+    * is associative and commutative, and every row of a pane belongs to
+    * the same windows (panes align with window boundaries).
+    *
+    * The salt is computed per row: a fixed 64-bit mix of (ts, cents)
+    * (golden-ratio multiply + xor-fold), stable across JVM/Scala versions,
+    * unlike collection hashes; 0 when `salts` = 1.
+    *
+    * When the input carries an `event_time` column (the caller keeps it so
+    * column pruning cannot strip the watermark attribute, see the CALLER
+    * CONTRACT on [[intervalJoinShared]]), each partial carries its PANE END
+    * as `event_time`, with the input column's metadata (the watermark
+    * delay key): that is the attribute the stateful operator reads its
+    * watermark from, and, under `EventTimeTimeout`, the one Spark's
+    * late-event filter in front of it compares.
+    */
+  private def paneStage[T <: FfatEvent](ev: Dataset[T], paneUs: Long, salts: Int)(
+      implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val partials = ev.mapPartitions { rows =>
+      val panes = new java.util.HashMap[PaneKey, Array[Long]]()
+      rows.foreach { e =>
+        val salt =
+          if (salts == 1) 0
+          else {
+            val h = (e.ts_us * 0x9E3779B97F4A7C15L) ^ (e.cents * 0xC2B2AE3D27D4EB4FL)
+            Math.floorMod((h ^ (h >>> 32)).toInt, salts)
+          }
+        val k = PaneKey(e.key, salt, Math.floorDiv(e.ts_us, paneUs) * paneUs)
+        var p = panes.get(k)
+        if (p == null) { p = Array(0L, 0L, Long.MaxValue, Long.MinValue); panes.put(k, p) }
+        p(0) += 1
+        p(1) += e.cents
+        p(2) = math.min(p(2), e.cents)
+        p(3) = math.max(p(3), e.cents)
+      }
+      panes.entrySet.iterator.asScala.map { en =>
+        val (k, p) = (en.getKey, en.getValue)
+        FfatPane(k.key, k.salt, k.anchor, p(0), p(1), p(2), p(3))
+      }
+    }.toDF()
+    ev.schema.find(_.name == "event_time").fold(partials)(f =>
+      partials.withColumn("event_time",
+        timestamp_micros(col("pane_us") + paneUs).as("event_time", f.metadata)))
+  }
+
+  /** The WLQ merge of both twins: the retained state panes (those `keep`
+    * accepts) plus this batch's partials, as anchor → (cnt, sum, min, max). */
+  private def mergePanes(paneTs: Array[Long], cnt: Array[Long], sum: Array[Long],
+      mn: Array[Long], mx: Array[Long], keep: Long => Boolean,
+      partials: Iterator[FfatPane]): mutable.HashMap[Long, (Long, Long, Long, Long)] = {
+    val panes = mutable.HashMap[Long, (Long, Long, Long, Long)]()
+    paneTs.indices.foreach { i =>
+      if (keep(paneTs(i))) panes(paneTs(i)) = (cnt(i), sum(i), mn(i), mx(i))
+    }
+    partials.foreach { p =>
+      val (c, sm, lo, hi) = panes.getOrElse(p.pane_us, (0L, 0L, Long.MaxValue, Long.MinValue))
+      panes(p.pane_us) = (c + p.cnt, sm + p.sum, math.min(lo, p.mn), math.max(hi, p.mx))
+    }
+    panes
+  }
+
   /** Sliding/hopping time windows through the STREAMING engine via the
     * FlatFAT lift/comb tree (the reference's Ffat_Windows run as a
-    * Win_Replica would run it): per-key state holds ONE (cnt, sum, min,
-    * max) partial per gcd(len, slide) tumbling pane — arriving rows fold
-    * into their pane on arrival, so state per key is O(panes inside the
-    * retention horizon), not O(rows), the reference's pane-stage bound
+    * Win_Replica would run it), split into the reference's two paned
+    * stages: the map-side PLQ [[paneStage]] folds each partition's rows
+    * into pane partials, and the per-key state (the WLQ) holds ONE (cnt,
+    * sum, min, max) partial per gcd(len, slide) tumbling pane — arriving
+    * partials merge into their pane, so state per key is O(panes inside
+    * the retention horizon), not O(rows), the reference's pane-stage bound
     * (/root/reference/wf/paned_windows.hpp:140-141). Each batch re-answers
-    * the windows its new rows touch with O(log #panes) range combines over
-    * the shared [[graft.operators.FlatFatWindows.windowsFromPartials]]
-    * kernel — no explode multiplier, one shuffle (the groupByKey), emission
-    * keyed by (key, window) in update mode like the CB family. Valid
-    * because panes align with window boundaries and the lift/comb pair is
-    * associative (same argument as the batch
-    * [[graft.operators.TimeWindows.slidingByFlatFatPaned]]). Panes anchored
-    * older than watermark − 2·len can no longer contribute to any window a
-    * future (≥ watermark) row touches and are purged, bounding state per
-    * key in a continuous deployment.
+    * the windows its partials touch (every row of a pane touches the same
+    * windows) with O(log #panes) range combines over the shared
+    * [[graft.operators.FlatFatWindows.windowsFromPartials]] kernel — no
+    * explode multiplier, one shuffle (of partials), emission keyed by
+    * (key, window) in update mode like the CB family. Valid because panes
+    * align with window boundaries and the lift/comb pair is associative
+    * (same argument as the batch
+    * [[graft.operators.TimeWindows.slidingByFlatFatPaned]]). Under
+    * `NoTimeout` Spark puts no late-event filter in front of the
+    * operator, so every row counts. Panes anchored older than watermark −
+    * 2·len can no longer contribute to any window a future (≥ watermark)
+    * row touches and are purged, bounding state per key in a continuous
+    * deployment.
     */
   def slidingWindowsFfat(ev: Dataset[FfatIn], lenUs: Long, slideUs: Long)(
       implicit spark: SparkSession): Dataset[FfatStreamOut] = {
     import spark.implicits._
-    val paneUs = {
-      def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
-      gcd(lenUs, slideUs)
-    }
-    ev.groupByKey(_.key)
+    paneStage(ev, gcd(lenUs, slideUs), salts = 1)
+      .groupBy(col("key")).as[String, FfatPane]
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (key: String, it: Iterator[FfatIn], state: GroupState[FfatKeyState]) =>
+        (key: String, it: Iterator[FfatPane], state: GroupState[FfatKeyState]) =>
           val s = state.getOption.getOrElse(
             FfatKeyState(Array.empty, Array.empty, Array.empty, Array.empty, Array.empty))
           val wmUs = scala.util.Try(state.getCurrentWatermarkMs()).getOrElse(0L) * 1000L
-          // pane partials: anchor -> (cnt, sum, min, max); start from the
-          // retained state panes (anchor ≥ wm − 2·len: a purged pane's
+          val partials = it.toArray
+          // retained state panes: anchor ≥ wm − 2·len (a purged pane's
           // windows all start at-or-before its anchor < wm − len, below
           // every window a future ≥-wm row can touch)
-          val panes = scala.collection.mutable.HashMap[Long, (Long, Long, Long, Long)]()
-          s.paneTs.indices.foreach { i =>
-            if (wmUs <= 0 || s.paneTs(i) >= wmUs - 2 * lenUs)
-              panes(s.paneTs(i)) = (s.cnt(i), s.sum(i), s.mn(i), s.mx(i))
-          }
-          // fold this batch's rows into their panes + collect touched windows
-          val touched = scala.collection.mutable.HashSet[Long]()
-          it.foreach { e =>
-            val anchor = Math.floorDiv(e.ts_us, paneUs) * paneUs
-            val (c, sm, mn, mx) =
-              panes.getOrElse(anchor, (0L, 0L, Long.MaxValue, Long.MinValue))
-            panes(anchor) = (c + 1, sm + e.cents,
-              math.min(mn, e.cents), math.max(mx, e.cents))
-            var w = Math.floorDiv(e.ts_us - lenUs, slideUs) + 1
-            val wMax = Math.floorDiv(e.ts_us, slideUs)
+          val panes = mergePanes(s.paneTs, s.cnt, s.sum, s.mn, s.mx,
+            a => wmUs <= 0 || a >= wmUs - 2 * lenUs, partials.iterator)
+          val touched = mutable.HashSet[Long]()
+          partials.foreach { p =>
+            var w = Math.floorDiv(p.pane_us - lenUs, slideUs) + 1
+            val wMax = Math.floorDiv(p.pane_us, slideUs)
             while (w <= wMax) { touched += w * slideUs; w += 1 }
           }
           val anchors = panes.keysIterator.toArray
@@ -340,9 +429,9 @@ object StatefulOps {
   }
 
   /** The emit-once (append/EOS) twin of [[slidingWindowsFfat]]: the same
-    * per-pane partial state, but each window is emitted EXACTLY ONCE, when
-    * the watermark passes its end — the reference's firing rule
-    * (/root/reference/wf/window_replica.hpp:305,356-408) — via an
+    * map-side PLQ and per-pane partial state, but each window is emitted
+    * EXACTLY ONCE, when the watermark passes its end — the reference's
+    * firing rule (wf/window_replica.hpp:305,356-408) — via an
     * `EventTimeTimeout` timer at the earliest pending window end, and the
     * panes whose windows have all fired are evicted. The update-mode twin
     * re-emits touched windows per batch; this is what a continuous
@@ -376,44 +465,38 @@ object StatefulOps {
     * disabling the guard query-wide; restore the flag after a bounded
     * run either way.
     *
-    * Exactly-once stays safe per salt: rows reaching the operator satisfy
-    * ts ≥ watermark (engine late-row filter), and every window containing
-    * such a row ends strictly after the watermark, hence after the fired
-    * frontier.
+    * LATENESS is judged per pane partial, at pane granularity: each
+    * partial's watermarked time is its pane END, so Spark's late-event
+    * filter in front of the operator drops a partial iff its pane ended
+    * at or before the watermark for late events — the window-end rule of
+    * Spark's own windowed aggregation, and the reference's "tuples for
+    * already-closed windows" rule (wf/window_replica.hpp:256-264). A row
+    * behind the watermark whose pane has not ended therefore COUNTS in
+    * its (not yet fired) windows; a row-granular filter would drop it.
+    * `numRowsDroppedByWatermark` of this operator counts pane partials,
+    * not rows.
+    *
+    * Exactly-once stays safe per salt: a surviving partial's pane ends
+    * after that watermark, and every window containing the pane ends at
+    * or after the pane's end — so after the watermark, which is at or
+    * above every key's fired frontier (the frontier is the watermark of
+    * an earlier batch). No window fires twice, also for a key whose panes
+    * were evicted (a pane is evicted only once its last window ended at
+    * or before the watermark, i.e. once its pane end did) or a new key.
     */
   def slidingWindowsFfatAppend(ev: Dataset[FfatInT], lenUs: Long, slideUs: Long,
       salts: Int = 1)(implicit spark: SparkSession): Dataset[FfatStreamOut] = {
     import spark.implicits._
     require(salts >= 1, s"salts must be >= 1, got $salts")
-    val paneUs = {
-      def gcd(a: Long, b: Long): Long = if (b == 0) a else gcd(b, a % b)
-      gcd(lenUs, slideUs)
-    }
-    def salt(e: FfatInT): Int =
-      if (salts == 1) 0
-      else {
-        // fixed 64-bit mix (golden-ratio multiply + xor-fold): stable
-        // across JVM/Scala versions, unlike collection hashes
-        val h = (e.ts_us * 0x9E3779B97F4A7C15L) ^ (e.cents * 0xC2B2AE3D27D4EB4FL)
-        Math.floorMod((h ^ (h >>> 32)).toInt, salts)
-      }
-    ev.groupByKey(e => (e.key, salt(e)))
+    val paneUs = gcd(lenUs, slideUs)
+    paneStage(ev, paneUs, salts)
+      .groupBy(col("key"), col("salt")).as[(String, Int), FfatPane]
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (String, Int), it: Iterator[FfatInT], state: GroupState[FfatAppendState]) =>
+        (key: (String, Int), it: Iterator[FfatPane], state: GroupState[FfatAppendState]) =>
           val s = state.getOption.getOrElse(FfatAppendState(
             Array.empty, Array.empty, Array.empty, Array.empty, Array.empty, Long.MinValue))
           val wmUs = scala.util.Try(state.getCurrentWatermarkMs()).getOrElse(0L) * 1000L
-          val panes = scala.collection.mutable.HashMap[Long, (Long, Long, Long, Long)]()
-          s.paneTs.indices.foreach { i =>
-            panes(s.paneTs(i)) = (s.cnt(i), s.sum(i), s.mn(i), s.mx(i))
-          }
-          it.foreach { e =>
-            val anchor = Math.floorDiv(e.ts_us, paneUs) * paneUs
-            val (c, sm, mn, mx) =
-              panes.getOrElse(anchor, (0L, 0L, Long.MaxValue, Long.MinValue))
-            panes(anchor) = (c + 1, sm + e.cents,
-              math.min(mn, e.cents), math.max(mx, e.cents))
-          }
+          val panes = mergePanes(s.paneTs, s.cnt, s.sum, s.mn, s.mx, _ => true, it)
           val anchors = panes.keysIterator.toArray
           val wins = graft.operators.FlatFatWindows.windowsFromPartials(anchors,
             anchors.map(panes(_)._1), anchors.map(panes(_)._2),

@@ -428,6 +428,129 @@ class StatefulStreamingSpec extends AnyFunSuite {
     assert(s1 == s4, s"salted result diverged: S=1 has ${s1.size} rows, S=4 has ${s4.size}")
   }
 
+  private def ffatT(key: String, tsUs: Long, cents: Long) =
+    FfatInT(key, tsUs, cents, new java.sql.Timestamp(tsUs / 1000L))
+
+  /** Runs the ffat append twin (0 s watermark delay) over `batches`, one
+    * MemoryStream chunk each, read in `parts` partitions; returns the
+    * emitted (key, win_start_us, cnt, sum, min, max) rows, sorted, and the
+    * partials the late-event filter dropped. */
+  private def ffatAppendRun(name: String, lenUs: Long, slideUs: Long,
+      batches: Seq[Seq[FfatInT]], parts: Int = 1)
+      : (Seq[(String, Long, Long, Long, Long, Long)], Long) = {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    implicit val sp = spark
+    val mem = MemoryStream[FfatInT](parts)
+    val q = StatefulOps.slidingWindowsFfatAppend(
+      mem.toDS().withWatermark("event_time", "0 seconds"), lenUs, slideUs).toDF()
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+    finally q.stop()
+    val rows = spark.table(name).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+      .toSeq.sorted
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    (rows, q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum)
+  }
+
+  private def kernel(key: String, rows: Seq[(Long, Long)], lenUs: Long, slideUs: Long) =
+    graft.operators.FlatFatWindows.windows(
+      rows.map(_._1).toArray, rows.map(_._2).toArray, lenUs, slideUs)
+      .map(w => (key, w.winStartUs, w.cnt, w.sum, w.min, w.max)).toSeq.sorted
+
+  test("ffat append: a row behind the watermark in a pane that has not ended counts, once") {
+    val (lenUs, slideUs) = (10L * 1000000L, 5L * 1000000L) // 5 s panes
+    val t0 = 1600000000000000L // a multiple of the 5 s pane
+    // batch 1 leaves the watermark at t0+4s; batch 2's row at t0+3s is
+    // behind it, but its pane [t0, t0+5s) ends after it, so none of the
+    // pane's windows has fired; batch 3 pushes the watermark past them all
+    val (rows, dropped) = ffatAppendRun("ffat_late_open_x", lenUs, slideUs, Seq(
+      Seq(ffatT("a", t0 + 4000000L, 10L)),
+      Seq(ffatT("a", t0 + 3000000L, 20L)),
+      Seq(ffatT("z", t0 + 100000000L, 0L))))
+    val a = rows.filter(_._1 == "a")
+    assert(a == kernel("a", Seq(t0 + 3000000L -> 20L, t0 + 4000000L -> 10L), lenUs, slideUs),
+      s"the late row must count in both its windows, got $a")
+    assert(a.map(_._2).distinct.size == a.size, s"a window was emitted twice: $a")
+    assert(dropped == 0L)
+  }
+
+  test("ffat append: a row whose pane has ended is dropped, counted, and changes no window") {
+    val (lenUs, slideUs) = (10L * 1000000L, 5L * 1000000L)
+    val t0 = 1600000000000000L
+    // the watermark after batch 1 is t0+6s: batch 2's row at t0+1s lies in
+    // the pane [t0, t0+5s), which ended at or before it
+    val (rows, dropped) = ffatAppendRun("ffat_late_closed_x", lenUs, slideUs, Seq(
+      Seq(ffatT("a", t0 + 6000000L, 10L)),
+      Seq(ffatT("a", t0 + 1000000L, 99L)),
+      Seq(ffatT("z", t0 + 100000000L, 0L))))
+    val a = rows.filter(_._1 == "a")
+    assert(a == kernel("a", Seq(t0 + 6000000L -> 10L), lenUs, slideUs),
+      s"the closed-pane row changed a window: $a")
+    assert(dropped == 1L, s"numRowsDroppedByWatermark = $dropped, expected the one partial")
+  }
+
+  test("ffat append output is identical with the source in 1 and in 4 partitions") {
+    val (lenUs, slideUs) = (3600L * 1000000L, 900L * 1000000L)
+    val rows = evRows.map(e => ffatT(e.user_id.toString, e.ts_us, e.cents))
+    // four ts-ordered chunks; every 5th row of a chunk is held back to the
+    // next batch, behind its watermark (mostly in panes already ended),
+    // and each later batch also gets a row at the start of the pane that
+    // holds its watermark (behind it, in a pane still open); a last
+    // far-future row fires every window
+    val split = rows.grouped((rows.size + 3) / 4).toSeq.map { c =>
+      val (held, kept) = c.zipWithIndex.partition(_._2 % 5 == 4)
+      (kept.map(_._1), held.map(_._1))
+    }
+    val batches = split.indices.map { i =>
+      split(i)._1 ++ (if (i == 0) Nil else {
+        val wmUs = split(i - 1)._1.map(_.ts_us).max
+        split(i - 1)._2 :+ ffatT("open", Math.floorDiv(wmUs, slideUs) * slideUs, 7L)
+      })
+    } :+ (split.last._2 :+ ffatT("~eos", rows.map(_.ts_us).max + 100L * lenUs, 0L))
+    val (one, dropped1) = ffatAppendRun("ffat_parts1_x", lenUs, slideUs, batches, parts = 1)
+    val (four, dropped4) = ffatAppendRun("ffat_parts4_x", lenUs, slideUs, batches, parts = 4)
+    assert(one.count(_._1 == "open") > 0 && dropped1 > 0,
+      s"${one.size} windows, $dropped1 partials dropped")
+    assert(one == four, s"1 partition: ${one.size} windows, 4 partitions: ${four.size}")
+  }
+
+  test("the ffat pane stage shuffles pane partials, not rows") {
+    import org.apache.spark.scheduler._
+    // one batch of 10,000 rows over 10 keys inside one pane: the map-side
+    // pane stage writes at most one partial per (key, input partition)
+    val tap = new SparkListener {
+      val records = new java.util.concurrent.atomic.AtomicLong()
+      val flushed = new java.util.concurrent.CountDownLatch(1)
+      @volatile var flushJob = -1
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        Option(te.taskMetrics).foreach(m => records.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == "ffat-tap-flush"))
+          flushJob = js.jobId
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (je.jobId == flushJob) flushed.countDown()
+    }
+    val (lenUs, slideUs, parts) = (10L * 1000000L, 2L * 1000000L, 4)
+    val t0 = 1600000000000000L // a multiple of the 2 s pane
+    val rows = (0 until 10000).map(i => ffatT(s"k${i % 10}", t0 + i * 100L, i.toLong))
+    val sc = spark.sparkContext
+    sc.addSparkListener(tap)
+    val out = try {
+      val (out, _) = ffatAppendRun("ffat_shuffle_x", lenUs, slideUs, Seq(rows), parts)
+      // a marker job's end is delivered after every earlier task end
+      sc.setJobGroup("ffat-tap-flush", "flush the listener bus")
+      try sc.parallelize(Seq(0), 1).count() finally sc.clearJobGroup()
+      assert(tap.flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      out
+    } finally sc.removeSparkListener(tap)
+    assert(out.isEmpty, "no window has ended yet")
+    assert(tap.records.get > 0 && tap.records.get <= 10L * parts,
+      s"${tap.records.get} shuffle records written for 10 keys in $parts partitions")
+  }
+
   test("noninc append windows emit once when the watermark passes and evict state") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
