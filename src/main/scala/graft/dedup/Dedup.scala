@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 import org.apache.spark.sql.expressions.Window
 import graft.functions.GraftFunctions._
 
@@ -243,43 +244,30 @@ object Dedup {
     * `maxBloomItems` take the guarded fallback: the plain distinct-digest
     * membership join (one training Exchange), same result by construction.
     */
-  /** Build a Bloom filter over a column at the REQUESTED (n, fpp) size.
-    *
-    * Spark's `stat.bloomFilter` routes through the runtime-filter
-    * aggregate (`bloom_filter_agg`), which silently CLAMPS the bit count
-    * at `spark.sql.optimizer.runtime.bloomFilter.maxNumBits` — default
-    * 2²⁶ bits = 8 MB, sized for join pruning, not membership. At 10⁷
-    * items the clamp turns a designed 1% fpp into a MEASURED 11%
-    * (`ScaleStressSpec` caught this), and at training-set scale it would
-    * quietly defeat the probe's pruning entirely (every new doc a
-    * "candidate"). Exactness never breaks — the verify join eats false
-    * positives — but the fast path's economics do. The item ceiling
-    * (`maxNumItems`, default 4·10⁶) clamps too, which skews the
-    * hash-count choice (k picked for the clamped n ≈ 17 hashes instead
-    * of 7 — measured 4.2% fp even after un-clamping the bits alone).
-    * Raise BOTH ceilings to the requested (n, fpp) around the build;
-    * restore after.
+  /** Build a Bloom filter over a long column at the REQUESTED (n, fpp)
+    * size: one `BloomFilter.create(n, fpp)` per partition, OR-merged by
+    * `mergeInPlace`. Spark's `stat.bloomFilter` routes through the
+    * runtime-filter aggregate (`bloom_filter_agg`), which silently CLAMPS
+    * the filter at two session ceilings sized for join pruning, not
+    * membership (`spark.sql.optimizer.runtime.bloomFilter.maxNumBits`,
+    * 2²⁶ bits = 8 MB, and `maxNumItems`, 4·10⁶, which also skews the
+    * hash-count choice): at 10⁷ items the clamp turned a designed 1% fpp
+    * into a MEASURED 11% (`ScaleStressSpec` caught this), and at
+    * training-set scale it would quietly defeat the probe's pruning.
+    * Exactness never breaks — the verify join eats false positives — but
+    * the fast path's economics do. Built directly, the filter has the
+    * size the caller asked for, whatever the session conf.
     */
   private[graft] def buildBloom(df: DataFrame, c: org.apache.spark.sql.Column,
-      n: Long, fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
-    val spark = df.sparkSession
-    val optimalBits = math.ceil(
-      -n.toDouble * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val prevBits = spark.conf.getOption(bitsKey)
-    val prevItems = spark.conf.getOption(itemsKey)
-    spark.conf.set(bitsKey, math.max(optimalBits, 67108864L).toString)
-    spark.conf.set(itemsKey, math.max(n, 4000000L).toString)
-    try df.stat.bloomFilter(c, math.max(n, 1L), fpp)
-    finally {
-      def restore(key: String, prev: Option[String]): Unit = prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-      restore(bitsKey, prevBits)
-      restore(itemsKey, prevItems)
+      n: Long, fpp: Double): BloomFilter = {
+    val expected = math.max(n, 1L)
+    val partials = df.select(c).rdd.mapPartitions { rows =>
+      val bf = BloomFilter.create(expected, fpp)
+      rows.foreach(r => if (!r.isNullAt(0)) bf.putLong(r.getLong(0)))
+      Iterator.single(bf)
     }
+    if (partials.getNumPartitions == 0) BloomFilter.create(expected, fpp)
+    else partials.treeReduce((a, b) => a.mergeInPlace(b))
   }
 
   def bloomMembership(newDf: DataFrame, idCol: String, textCol: String,
@@ -757,24 +745,7 @@ object Dedup {
       // that's a small fraction of `ids`, so every round's joins run over
       // the pair graph, not the corpus; singletons are restored by the
       // final left join (rep = own id)
-      val np = p.count() // materializes the persisted pair graph once
-      // SCALE-ADAPTIVE round partitioning (guide §2.2 — size partitions to
-      // the data, not the session): every round's joins/aggs run over the
-      // edge-touching vertex set, a small and shrinking fraction of the
-      // corpus; rounds now run at ~one partition per 50k pairs, clamped to
-      // [2, session parallelism], so a tiny graph stops emitting 32 × 3-4
-      // near-empty shuffle blocks per round while a 10⁹-edge graph still
-      // gets the full session width. Measured at sf0.1: locally NEUTRAL
-      // (~0.45 s/round at 2 and at 32 partitions — the round's fixed cost
-      // is per-round Catalyst planning of the checkpoint + probe queries,
-      // not task launch), kept for the M×R block-count reduction at scale.
-      // Result-independent: the min-label fixpoint is partitioning-
-      // invariant (oracle + long-chain spec re-verified).
-      val spark = ids.sparkSession
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val roundParts = math.max(2L, math.min(prevParts.toLong, np / 50000L + 1L))
-      spark.conf.set("spark.sql.shuffle.partitions", roundParts.toString)
-      try {
+      p.count() // materializes the persisted pair graph once
       var labels = edges.select(col("a_id").as("id")).distinct()
         .select(col("id"), col("id").as("rep_id"))
         .localCheckpoint(true)
@@ -822,10 +793,6 @@ object Dedup {
       ids.select(col(idCol))
         .join(labels.select(col("id").as(idCol), col("rep_id")), Seq(idCol), "left")
         .select(col(idCol), coalesce(col("rep_id"), col(idCol)).as("rep_id"))
-      // restored before the caller materializes the corpus-wide join-back,
-      // which runs at the session's partitioning (every round materialized
-      // eagerly above, so the narrow scope is exact)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     } finally p.unpersist(blocking = false)
   }
 }

@@ -5037,6 +5037,62 @@ object PipelineQueries {
           "target_pct" -> AnnRecommendTargetPct.toString)): Unit
     }
 
+  // ---- rows with a stream twin: each operator is defined once over its
+  //      input relation ([[Twin]]); the batch row applies it to the table
+  //      and StreamingQueries registers its `stream` twin. Row comments sit
+  //      where each batch row is registered below. ----
+
+  private[queries] lazy val unigramApply = Twin("text_unigram_apply",
+      Twin.Documents, "append", Seq("doc_id"), Some(unigramApplyOracleSql)) {
+    (s, dir, docs) =>
+      val m = graft.text.Unigram.train(
+        Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(4)) === 0),
+        "text", rounds = UnigramRounds)
+      graft.text.Unigram.score(docs, "doc_id", "text", m)
+  }
+
+  private[queries] lazy val dsirScore = Twin("text_dsir_score",
+      Twin.Documents, "append", Seq("doc_id"), Some(dsirScoreOracleSql)) {
+    (s, dir, docs) =>
+      val m = Dsir.fit(dsirPlant(Tables.documents(s, dir)), "text",
+        pmod(col("doc_id"), lit(7)) === 0)
+      Dsir.score(dsirPlant(docs), "doc_id", "text", m)
+  }
+
+  private[queries] lazy val entropy = Twin("text_entropy",
+      Twin.Documents, "append", Seq("doc_id"), Some(entropyOracleSql)) {
+    (_, _, docs) =>
+      val cols = TextAnalysis.entropyColumns(col("text"))
+        .map { case (n, c) => c.as(n) }
+      docs.select(col("doc_id") +: cols: _*)
+  }
+
+  private[queries] lazy val chunkDocs = Twin("pipeline_chunk_docs",
+      Twin.Documents, "append", Seq("doc_id", "chunk_no"), Some(chunkOracleSql)) {
+    (_, _, docs) => graft.pipeline.Chunking.chunkDocs(docs, "doc_id", "text",
+      size = ChunkTokens, stride = ChunkStride)
+  }
+
+  private[queries] lazy val docSplit = Twin("pipeline_split",
+      Twin.Documents, "append", Seq("doc_id"), Some(splitOracleSql)) {
+    (_, _, docs) => graft.pipeline.Mixing.hashSplit(
+      docs.select("doc_id"), "doc_id", SplitSpec)
+  }
+
+  private[queries] lazy val sourceMix = Twin("pipeline_source_mix",
+      Twin.Documents, "append", Seq("doc_id", "copy"), Some(sourceMixOracleSql)) {
+    (_, _, docs) => graft.pipeline.Mixing.sourceMix(
+      docs.select("doc_id", "source"), "doc_id", "source", MixWeights,
+      MixDefaultWeight)
+  }
+
+  private[queries] lazy val doremiMix = Twin("pipeline_doremi_mix",
+      Twin.Documents, "append", Seq("doc_id", "copy"), Some(doremiMixOracleSql)) {
+    (s, dir, docs) => graft.pipeline.Mixing.sourceMix(
+      doremiPlant(docs).select("doc_id", "source"), "doc_id", "source",
+      doremiWeightTable(s, dir), defaultWeight = 0.0)
+  }
+
   def all: Seq[Q] = Seq(
 
     // ========== persisted-model serving: train → SAVE → LOAD → score ==========
@@ -5293,15 +5349,7 @@ object PipelineQueries {
       },
       Some(unigramTrainOracleSql)),
 
-    Q("text_unigram_apply",
-      (s, dir) => {
-        val docs = Tables.documents(s, dir)
-        val m = graft.text.Unigram.train(
-          docs.filter(pmod(col("doc_id"), lit(4)) === 0),
-          "text", rounds = UnigramRounds)
-        graft.text.Unigram.score(docs, "doc_id", "text", m).orderBy("doc_id")
-      },
-      Some(unigramApplyOracleSql)),
+    unigramApply.batch,
 
     // the persisted-tokenizer deployment: pieces + the OOV floor round-
     // trip through ModelStore and the LOADED copy segments the corpus —
@@ -5355,14 +5403,7 @@ object PipelineQueries {
     // log, summed as integers; the oracle takes the grouped-counts route
     // to the same per-type terms (integer sums are order-free, so the
     // two routes agree exactly).
-    Q("text_entropy",
-      (s, dir) => {
-        val cols = TextAnalysis.entropyColumns(col("text"))
-          .map { case (n, c) => c.as(n) }
-        Tables.documents(s, dir).select(col("doc_id") +: cols: _*)
-          .orderBy("doc_id")
-      },
-      Some(entropyOracleSql)),
+    entropy.batch,
 
     Q("text_quality",
       (s, dir) => {
@@ -6377,13 +6418,7 @@ object PipelineQueries {
     // against the plan-literal model. The oracle re-derives counts AND
     // the portable-log transform, so any divergence in hashing, counting,
     // smoothing or rounding fails the hash.
-    Q("text_dsir_score",
-      (s, dir) => {
-        val docs = dsirPlant(Tables.documents(s, dir))
-        val m = Dsir.fit(docs, "text", pmod(col("doc_id"), lit(7)) === 0)
-        Dsir.score(docs, "doc_id", "text", m).orderBy("doc_id")
-      },
-      Some(dsirScoreOracleSql)),
+    dsirScore.batch,
 
     // SAMPLED-fit DSIR — both hashed-gram models (target and raw) fit on
     // the deterministic 30% hash-sample; scoring stays the zero-shuffle
@@ -7140,12 +7175,7 @@ object PipelineQueries {
     // construction. Integer-exact chunk math on both engines (operands
     // non-negative, so Spark div ≡ DuckDB //); 32-token chunks at
     // stride 24 give 1–4 chunks over the 10–99-token synthetic docs.
-    Q("pipeline_chunk_docs",
-      (s, dir) => graft.pipeline.Chunking.chunkDocs(
-          Tables.documents(s, dir), "doc_id", "text",
-          size = ChunkTokens, stride = ChunkStride)
-        .orderBy("doc_id", "chunk_no"),
-      Some(chunkOracleSql)),
+    chunkDocs.batch,
 
     // CONTENT-DEFINED chunking — boundaries cut after tokens whose
     // portable hash lands in the boundary class (the rsync/LBFS
@@ -7332,11 +7362,7 @@ object PipelineQueries {
     // Exact int64 threshold comparisons on the shared multiplicative
     // hash; pure per-row column work, one scan at 100 TB. 98/1/1 over
     // sf0.01: 489/5/6 docs — every bucket populated.
-    Q("pipeline_split",
-      (s, dir) => graft.pipeline.Mixing.hashSplit(
-          Tables.documents(s, dir).select("doc_id"), "doc_id", SplitSpec)
-        .orderBy("doc_id"),
-      Some(splitOracleSql)),
+    docSplit.batch,
 
     // per-source corpus PROFILE — the EDA step before mixing decisions:
     // doc counts, token totals and EXACT token quantiles (min/median/max)
@@ -7389,12 +7415,7 @@ object PipelineQueries {
     // copies + one more with probability frac(w), decided by the fixed
     // multiplicative hash (deterministic, no RNG state); the oracle's
     // CASE constants are generated from the same weight table.
-    Q("pipeline_source_mix",
-      (s, dir) => graft.pipeline.Mixing.sourceMix(
-          Tables.documents(s, dir).select("doc_id", "source"),
-          "doc_id", "source", MixWeights, MixDefaultWeight)
-        .orderBy("doc_id", "copy"),
-      Some(sourceMixOracleSql)),
+    sourceMix.batch,
 
     // temperature-scaled mixing (α = 1/2): weights DERIVED from corpus
     // counts instead of configured — the multilingual temperature-
@@ -7428,12 +7449,7 @@ object PipelineQueries {
     // portable log's floor, its mean xent dwarfs the corpus mean, and
     // the tilt visibly flips the mixture toward the rare hard source
     // (α_wiki ≈ 0.53 vs its 10% corpus share at sf0.01).
-    Q("pipeline_doremi_mix",
-      (s, dir) => graft.pipeline.Mixing.sourceMix(
-          doremiPlant(Tables.documents(s, dir)).select("doc_id", "source"),
-          "doc_id", "source", doremiWeightTable(s, dir), defaultWeight = 0.0)
-        .orderBy("doc_id", "copy"),
-      Some(doremiMixOracleSql)),
+    doremiMix.batch,
 
     // DATA-BUDGET epoch planning (Muennighoff et al. 2023, scaling
     // data-constrained LMs) — the pre-launch mixture question: at a

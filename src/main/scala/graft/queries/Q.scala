@@ -1,6 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import graft.Tables
+import graft.streaming.{StreamRun, StreamSources}
 
 /** One verifiable operator query: a Spark implementation plus (where the
   * semantics are ANSI-SQL-expressible) an exact DuckDB oracle. The driver
@@ -39,4 +42,31 @@ object Q {
     */
   val DocsRef = "read_parquet('{SFDIR}/documents.parquet')"
   val EmbRef = "read_parquet('{SFDIR}/embeddings.parquet')"
+}
+
+/** A row whose operator is stateless, or a complete-mode aggregation,
+  * over one input relation — defined once. [[batch]] applies it to the
+  * batch table; [[stream]] applies it to the file stream of the same
+  * table and runs it to completion in `streamMode`. Both add the same
+  * orderBy and carry the same oracle, so the twins cannot drift apart.
+  */
+final case class Twin(name: String, input: Twin.Input, streamMode: String,
+    order: Seq[String], oracle: Option[String])(
+    op: (SparkSession, String, DataFrame) => DataFrame) {
+  def batch: Q = Q(name,
+    (s, dir) => op(s, dir, input.batch(s, dir)).orderBy(order.map(col): _*),
+    oracle)
+  def stream: Q = Q(s"stream_$name",
+    (s, dir) => StreamRun.toBatch(op(s, dir, input.stream(s, dir)), streamMode,
+      numPartitions = 4)(s).orderBy(order.map(col): _*),
+    oracle)
+}
+
+object Twin {
+  /** One relation as both engines read it: the batch table and its file
+    * stream. */
+  final case class Input(batch: (SparkSession, String) => DataFrame,
+      stream: (SparkSession, String) => DataFrame)
+  val Documents: Input = Input(Tables.documents(_, _), StreamSources.documents)
+  val Events: Input = Input(Tables.events(_, _), StreamSources.events)
 }

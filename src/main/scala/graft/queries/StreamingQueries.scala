@@ -1,35 +1,43 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
+import graft.{Caches, Tables}
+import graft.dedup.{Dedup, IndexStore}
+import graft.functions.GraftFunctions.{dot, hash60, tokens, wordGrams, wordShingles}
+import graft.functions.expressions.{BloomMightContainLong, MinHashSigs, SimHashSig, SortedJaccard}
+import graft.pipeline.{Mixing, ModelStore}
+import graft.similarity.Similarity
 import graft.streaming.{KSlack, KsIn, KsInT, StatefulOps, StreamRun, StreamSources}
+import graft.text.{NgramLm, QualityClassifier}
 
 /** Operators executed through the *streaming* engine (Structured
-  * Streaming, Trigger.AvailableNow) but verified against the same DuckDB
-  * oracles as their batch twins — proving the streaming machinery computes
-  * the reference semantics, not just the batch renderings.
+  * Streaming, Trigger.AvailableNow) and verified against the same DuckDB
+  * oracles as their batch twins, so the streaming machinery is shown to
+  * compute the reference semantics. Each shared plan is defined once, and
+  * most rows take one of three shapes:
   *
-  *  - stream_win_tb_tumbling: real `window()` event-time aggregation
-  *    (complete mode);
-  *  - stream_reduce_rolling: flatMapGroupsWithState per-input emission
-  *    (reference Reduce, wf/reduce.hpp:139-158);
-  *  - stream_win_cb_tumbling: count-based windows in keyed state
-  *    (wf/window_structure.hpp Triggerer_CB semantics, EOS flush included);
-  *  - stream_interval_join: watermarked stream-stream join with the
-  *    interval condition (wf/interval_join.hpp:279-307).
+  *  - a stateless or complete-mode twin: the batch row's operator is a
+  *    [[Twin]] over its input relation, and the `stream_*` row is
+  *    `Twin.stream` — the same operator over the file stream of the same
+  *    table, with the same orderBy and oracle;
+  *  - an ingress-window row: per-row stages and stream-static probes, then
+  *    one per-key aggregation on the 1-hour ingress-time window, run in
+  *    update mode with exactly one data batch ([[ingressWindow]]);
+  *  - an incremental index family (span, semantic, MinHash, n-gram,
+  *    SimHash, pHash, Bloom, CCNet buckets): one index builder and one
+  *    probe per family, so the inline, `_loaded` and `_appended` rows
+  *    differ only in where the index relation comes from — built inline,
+  *    committed once and loaded ([[servedIndex]]), or appended to a
+  *    committed generation.
+  *
+  * Bespoke plans remain where the streaming semantics differ: append-mode
+  * watermark eviction (the EOS-punctuated `*_append` builders at the end),
+  * TTL, KSlack, the FlatFAT operators and the joins.
   */
 object StreamingQueries {
-
-  /** A file-stream micro-batch arrives in as few partitions as it has
-    * files (often ONE), so heavy per-row column stages upstream of the
-    * first exchange run single-threaded without an explicit stateless
-    * shuffle — the streaming-BM25 fix (103 s → 12.5 s at sf0.1).
-    * Applied ONLY where the sweep measured a win (the shingling row:
-    * 10.6 s → 6.4 s); the model-serving rows were re-measured flat or
-    * worse — their cost is the offline training side, and an exchange
-    * that buys nothing is itself a scale defect.
-    */
-  private def fanOut(df: DataFrame): DataFrame = df.repartition(32)
 
   /** stream_gen_source's synthetic-events generator, hoisted to ONE
     * instance per process so [[graft.sources.GeneratorSource]]'s
@@ -57,60 +65,141 @@ object StreamingQueries {
       })
   }
 
-  /** dHash 4×15-bit band relation of a (doc_id, text) media archive —
-    * the persisted media index's rows: (a_id, da, band, bkey). Per-media
-    * rows, so a disjoint increment appends by plain union. */
-  private def phashBandFrame(s: SparkSession, docs: DataFrame): DataFrame = {
-    import s.implicits._
-    graft.multimodal.Media.dhashStub(graft.multimodal.Media.fromText(
-      docs, "doc_id", "text").as[graft.multimodal.Media.MediaRow])(s)
-      .select(col("media_id").as("a_id"), col("dhash").as("da"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("bkey",
-        expr("shiftright(da, CAST(band * 15 AS INT)) & 32767"))
-  }
+  // ---- the ingress-time window ----
 
-  /** The stream_multimodal_phash ingest probe against an EXPLICIT static
-    * band relation — shared by the inline, loaded and appended rows so
-    * the three can only differ in where the index came from. */
-  private def phashProbe(s: SparkSession, dir: String,
-      archive: DataFrame): DataFrame = {
-    import s.implicits._
-    val incomingMedia = graft.multimodal.Media.fromText(
-      StreamSources.documents(s, dir)
-        .filter(pmod(col("doc_id"), lit(16)) === 0)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"),
-          concat(lit("zzz"), expr("substring(text, 4)")).as("text")),
-      "doc_id", "text").as[graft.multimodal.Media.MediaRow]
-    graft.multimodal.Media.dhashStub(incomingMedia)(s)
-      .select(col("media_id"), col("dhash").as("db"),
-        explode(sequence(lit(0), lit(3))).as("band"))
-      .withColumn("bkey",
-        expr("shiftright(db, CAST(band * 15 AS INT)) & 32767"))
-      .withColumn("event_time", current_timestamp())
+  /** Stamps arrival time as `event_time` under the 1-hour ingress
+    * watermark — one policy for every ingest row that keeps per-key
+    * state: the state evicts one watermark delay after ingest. */
+  private def ingress(df: DataFrame): DataFrame =
+    df.withColumn("event_time", current_timestamp())
       .withWatermark("event_time", "1 hour")
-      .join(archive, Seq("band", "bkey"))
-      .withColumn("hamming", expr("CAST(bit_count(db ^ da) AS INT)"))
-      .filter(col("hamming") <= lit(PipelineQueries.PhashMaxHamming))
-      .groupBy(window(col("event_time"), "1 hour"), col("media_id"))
-      .agg(min(col("a_id")).as("rep_id"), min(col("hamming")).as("h_min"))
-      .select("media_id", "rep_id", "h_min")
+
+  /** The ingress-window run: stamps `in` ([[ingress]]), applies `probe`
+    * (stream-static joins and per-row filters), groups by the 1-hour
+    * window and `keys`, and runs `agg` (the aggregation plus any
+    * stateless tail) in update mode. A key's rows arrive in one
+    * micro-batch (rows never split) and exactly one data batch is
+    * asserted, so each key emits once and the batch oracle applies
+    * verbatim; the trailing no-data batch is skipped, since watermark
+    * eviction emits nothing in update mode. */
+  private def ingressWindow(in: DataFrame, keys: String*)(
+      agg: RelationalGroupedDataset => DataFrame,
+      probe: DataFrame => DataFrame = identity)(
+      implicit s: SparkSession): DataFrame =
+    StreamRun.toBatch(
+      agg(probe(ingress(in))
+        .groupBy(window(col("event_time"), "1 hour") +: keys.map(col): _*)),
+      "update", numPartitions = 4, requireSingleDataBatch = true,
+      noDataBatch = false)
+
+  // ---- index plumbing shared by the incremental families ----
+
+  /** The documents with doc_id % 4 = 0: the "existing training set" the
+    * incremental probes index. */
+  private def trainingSlice(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(4)) === 0)
+
+  /** An index built in this run, each relation cached: built once, not
+    * once per trigger. */
+  private def cachedIndex(rels: Seq[(String, DataFrame)]): Map[String, DataFrame] =
+    rels.map { case (n, df) => n -> Caches.track(df) }.toMap
+
+  /** An index committed under `root` on first use (the serve-root
+    * ensure-memo: the nightly build, untimed in bench) and then LOADED,
+    * each relation cached. A `_loaded` row shares its inline twin's
+    * oracle, so it is green only if the round trip is value-exact. */
+  private def servedIndex(s: SparkSession, root: String, names: String*)(
+      build: => Seq[(String, DataFrame)]): Map[String, DataFrame] = {
+    ModelStore.ensure(s, root, build)
+    names.map(n => n -> Caches.track(ModelStore.loadRelation(s, root, n))).toMap
   }
 
-  /** Semantic incremental-dedup oracle — shared by the inline and
-    * loaded twins (the trained-IVF replay over the %4 training slice,
-    * cross-joined members at cosine ≥ 0.4). */
-  private lazy val semanticIncrementalOracleSql: String = s"""
-        WITH ${PipelineQueries.ivfTrainedCtes(k = 16, iters = 2, nprobe = 1,
-          trainRel = "(SELECT * FROM e WHERE vec_id % 4 = 0)")},
-        p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-                     ${graft.oracle.DuckSql.cosine("a.v", "b.v")} AS cos
-              FROM cellF a JOIN cellF b
-                ON a.cell = b.cell AND a.vec_id < b.vec_id
-              WHERE a.vec_id % 4 = 0),
-        r AS (SELECT b_id AS vec_id, min(a_id) AS rep_id, count(*) AS n_near
-              FROM p WHERE cos >= 0.4e0 GROUP BY b_id)
-        SELECT vec_id, rep_id, n_near FROM r ORDER BY vec_id"""
+  /** The 4 × 15-bit bands of the 60-bit signature column `sig`: one
+    * (band, bkey) row per band — the SimHash and pHash candidate keys. */
+  private def withBands(df: DataFrame, sig: String): DataFrame =
+    df.withColumn("band", explode(sequence(lit(0), lit(3))))
+      .withColumn("bkey", expr(s"shiftright($sig, CAST(band * 15 AS INT)) & 32767"))
+
+  /** The hamming band probe of the SimHash and pHash families: each
+    * incoming (key, sig) row's bands equi-join the archive's
+    * (a_id, archiveSig, band, bkey) rows, a per-row bit_count xor
+    * verifies, and the ingress window keeps (rep_id = least a_id, h_min)
+    * per key — duplicate-insensitive, so multi-band collisions need no
+    * distinct-pair stage. */
+  private def hammingProbe(incoming: DataFrame, key: String, sig: String,
+      archive: DataFrame, archiveSig: String, maxHamming: Int)(
+      implicit s: SparkSession): DataFrame =
+    ingressWindow(withBands(incoming, sig), key)(
+      probe = _.join(archive, Seq("band", "bkey"))
+        .withColumn("hamming", expr(s"CAST(bit_count($sig ^ $archiveSig) AS INT)"))
+        .filter(col("hamming") <= maxHamming),
+      agg = _.agg(min(col("a_id")).as("rep_id"), min(col("hamming")).as("h_min"))
+        .select(key, "rep_id", "h_min"))
+      .orderBy(key)
+
+  /** The near-dup verify-and-flag tail of the MinHash, n-gram and
+    * CDC-chunk probes: `candidates` joins each stamped (keys…, sh_b) row
+    * to index rows carrying a_id, those join the (a_id, sh_a) verify
+    * arrays, and the fused native SortedJaccard judges each pair on the
+    * carried SORTED shingle arrays (distinct string grams — the
+    * |A∩B|/|A∪B| the oracle computes, so a gram-hash collision cannot
+    * skew it). Per key the ingress window keeps rep_id = the least a_id at
+    * Jaccard ≥ 0.6 and j_max, then `out` selects. The threshold sits
+    * INSIDE the aggregation (min/max over `when(j ≥ τ)`), not in a row
+    * filter: a filter pushes into the join condition, where Catalyst
+    * inlines the verify several times (measured 24 s → ~7 s at sf0.1).
+    * min/max are duplicate-insensitive, so multi-band or multi-gram
+    * collisions need no distinct-pair stage (a second streaming
+    * aggregation); keys whose candidates all miss the threshold get a
+    * NULL rep_id and drop in the stateless post-aggregation filter. */
+  private def jaccardFlags(incoming: DataFrame, keys: Seq[String],
+      candidates: DataFrame => DataFrame, verify: DataFrame)(
+      out: DataFrame => DataFrame)(implicit s: SparkSession): DataFrame =
+    ingressWindow(incoming, keys: _*)(
+      probe = in => candidates(in).join(verify, Seq("a_id"))
+        .select((Seq(col("event_time")) ++ keys.map(col) ++ Seq(col("a_id"),
+          SortedJaccard.of(col("sh_b"), col("sh_a")).as("jaccard"))): _*),
+      agg = g => out(g
+        .agg(min(when(col("jaccard") >= 0.6, col("a_id"))).as("rep_id"),
+          max(when(col("jaccard") >= 0.6, col("jaccard"))).as("j_max"))
+        .filter(col("rep_id").isNotNull)))
+
+  /** The doc-level flag columns of the near-dup probes. */
+  private val DocFlags: DataFrame => DataFrame = _.select("doc_id", "rep_id", "j_max")
+
+  /** (a_id, sh_a): a training slice's sorted 3-shingle arrays — the
+    * exact-verify side of the MinHash and n-gram indexes. */
+  private def verifyArrays(train: DataFrame): DataFrame =
+    train.select(col("doc_id").as("a_id"), sort_array(wordShingles(col("text"), 3)).as("sh_a"))
+
+  /** (doc_id, sh_b): incoming documents' sorted 3-shingle arrays. Sorting
+    * is once per document; min-hash signatures are order-free, so the
+    * sorted array feeds them unchanged. */
+  private def docShingles(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
+
+  // ---- span ----
+
+  /** The span index of a training slice: k-token span → least owning
+    * doc_id (first_id). Keep-first is a commutative monoid, so an
+    * increment folds in by union + re-min. */
+  private def spanIndex(train: DataFrame): DataFrame =
+    Dedup.shingles(train, "doc_id", "text", PipelineQueries.SpanDedupK)
+      .groupBy(col("gram")).agg(min(col("doc_id")).as("first_id"))
+
+  /** The span probe: each incoming doc's spans equi-join the index, and a
+    * doc sharing ANY span flags with (rep_id = earliest owner,
+    * n_known_spans). */
+  private def spanProbe(s: SparkSession, dir: String, idx: DataFrame): DataFrame = {
+    implicit val sp = s
+    ingressWindow(StreamSources.documents(s, dir).select(col("doc_id"),
+        explode(wordShingles(col("text"), PipelineQueries.SpanDedupK)).as("gram")),
+      "doc_id")(
+      probe = _.join(idx, "gram"),
+      agg = _.agg(min(col("first_id")).as("rep_id"), count(lit(1)).as("n_known_spans"))
+        .select("doc_id", "rep_id", "n_known_spans"))
+      .orderBy("doc_id")
+  }
 
   /** Span-dedup incremental oracle, parameterized by the index-side
     * predicate — shared by the inline, loaded, and appended twins (the
@@ -128,6 +217,347 @@ object StreamingQueries {
                      count(*) AS n_known_spans
               FROM g JOIN idx USING (gram) GROUP BY g.doc_id)
         SELECT doc_id, rep_id, n_known_spans FROM r ORDER BY doc_id"""
+
+  // ---- semantic ----
+
+  /** The embeddings with vec_id % 4 = 0: the semantic family's training
+    * set. */
+  private def semanticTrainSet(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir).filter(pmod(col("vec_id"), lit(4)) === 0)
+
+  /** Centroids trained on `train` by the same quantized Lloyd iterations
+    * as the batch rows. */
+  private def semanticCentroids(train: DataFrame): DataFrame =
+    Similarity.kmeansCentroidsQuantized(train, "vec_id", "embedding", k = 16, iters = 2)
+
+  /** A slice's IVF cell members under `cents`: (cell, a_id, va, na = ‖va‖).
+    * Assignment is pointwise, so a member table appends by plain union. */
+  private def semanticMembers(slice: DataFrame, cents: DataFrame): DataFrame =
+    Similarity.ivfAssignWith(slice, "vec_id", "embedding", cents)
+      .select(col("cell"), col("vec_id").as("a_id"), col("embedding").as("va"),
+        sqrt(dot(col("embedding"), col("embedding"))).as("na"))
+
+  /** The semantic probe: each incoming vector takes its cell by the
+    * zero-shuffle literal argmax (pure column work — streams unchanged)
+    * and compares against the cell's static members at cosine ≥ 0.4;
+    * flagged vectors emit (vec_id, rep_id = least earlier member,
+    * n_near). */
+  private def semanticProbe(s: SparkSession, dir: String, cents: DataFrame,
+      members: DataFrame): DataFrame = {
+    implicit val sp = s
+    val incoming = Similarity.ivfAssignWith(
+        StreamSources.embeddings(s, dir), "vec_id", "embedding", cents)
+      .select(col("cell"), col("vec_id"), col("embedding").as("vb"),
+        sqrt(dot(col("embedding"), col("embedding"))).as("nb"))
+    ingressWindow(incoming, "vec_id")(
+      probe = _.join(members, Seq("cell"))
+        .filter(col("a_id") < col("vec_id"))
+        .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
+        .filter(col("cos") >= 0.4),
+      agg = _.agg(min(col("a_id")).as("rep_id"), count(lit(1)).as("n_near"))
+        .select("vec_id", "rep_id", "n_near"))
+      .orderBy("vec_id")
+  }
+
+  /** Semantic incremental-dedup oracle — shared by the inline, loaded and
+    * appended twins (the trained-IVF replay over the %4 training slice,
+    * cross-joined members at cosine ≥ 0.4). */
+  private lazy val semanticIncrementalOracleSql: String = s"""
+        WITH ${PipelineQueries.ivfTrainedCtes(k = 16, iters = 2, nprobe = 1,
+          trainRel = "(SELECT * FROM e WHERE vec_id % 4 = 0)")},
+        p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+                     ${graft.oracle.DuckSql.cosine("a.v", "b.v")} AS cos
+              FROM cellF a JOIN cellF b
+                ON a.cell = b.cell AND a.vec_id < b.vec_id
+              WHERE a.vec_id % 4 = 0),
+        r AS (SELECT b_id AS vec_id, min(a_id) AS rep_id, count(*) AS n_near
+              FROM p WHERE cos >= 0.4e0 GROUP BY b_id)
+        SELECT vec_id, rep_id, n_near FROM r ORDER BY vec_id"""
+
+  // ---- MinHash ----
+
+  /** The MinHash-LSH index of a training slice: its (a_id, band, bandsig)
+    * band table (12 signatures, 3 per band) and its verify arrays — both
+    * per-document rows, so a disjoint increment appends by union. */
+  private def minhashIndex(train: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "bands" -> Dedup.lshBands(
+      Dedup.minhashSignatures(
+        train.select(col("doc_id"),
+          transform(wordShingles(col("text"), 3), g => hash60(g)).as("hs")),
+        "doc_id", 12),
+      "doc_id", 3)
+      .select(col("doc_id").as("a_id"), col("band"), col("bandsig")),
+    "verify" -> verifyArrays(train))
+
+  /** The MinHash band probe: each incoming (keys…, sh_b) row computes its
+    * signatures and band signatures as PURE COLUMN work (the native
+    * MinHashSigs kernel and the stream-safe lshBandsColumn — no groupBy,
+    * so the band stage needs no streaming-aggregation state), explodes to
+    * (band, bandsig) rows, equi-joins the static band table for
+    * candidates and flags through [[jaccardFlags]]. Carrying the shingle
+    * arrays through the ×4 band explode costs payload; re-joining the raw
+    * stream by id after the candidates would cost a stateful join. */
+  private def minhashProbe(incoming: DataFrame, keys: Seq[String],
+      ix: Map[String, DataFrame])(out: DataFrame => DataFrame)(
+      implicit s: SparkSession): DataFrame =
+    jaccardFlags(
+      incoming
+        .withColumn("sigs", MinHashSigs.of(transform(col("sh_b"), g => hash60(g)), 12))
+        .withColumn("bb", explode(Dedup.lshBandsColumn(col("sigs"), 12, 3)))
+        .select((keys.map(col) ++ Seq(col("sh_b"),
+          col("bb.band").as("band"), col("bb.bandsig").as("bandsig"))): _*),
+      keys, _.join(ix("bands"), Seq("band", "bandsig")), ix("verify"))(out)
+
+  /** The split-leakage rows' train side (the first 80% of the id-hash
+    * split) and their eval-side predicate: both plain filters on a pure
+    * id hash. */
+  private def leakSides(s: SparkSession, dir: String): (DataFrame, Column) = {
+    val thr = Mixing.splitThresholds(Seq(("train", 80), ("eval", 20))).head._2
+    (Tables.documents(s, dir).filter(Mixing.mixHash("doc_id") < lit(thr)),
+      Mixing.mixHash("doc_id") >= lit(thr))
+  }
+
+  // ---- n-gram ----
+
+  /** The n-gram index of a training slice: the df-capped inverted index
+    * (a_id, gh) and the verify arrays. The index keys on the 60-bit gram
+    * DIGEST, not the gram string: gram text never enters the probe join's
+    * shuffle or the index (int64 keys end to end). That is safe because
+    * candidates only GATE the exact SortedJaccard verify (a digest
+    * collision adds a candidate the verify then judges on the true
+    * arrays), and the oracle hashes identically. Grams in more than 100
+    * documents never index, so a boilerplate gram costs nothing at the
+    * join; the cap counts digests, the column the index stores. */
+  private def ngramIndex(train: DataFrame): Seq[(String, DataFrame)] = Seq(
+    "grams" -> Dedup.shingles(train, "doc_id", "text", 3)
+      .select(col("doc_id").as("a_id"), hash60(col("gram")).as("gh"))
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy("gh")))
+      .filter(col("__df") <= 100)
+      .drop("__df"),
+    "verify" -> verifyArrays(train))
+
+  /** The n-gram probe: each incoming doc explodes its gram digests (pure
+    * column work) and probes the inverted index for candidates. A
+    * file-stream micro-batch arrives in as few partitions as it has files
+    * (often ONE), so the heavy shingling would run single-threaded: a
+    * stateless shuffle to the session's parallelism spreads it first
+    * (10.6 s → 6.4 s at sf0.1). The STATIC index sides are broadcast
+    * explicitly: a micro-batch's stream side has no usable size
+    * statistic, and left alone the planner broadcast the exploded gram
+    * stream — 118× the doc count, each row carrying its doc's shingle
+    * array — while the df-capped index sat on the probe side (measured
+    * 6.5 s/batch; hinted, the stream never leaves its partitions). */
+  private def ngramProbe(s: SparkSession, dir: String,
+      ix: Map[String, DataFrame]): DataFrame = {
+    implicit val sp = s
+    val incoming = docShingles(
+        StreamSources.documents(s, dir).repartition(s.sparkContext.defaultParallelism))
+      .select(col("doc_id"), col("sh_b"), explode(col("sh_b")).as("gram"))
+      .select(col("doc_id"), col("sh_b"), hash60(col("gram")).as("gh"))
+    jaccardFlags(incoming, Seq("doc_id"),
+      _.join(broadcast(ix("grams")), Seq("gh")), broadcast(ix("verify")))(DocFlags)
+      .orderBy("doc_id")
+  }
+
+  // ---- SimHash and pHash ----
+
+  /** The SimHash band index of a training slice: (a_id, sh_a, band, bkey). */
+  private def simhashBands(train: DataFrame): DataFrame =
+    withBands(Dedup.simhash(train, "doc_id", "text")
+      .select(col("doc_id").as("a_id"), col("simhash").as("sh_a")), "sh_a")
+
+  /** The SimHash probe: each incoming doc reduces to ONE int64 signature
+    * via the native single-pass SimHashSig kernel (pure column work — the
+    * signature never leaves its row) and probes the bands at hamming
+    * ≤ 10. */
+  private def simhashProbe(s: SparkSession, dir: String, bands: DataFrame): DataFrame = {
+    implicit val sp = s
+    hammingProbe(StreamSources.documents(s, dir)
+        .select(col("doc_id"), transform(tokens(col("text")), t => hash60(t)).as("hs"))
+        .filter(size(col("hs")) > 0)
+        .select(col("doc_id"), SimHashSig.of(col("hs")).as("sh_b")),
+      "doc_id", "sh_b", bands, "sh_a", 10)
+  }
+
+  /** dHash 4×15-bit band relation of a (doc_id, text) media archive —
+    * the persisted media index's rows: (a_id, da, band, bkey). Per-media
+    * rows, so a disjoint increment appends by plain union. */
+  private def phashBandFrame(s: SparkSession, docs: DataFrame): DataFrame = {
+    import s.implicits._
+    withBands(graft.multimodal.Media.dhashStub(graft.multimodal.Media.fromText(
+        docs, "doc_id", "text").as[graft.multimodal.Media.MediaRow])(s)
+      .select(col("media_id").as("a_id"), col("dhash").as("da")), "da")
+  }
+
+  /** The stream_multimodal_phash ingest probe against an EXPLICIT static
+    * band relation — shared by the inline, loaded and appended rows so
+    * the three can only differ in where the index came from. */
+  private def phashProbe(s: SparkSession, dir: String,
+      archive: DataFrame): DataFrame = {
+    implicit val sp = s
+    import s.implicits._
+    val incomingMedia = graft.multimodal.Media.fromText(
+      StreamSources.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(16)) === 0)
+        .select((col("doc_id") + lit(1000000L)).as("doc_id"),
+          concat(lit("zzz"), expr("substring(text, 4)")).as("text")),
+      "doc_id", "text").as[graft.multimodal.Media.MediaRow]
+    hammingProbe(graft.multimodal.Media.dhashStub(incomingMedia)(s)
+        .select(col("media_id"), col("dhash").as("db")),
+      "media_id", "db", archive, "da", PipelineQueries.PhashMaxHamming)
+  }
+
+  // ---- Bloom ----
+
+  /** The training digests the Bloom family indexes: distinct md5 of the
+    * %8-planted texts of the training slice. */
+  private def bloomDigests(s: SparkSession, dir: String): DataFrame =
+    trainingSlice(s, dir).withColumn("text", PipelineQueries.bloomPlantText)
+      .select(md5(col("text")).as("tdg")).distinct()
+
+  /** A 1%-fpp filter over `digests` sized for `n` items. */
+  private def bloomOf(digests: DataFrame, n: Long): BloomFilter =
+    Dedup.buildBloom(digests, hash60(col("tdg")), n, 0.01)
+
+  /** The Bloom probe: each incoming document tests the broadcast filter
+    * as a pure column predicate, and the exact verify rides the SAME
+    * stream-static left join by nulling the join key for bloom-negatives
+    * — a null key never matches and skips the hash probe, so the
+    * genuinely-new majority costs one bit-array read per row while the
+    * flag stays EXACT (md5 equality decides; the filter only prunes). One
+    * scan, no join state, no watermark. The digest side is cached but NOT
+    * force-broadcast: at training-set scale the planner's shuffle-side
+    * join is the honest fallback. */
+  private def bloomProbe(s: SparkSession, dir: String, bf: BloomFilter,
+      digests: DataFrame): DataFrame = {
+    implicit val sp = s
+    val bc = s.sparkContext.broadcast(bf)
+    val probed = StreamSources.documents(s, dir)
+      .filter(pmod(col("doc_id"), lit(4)) =!= 0)
+      .withColumn("text", PipelineQueries.bloomPlantText)
+      .select(col("doc_id"), md5(col("text")).as("dg"))
+      .withColumn("pos", BloomMightContainLong.of(bc, hash60(col("dg"))))
+    val flagged = probed
+      .join(digests, when(col("pos"), col("dg")) === col("tdg"), "left")
+      .select(col("doc_id"), col("tdg").isNotNull.cast("int").as("in_training"))
+    StreamRun.toBatch(flagged, "append", numPartitions = 4).orderBy("doc_id")
+  }
+
+  /** Content-defined chunks of a (doc_id, text) frame at the corpus mask. */
+  private def cdcChunks(docs: DataFrame): DataFrame =
+    graft.pipeline.Chunking.cdcChunks(docs, "doc_id", "text", mask = PipelineQueries.CdcMask)
+
+  // ---- the LM ingest rows and CCNet buckets ----
+
+  /** (doc_id, bigram): a document frame exploded to its bigrams. */
+  private def bigrams(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(wordGrams(col("text"), 2)).as("bigram"))
+
+  /** Per-token cross-entropy from a quantized log-prob sum and its count. */
+  private def xent(logpQ: String, n: String): Column =
+    (-col(logpQ)).cast("double") / (col(n).cast("double") * lit(NgramLm.Scale))
+
+  /** A bigram LM trained on the doc_id % 4 = 0 slice of `docs`. */
+  private def quarterLm(docs: DataFrame): NgramLm.Model =
+    NgramLm.train(docs.filter(pmod(col("doc_id"), lit(4)) === 0), "text")
+
+  /** The logistic quality classifier trained on `docs`, labelled doc_id % 6 = 0. */
+  private def classifierOn(docs: DataFrame): QualityClassifier.Model =
+    QualityClassifier.train(Caches.track(QualityClassifier.features(docs, "doc_id",
+      "text", (pmod(col("doc_id"), lit(6)) === 0).cast("int"))))
+
+  /** Per-doc LM scoring at ingestion: the LM-planted stream's bigrams go
+    * through `probe` (stream-static LEFT joins against the offline model
+    * — no join state; smoothing covers misses), and the per-doc sum rides
+    * the ingress window. Zero-bigram docs emit no rows (no exploded input
+    * → no aggregation state), hence the scored-docs-only oracles. */
+  private def lmScoreProbe(s: SparkSession, dir: String,
+      probe: DataFrame => DataFrame): DataFrame = {
+    implicit val sp = s
+    ingressWindow(bigrams(PipelineQueries.lmPlant(StreamSources.documents(s, dir))),
+      "doc_id")(
+      probe = probe,
+      agg = _.agg(count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
+        .select(col("doc_id"), col("n_bigrams"), col("lm_logp_q"),
+          xent("lm_logp_q", "n_bigrams").as("xent")))
+      .orderBy("doc_id")
+  }
+
+  /** The CCNet tertile bounds: the xent at ranks n/3 and 2n/3 of `docs`
+    * scored under `m` (−∞ where a rank does not exist). */
+  private def ccnetBounds(docs: DataFrame, m: NgramLm.Model): (Double, Double) = {
+    // cached: the count, the range-partition sampling and the prefix scan
+    // otherwise each re-run the scoring chain (two extra corpus scans at
+    // 100 TB)
+    val scored = Caches.track(
+      NgramLm.score(docs, "doc_id", "text", m).select(col("doc_id"), col("xent")))
+    val n = scored.count()
+    // both boundaries in ONE job over the prefix scan
+    val bs = graft.operators.PrefixSum.runningSum(
+        scored.withColumn("__one", lit(1L)), "__one", Seq("xent", "doc_id"))
+      .filter(col("running___one").isin(n / 3, 2 * n / 3))
+      .groupBy(col("running___one")).agg(min(col("xent")).as("x"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    (bs.getOrElse(n / 3, Double.NegativeInfinity),
+      bs.getOrElse(2 * n / 3, Double.NegativeInfinity))
+  }
+
+  /** The CCNet bucket probe: each streamed doc scores through the
+    * stream-static LM probe on the ingress window and lands head / middle
+    * / tail by two comparisons against the offline tertile bounds — global
+    * scalars (Left), or a per-source (source, t1, t2) table (Right), which
+    * rides as a broadcast after the streamed doc picks up its source. A
+    * tie at a bound takes the better bucket with its whole class (≤: a
+    * threshold keeps a tie class together where the rank split it;
+    * pinned in the oracles). */
+  private def ccnetProbe(s: SparkSession, dir: String, m: NgramLm.Model,
+      bounds: Either[(Double, Double), DataFrame]): DataFrame = {
+    implicit val sp = s
+    val docs = PipelineQueries.lmPlant(StreamSources.documents(s, dir))
+    val (src, t1, t2, incoming) = bounds match {
+      case Left((a, b)) => (Nil, lit(a), lit(b), docs)
+      case Right(_) => (Seq("source"), col("t1"), col("t2"), docs.join(
+        broadcast(Caches.track(Tables.documents(s, dir).select("doc_id", "source"))),
+        "doc_id"))
+    }
+    ingressWindow(incoming.select((Seq(col("doc_id")) ++ src.map(col) :+
+        explode(wordGrams(col("text"), 2)).as("bigram")): _*), "doc_id")(
+      probe = NgramLm.probeQq(_, m, fitsBroadcast = true),
+      agg = g => {
+        val aggs = src.map(c => min(col(c)).as(c)) ++
+          Seq(count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
+        val scored = g.agg(aggs.head, aggs.tail: _*)
+          .select((Seq(col("doc_id")) ++ src.map(col) :+
+            xent("lm_logp_q", "n_bigrams").as("xent")): _*)
+        bounds.fold(_ => scored, b => scored.join(broadcast(b), "source"))
+          .select((Seq(col("doc_id")) ++ src.map(col) ++ Seq(col("xent"),
+            when(col("xent") <= t1, "head").when(col("xent") <= t2, "middle")
+              .otherwise("tail").as("ppl_bucket"))): _*)
+      })
+      .orderBy("doc_id")
+  }
+
+  /** The model-era composites' tail: resample the kept (doc_id, source)
+    * rows under `weights`, then the hash split. */
+  private def mixAndSplit(kept: DataFrame, weights: Seq[(String, Double)]): DataFrame =
+    Mixing.hashSplit(
+      Mixing.sourceMix(kept.select("doc_id", "source"), "doc_id", "source", weights,
+        defaultWeight = 0.0),
+      "doc_id", PipelineQueries.SplitSpec)
+      .select("doc_id", "source", "copy", "split")
+
+  /** A frozen merge table applied to the stream as a chain of R
+    * broadcast-literal rewrites — pure per-row column work, no shuffle,
+    * no state; the plan never changes shape with R. */
+  private def mergesApplied(s: SparkSession, dir: String,
+      merges: Seq[graft.text.Bpe.Merge], outCol: String): DataFrame = {
+    implicit val sp = s
+    val out = StreamSources.documents(s, dir)
+      .select(col("doc_id"), graft.text.Bpe.applyMerges(col("text"), merges).as("s"))
+      .select(col("doc_id"), size(tokens(col("s"))).cast("int").as("n_symbols"),
+        col("s").as(outCol))
+    StreamRun.toBatch(out, "append", numPartitions = 4).orderBy("doc_id")
+  }
 
   /** The streaming frames of the EOS-punctuated (append / watermark-
     * evicting) queries, exposed pre-`StreamRun.toBatch` so the spec can
@@ -323,25 +753,9 @@ object StreamingQueries {
       Some(WindowQueries.winCbHoppingOracleSql)),
 
     // TB hopping with gaps (len 10m < slide 30m): Spark's window() requires
-    // slide ≤ len, so the hop membership is the same explode rendering as
-    // the batch twin, run through the streaming engine in complete mode
-    Q("stream_win_tb_hopping",
-      (s, dir) => {
-        implicit val sp = s
-        val M10 = 10L * Q.MinuteUs
-        val M30 = 30L * Q.MinuteUs
-        val agg = StreamSources.events(s, dir)
-          .select(col("event_type"), expr(Q.TsUsSpark).as("ts_us"), col("value"))
-          .withColumn("wmin", expr(s"(ts_us - $M10) div $M30 + 1"))
-          .withColumn("wmax", expr(s"ts_us div $M30"))
-          .withColumn("w", explode(expr("CASE WHEN wmin <= wmax THEN sequence(wmin, wmax) END")))
-          .select(col("event_type"), expr(s"w * $M30").as("win_start_us"), col("value"))
-          .groupBy("event_type", "win_start_us")
-          .agg(count(lit(1)).as("cnt"),
-            expr("CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE)").as("sum_value"))
-        StreamRun.toBatch(agg, "complete").orderBy("event_type", "win_start_us")
-      },
-      Some(WindowQueries.winTbHoppingOracleSql)),
+    // slide ≤ len, so the hop membership is the batch twin's explode
+    // rendering, run through the streaming engine in complete mode
+    WindowQueries.hopping.stream,
 
     // session windows through the streaming engine: Spark's native
     // session_window state merging, complete mode (EOS flush emits every
@@ -419,34 +833,23 @@ object StreamingQueries {
 
     // the SALTED (sub-key DP-mode) flavor of the ffat append twin at
     // S = 4, through the full gate: rows group by (key, hash mod 4), each
-    // salt fires partial window answers exactly once on watermark, and
-    // the final merge is a narrow stateless groupBy(sum/sum/min/max) over
-    // ≤ 4 rows per window — chained in the same query, which needs the
-    // checkCorrectness flag off (the merge agg carries no event-time
-    // column, so the flagged late-row-discard mode cannot occur; the
-    // flag is query-global, hence set only around this bounded run and
-    // restored — see the slidingWindowsFfatAppend scaladoc blast-radius
-    // note). Values are identical to the unsalted twin by construction
+    // salt fires its partial window answers exactly once on watermark
+    // into an append sink, and a batch groupBy over the sink's rows merges
+    // the ≤ 4 partials per window (sum/sum/min/max) — the separate
+    // sink/source hop the slidingWindowsFfatAppend scaladoc recommends, so
+    // the query keeps Spark's checkCorrectness guard and no session conf
+    // changes. Values are identical to the unsalted twin by construction
     // (lift/comb associativity), so the oracle is shared with the batch
-    // FlatFAT row. COMPLETE output mode here is the bounded-run ORACLE
-    // rendering only — complete mode retains every window group forever,
-    // so a continuous deployment must chain the append-mode merge the
-    // slidingWindowsFfatAppend scaladoc describes (each window's ≤ S salt
-    // partials merge once, after all salts have fired, and are dropped).
+    // FlatFAT row. The chained in-query merge stays covered by
+    // StatefulStreamingSpec at S ∈ {1, 4}.
     Q("stream_win_tb_sliding_ffat_salted",
       (s, dir) => {
         implicit val sp = s
-        val conf = "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
-        val prev = s.conf.get(conf)
-        s.conf.set(conf, "false")
-        try {
-          val merged = ffatAppendStream(s, dir, salts = 4)
-            .groupBy("event_type", "win_start_us")
-            .agg(sum("cnt").as("cnt"), sum("sum_cents").as("sum_cents"),
-              min("min_cents").as("min_cents"), max("max_cents").as("max_cents"))
-          StreamRun.toBatch(merged, "complete", numPartitions = 4)
-            .orderBy("event_type", "win_start_us")
-        } finally s.conf.set(conf, prev)
+        StreamRun.toBatch(ffatAppendStream(s, dir, salts = 4), "append", numPartitions = 4)
+          .groupBy("event_type", "win_start_us")
+          .agg(sum("cnt").as("cnt"), sum("sum_cents").as("sum_cents"),
+            min("min_cents").as("min_cents"), max("max_cents").as("max_cents"))
+          .orderBy("event_type", "win_start_us")
       },
       Some(WindowQueries.winTbSlidingFfatOracleSql)),
 
@@ -471,16 +874,14 @@ object StreamingQueries {
         // fences (guide §4.4): per MICRO-BATCH the gate filter would
         // otherwise re-evaluate every kernel inside the pushed predicate
         val fence = graft.functions.expressions.Fence
-        val cleaned = red
+        val cleaned = ingress(red
           .select(md5(col("text")).as("digest"),
             q("n_tokens").as("n_tokens"),
             fence(q("quality_score")).as("quality_score"),
             fence(r("dup_gram2_ratio")).as("g2"),
             fence(r("top_token_ratio")).as("tt"))
           .filter(col("quality_score") >= 0.5 &&
-            col("g2") <= 0.05 && col("tt") <= 0.2)
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
+            col("g2") <= 0.05 && col("tt") <= 0.2))
           .dropDuplicatesWithinWatermark("digest")
           .select("digest", "n_tokens", "quality_score")
         StreamRun.toBatch(cleaned, "append", numPartitions = 4).orderBy("digest")
@@ -538,18 +939,16 @@ object StreamingQueries {
         // the static side of a stream-static join re-executes per
         // micro-batch; cache it so the benchmark gram probe over the
         // batch corpus runs once, not once per trigger
-        val contaminated = broadcast(graft.Caches.track(
-          graft.dedup.Dedup.contaminatedIds(
-            graft.Tables.documents(s, dir), "doc_id", "text",
+        val contaminated = broadcast(Caches.track(
+          Dedup.contaminatedIds(
+            Tables.documents(s, dir), "doc_id", "text",
             PipelineQueries.decontamBenchGrams(s, dir),
             PipelineQueries.DecontamN, PipelineQueries.DecontamMinShared))
           .withColumn("__contam", lit(1)))
-        val decontaminated = cleaned
+        val decontaminated = ingress(cleaned
           .join(contaminated, Seq("doc_id"), "left")
           .filter(col("__contam").isNull)
-          .select("digest", "n_tokens", "quality_score")
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
+          .select("digest", "n_tokens", "quality_score"))
           .dropDuplicatesWithinWatermark("digest")
           .select("digest", "n_tokens", "quality_score")
         StreamRun.toBatch(decontaminated, "append", numPartitions = 4)
@@ -589,50 +988,40 @@ object StreamingQueries {
     // chain) and the document stream is scored against it as a
     // stream-static broadcast join. Per-row stages (chrome plant, line
     // cleanup, ratio gate) run unchanged in the stream; the per-doc
-    // re-aggregation after the token explode is a watermarked
-    // ingress-time-window aggregation, so score state evicts one
-    // watermark delay after ingest — bounded, like the dedup state of
-    // the other ingestion pipelines. A doc's exploded tokens arrive in
-    // its own micro-batch (rows never split), and single-batch delivery
-    // is ASSERTED, so update-mode emits each doc exactly once and the
-    // oracle is the batch chain's, shared verbatim.
+    // re-aggregation after the token explode rides the ingress window,
+    // so score state evicts one watermark delay after ingest — bounded,
+    // like the dedup state of the other ingestion pipelines. The oracle
+    // is the batch chain's, shared verbatim.
     Q("stream_pipeline_clean_lines",
       (s, dir) => {
         implicit val sp = s
         val cleaned = PipelineQueries.lineCleanGated(StreamSources.documents(s, dir))
         // static side cached: the vocabulary build over the batch corpus
         // must run once, not once per trigger
-        val vocab = broadcast(graft.Caches.track(
+        val vocab = broadcast(Caches.track(
           graft.text.CorpusStats.vocabulary(
-            PipelineQueries.lineCleanGated(graft.Tables.documents(s, dir)),
+            PipelineQueries.lineCleanGated(Tables.documents(s, dir)),
             "doc_id", "text")))
-        val toks = cleaned
-          .select(col("doc_id"),
-            explode(graft.functions.GraftFunctions.tokens(col("text"))).as("token"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val scored = toks.join(vocab, "token")
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(count(lit(1)).as("n_tokens"), sum("df").as("sum_df"),
-            sum((col("df") === 1L).cast("long")).as("n_hapax"))
-          .select(col("doc_id"), col("n_tokens"),
-            (col("sum_df").cast("double") / col("n_tokens").cast("double"))
-              .as("mean_df"),
-            (col("n_hapax").cast("double") / col("n_tokens").cast("double"))
-              .as("hapax_ratio"))
-          .filter(col("hapax_ratio") <= 0.02)
-        StreamRun.toBatch(scored, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        ingressWindow(cleaned.select(col("doc_id"),
+            explode(tokens(col("text"))).as("token")), "doc_id")(
+          probe = _.join(vocab, "token"),
+          agg = _.agg(count(lit(1)).as("n_tokens"), sum("df").as("sum_df"),
+              sum((col("df") === 1L).cast("long")).as("n_hapax"))
+            .select(col("doc_id"), col("n_tokens"),
+              (col("sum_df").cast("double") / col("n_tokens").cast("double"))
+                .as("mean_df"),
+              (col("n_hapax").cast("double") / col("n_tokens").cast("double"))
+                .as("hapax_ratio"))
+            .filter(col("hapax_ratio") <= 0.02))
           .orderBy("doc_id")
       },
       Some(PipelineQueries.cleanLinesOracleSql)),
 
     // INCREMENTAL span dedup at ingestion — the "new data versus the
     // existing training set" shape every continuously-trained deployment
-    // needs: the existing corpus's k-token span index (span → min owner,
-    // here the doc_id % 4 == 0 subset standing in for "the training
-    // set") is a static relation probed by the incoming document stream;
-    // a stream doc that shares ANY span flags with the earliest known
+    // needs: the training slice's k-token span index (span → min owner)
+    // is a static relation probed by the incoming document stream; a
+    // stream doc that shares ANY span flags with the earliest known
     // owner. Emits ONLY flagged docs: (doc_id, rep_id, n_known_spans) —
     // 131 of 500 at sf0.01 (125 subset re-ingests + 6 genuine cross-set
     // near-dups). The index is cached (built once, not per trigger) but
@@ -640,67 +1029,20 @@ object StreamingQueries {
     // with corpus tokens, so at 100 TB the planner's shuffle-side join is
     // the honest fallback and per-trigger static-side cost is the price
     // of ingestion-time exactness (the batch alternative is periodic
-    // reconciliation via dedup_span_exact). Per-doc re-aggregation is
-    // the same watermarked ingress-window shape as the lines twin.
+    // reconciliation via dedup_span_exact).
     Q("stream_dedup_span",
-      (s, dir) => {
-        implicit val sp = s
-        val idx = graft.Caches.track(
-          graft.dedup.Dedup.shingles(
-            graft.Tables.documents(s, dir)
-              .filter(pmod(col("doc_id"), lit(4)) === 0),
-            "doc_id", "text", PipelineQueries.SpanDedupK)
-            .groupBy(col("gram")).agg(min(col("doc_id")).as("first_id")))
-        val spans = StreamSources.documents(s, dir)
-          .select(col("doc_id"),
-            explode(graft.functions.GraftFunctions.wordShingles(
-              col("text"), PipelineQueries.SpanDedupK)).as("gram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val flagged = spans.join(idx, "gram")
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("first_id")).as("rep_id"),
-            count(lit(1)).as("n_known_spans"))
-          .select("doc_id", "rep_id", "n_known_spans")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
-      },
+      (s, dir) => spanProbe(s, dir, Caches.track(spanIndex(trainingSlice(s, dir)))),
       Some(spanIncrementalOracleSql("doc_id % 4 = 0"))),
 
     // the SAME probe served from a PERSISTED index: the span index
     // commits as an IndexStore generation and the stream probes the
-    // LOADED relation — same oracle as the inline twin, so the row is
-    // green only if the index round trip is value-exact. This is the
-    // production split the inline twin approximates: the index is the
-    // nightly reconciliation job's output, not a per-run derivation.
+    // LOADED relation. This is the production split the inline twin
+    // approximates: the index is the nightly reconciliation job's output,
+    // not a per-run derivation.
     Q("stream_dedup_span_loaded",
-      (s, dir) => {
-        implicit val sp = s
-        val root = PipelineQueries.serveRoot("span_index", dir)
-        graft.pipeline.ModelStore.ensure(s, root, Seq("span_index" ->
-          graft.dedup.Dedup.shingles(
-            graft.Tables.documents(s, dir)
-              .filter(pmod(col("doc_id"), lit(4)) === 0),
-            "doc_id", "text", PipelineQueries.SpanDedupK)
-            .groupBy(col("gram")).agg(min(col("doc_id")).as("first_id"))))
-        val idx = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "span_index"))
-        val spans = StreamSources.documents(s, dir)
-          .select(col("doc_id"),
-            explode(graft.functions.GraftFunctions.wordShingles(
-              col("text"), PipelineQueries.SpanDedupK)).as("gram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val flagged = spans.join(idx, "gram")
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("first_id")).as("rep_id"),
-            count(lit(1)).as("n_known_spans"))
-          .select("doc_id", "rep_id", "n_known_spans")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
-      },
+      (s, dir) => spanProbe(s, dir,
+        servedIndex(s, PipelineQueries.serveRoot("span_index", dir), "span_index")(
+          Seq("span_index" -> spanIndex(trainingSlice(s, dir))))("span_index")),
       Some(spanIncrementalOracleSql("doc_id % 4 = 0"))),
 
     // index APPEND maintenance: the committed span generation folds in a
@@ -712,81 +1054,29 @@ object StreamingQueries {
     // append ≡ rebuild.
     Q("stream_dedup_span_appended",
       (s, dir) => {
-        implicit val sp = s
-        def spansOf(pred: org.apache.spark.sql.Column) =
-          graft.dedup.Dedup.shingles(
-            graft.Tables.documents(s, dir).filter(pred),
-            "doc_id", "text", PipelineQueries.SpanDedupK)
-            .groupBy(col("gram")).agg(min(col("doc_id")).as("first_id"))
+        def slice(r: Int) = spanIndex(
+          Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(4)) === r))
         val root = PipelineQueries.modelRootShared("span_index_app")
-        graft.pipeline.ModelStore.save(s, root,
-          Seq("span_index" -> spansOf(pmod(col("doc_id"), lit(4)) === 0)))
-        graft.dedup.IndexStore.appendSpanIndex(s, root,
-          spansOf(pmod(col("doc_id"), lit(4)) === 2))
-        val idx = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "span_index"))
-        val spans = StreamSources.documents(s, dir)
-          .select(col("doc_id"),
-            explode(graft.functions.GraftFunctions.wordShingles(
-              col("text"), PipelineQueries.SpanDedupK)).as("gram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val flagged = spans.join(idx, "gram")
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("first_id")).as("rep_id"),
-            count(lit(1)).as("n_known_spans"))
-          .select("doc_id", "rep_id", "n_known_spans")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        ModelStore.save(s, root, Seq("span_index" -> slice(0)))
+        IndexStore.appendSpanIndex(s, root, slice(2))
+        spanProbe(s, dir, Caches.track(ModelStore.loadRelation(s, root, "span_index")))
       },
       Some(spanIncrementalOracleSql("doc_id % 4 IN (0, 2)"))),
 
     // INCREMENTAL semantic dedup at ingestion — the embedding-space
-    // counterpart of stream_dedup_span, completing the "new data versus
-    // the existing training set" pair: centroids are TRAINED offline on
+    // counterpart of stream_dedup_span: centroids are TRAINED offline on
     // the existing corpus (the vec_id % 4 == 0 subset, same quantized
     // Lloyd iterations as the batch rows), the training set's members
     // sit in their trained cells as a cached static relation, and each
-    // incoming vector is assigned to its cell by the same zero-shuffle
-    // literal argmax (pure column work — streams unchanged), then
-    // compared against the cell's static members at cosine ≥ 0.4.
-    // Emits only flagged vectors: (vec_id, rep_id = min earlier member,
-    // n_near). Cell population bounds the per-vector comparison exactly
-    // as in batch SemDeDup; the static side is bounded by the training
-    // set and cell granularity follows the centroid count.
+    // incoming vector is compared against its cell's static members.
+    // Cell population bounds the per-vector comparison exactly as in
+    // batch SemDeDup; the static side is bounded by the training set and
+    // cell granularity follows the centroid count.
     Q("stream_dedup_semantic",
       (s, dir) => {
-        implicit val sp = s
-        val trainSet = graft.Tables.embeddings(s, dir)
-          .filter(pmod(col("vec_id"), lit(4)) === 0)
-        val cents = graft.similarity.Similarity.kmeansCentroidsQuantized(
-          trainSet, "vec_id", "embedding", k = 16, iters = 2)
-        val members = graft.Caches.track(
-          graft.similarity.Similarity.ivfAssignWith(
-            trainSet, "vec_id", "embedding", cents)
-            .select(col("cell"), col("vec_id").as("a_id"),
-              col("embedding").as("va"),
-              sqrt(graft.functions.GraftFunctions.dot(
-                col("embedding"), col("embedding"))).as("na")))
-        val incoming = graft.similarity.Similarity.ivfAssignWith(
-            StreamSources.embeddings(s, dir), "vec_id", "embedding", cents)
-          .select(col("cell"), col("vec_id"), col("embedding").as("vb"),
-            sqrt(graft.functions.GraftFunctions.dot(
-              col("embedding"), col("embedding"))).as("nb"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val flagged = incoming.join(members, Seq("cell"))
-          .filter(col("a_id") < col("vec_id"))
-          .withColumn("cos", graft.functions.GraftFunctions.dot(
-            col("va"), col("vb")) / (col("na") * col("nb")))
-          .filter(col("cos") >= 0.4)
-          .groupBy(window(col("event_time"), "1 hour"), col("vec_id"))
-          .agg(min(col("a_id")).as("rep_id"), count(lit(1)).as("n_near"))
-          .select("vec_id", "rep_id", "n_near")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("vec_id")
+        val trainSet = semanticTrainSet(s, dir)
+        val cents = semanticCentroids(trainSet)
+        semanticProbe(s, dir, cents, Caches.track(semanticMembers(trainSet, cents)))
       },
       Some(semanticIncrementalOracleSql)),
 
@@ -799,43 +1089,14 @@ object StreamingQueries {
     // member vector or norm moves a cosine across the threshold).
     Q("stream_dedup_semantic_loaded",
       (s, dir) => {
-        implicit val sp = s
-        val trainSet = graft.Tables.embeddings(s, dir)
-          .filter(pmod(col("vec_id"), lit(4)) === 0)
         val root = PipelineQueries.serveRoot("semantic_index", dir)
-        graft.pipeline.ModelStore.ensure(s, root, {
-          val cents0 = graft.similarity.Similarity.kmeansCentroidsQuantized(
-            trainSet, "vec_id", "embedding", k = 16, iters = 2)
-          Seq(
-            "centroids" -> cents0,
-            "members" -> graft.similarity.Similarity.ivfAssignWith(
-              trainSet, "vec_id", "embedding", cents0)
-              .select(col("cell"), col("vec_id").as("a_id"),
-                col("embedding").as("va"),
-                sqrt(graft.functions.GraftFunctions.dot(
-                  col("embedding"), col("embedding"))).as("na")))
+        ModelStore.ensure(s, root, {
+          val trainSet = semanticTrainSet(s, dir)
+          val cents = semanticCentroids(trainSet)
+          Seq("centroids" -> cents, "members" -> semanticMembers(trainSet, cents))
         })
-        val cents = graft.pipeline.ModelStore.loadRelation(s, root, "centroids")
-        val members = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "members"))
-        val incoming = graft.similarity.Similarity.ivfAssignWith(
-            StreamSources.embeddings(s, dir), "vec_id", "embedding", cents)
-          .select(col("cell"), col("vec_id"), col("embedding").as("vb"),
-            sqrt(graft.functions.GraftFunctions.dot(
-              col("embedding"), col("embedding"))).as("nb"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val flagged = incoming.join(members, Seq("cell"))
-          .filter(col("a_id") < col("vec_id"))
-          .withColumn("cos", graft.functions.GraftFunctions.dot(
-            col("va"), col("vb")) / (col("na") * col("nb")))
-          .filter(col("cos") >= 0.4)
-          .groupBy(window(col("event_time"), "1 hour"), col("vec_id"))
-          .agg(min(col("a_id")).as("rep_id"), count(lit(1)).as("n_near"))
-          .select("vec_id", "rep_id", "n_near")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("vec_id")
+        semanticProbe(s, dir, ModelStore.loadRelation(s, root, "centroids"),
+          Caches.track(ModelStore.loadRelation(s, root, "members")))
       },
       Some(semanticIncrementalOracleSql)),
 
@@ -848,54 +1109,22 @@ object StreamingQueries {
     // the union — the loaded probe shares the inline twin's oracle.
     Q("stream_dedup_semantic_appended",
       (s, dir) => {
-        implicit val sp = s
-        val trainSet = graft.Tables.embeddings(s, dir)
-          .filter(pmod(col("vec_id"), lit(4)) === 0)
-        val cents0 = graft.similarity.Similarity.kmeansCentroidsQuantized(
-          trainSet, "vec_id", "embedding", k = 16, iters = 2)
-        def membersOf(slice: org.apache.spark.sql.DataFrame,
-            cents: org.apache.spark.sql.DataFrame) =
-          graft.similarity.Similarity.ivfAssignWith(
-            slice, "vec_id", "embedding", cents)
-            .select(col("cell"), col("vec_id").as("a_id"),
-              col("embedding").as("va"),
-              sqrt(graft.functions.GraftFunctions.dot(
-                col("embedding"), col("embedding"))).as("na"))
+        val trainSet = semanticTrainSet(s, dir)
+        def eighth(r: Int) = trainSet.filter(pmod(col("vec_id"), lit(8)) === r)
         val root = PipelineQueries.modelRootShared("semantic_index_app")
         // gen k: half the archive's members under the frozen centroids
-        graft.pipeline.ModelStore.save(s, root, Seq(
-          "centroids" -> cents0,
-          "members" -> membersOf(
-            trainSet.filter(pmod(col("vec_id"), lit(8)) === 0), cents0)))
+        val cents0 = semanticCentroids(trainSet)
+        ModelStore.save(s, root, Seq(
+          "centroids" -> cents0, "members" -> semanticMembers(eighth(0), cents0)))
         // gen k+1: the disjoint increment assigns under the LOADED
         // centroids and appends by union
-        val centsL = graft.pipeline.ModelStore.loadRelation(s, root, "centroids")
-        graft.pipeline.ModelStore.save(s, root, Seq(
+        val centsL = ModelStore.loadRelation(s, root, "centroids")
+        ModelStore.save(s, root, Seq(
           "centroids" -> centsL,
-          "members" -> graft.pipeline.ModelStore.loadRelation(s, root, "members")
-            .unionByName(membersOf(
-              trainSet.filter(pmod(col("vec_id"), lit(8)) === 4), centsL))))
-        val cents = graft.pipeline.ModelStore.loadRelation(s, root, "centroids")
-        val members = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "members"))
-        val incoming = graft.similarity.Similarity.ivfAssignWith(
-            StreamSources.embeddings(s, dir), "vec_id", "embedding", cents)
-          .select(col("cell"), col("vec_id"), col("embedding").as("vb"),
-            sqrt(graft.functions.GraftFunctions.dot(
-              col("embedding"), col("embedding"))).as("nb"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val flagged = incoming.join(members, Seq("cell"))
-          .filter(col("a_id") < col("vec_id"))
-          .withColumn("cos", graft.functions.GraftFunctions.dot(
-            col("va"), col("vb")) / (col("na") * col("nb")))
-          .filter(col("cos") >= 0.4)
-          .groupBy(window(col("event_time"), "1 hour"), col("vec_id"))
-          .agg(min(col("a_id")).as("rep_id"), count(lit(1)).as("n_near"))
-          .select("vec_id", "rep_id", "n_near")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("vec_id")
+          "members" -> ModelStore.loadRelation(s, root, "members")
+            .unionByName(semanticMembers(eighth(4), centsL))))
+        semanticProbe(s, dir, ModelStore.loadRelation(s, root, "centroids"),
+          Caches.track(ModelStore.loadRelation(s, root, "members")))
       },
       Some(semanticIncrementalOracleSql)),
 
@@ -907,26 +1136,20 @@ object StreamingQueries {
     // plan-literal argmax (pure column work — streams unchanged) and
     // qualifying hits come from the stream-static broadcast equi-join;
     // only the per-vector aggregate (min benchmark id, hit count) waits
-    // for the watermark window. Streaming the archive reproduces the
+    // for the ingress window. Streaming the archive reproduces the
     // batch row exactly — shared oracle.
     Q("stream_pipeline_decontaminate_semantic",
       (s, dir) => {
         implicit val sp = s
-        val emb = graft.Tables.embeddings(s, dir)
-        val cents = graft.similarity.Similarity.kmeansCentroidsQuantized(
-          emb, "vec_id", "embedding", k = 16, iters = 2)
-        val scored = graft.similarity.Similarity.semanticContaminationScored(
-            StreamSources.embeddings(s, dir),
-            emb.filter(pmod(col("vec_id"), lit(41)) === 0),
-            cents, "vec_id", "embedding", nprobe = 3, threshold = 0.35)
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-          .groupBy(window(col("event_time"), "1 hour"), col("vec_id"))
-          .agg(min(col("bench_id")).as("bench_id"),
-            count(lit(1)).as("n_bench_hits"))
-          .select("vec_id", "bench_id", "n_bench_hits")
-        StreamRun.toBatch(scored, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        val emb = Tables.embeddings(s, dir)
+        val scored = Similarity.semanticContaminationScored(
+          StreamSources.embeddings(s, dir),
+          emb.filter(pmod(col("vec_id"), lit(41)) === 0),
+          semanticCentroids(emb), "vec_id", "embedding", nprobe = 3, threshold = 0.35)
+        ingressWindow(scored, "vec_id")(
+          agg = _.agg(min(col("bench_id")).as("bench_id"),
+              count(lit(1)).as("n_bench_hits"))
+            .select("vec_id", "bench_id", "n_bench_hits"))
           .orderBy("vec_id")
       },
       Some(PipelineQueries.semanticContamOracleSql)),
@@ -937,150 +1160,37 @@ object StreamingQueries {
     // engine unchanged and the batch row's oracle replays it verbatim.
     // The shape every streaming pre-tokenization pipeline needs between
     // cleaning and shard assembly.
-    Q("stream_pipeline_chunk_docs",
-      (s, dir) => {
-        implicit val sp = s
-        val out = graft.pipeline.Chunking.chunkDocs(
-          StreamSources.documents(s, dir), "doc_id", "text",
-          size = PipelineQueries.ChunkTokens,
-          stride = PipelineQueries.ChunkStride)
-        StreamRun.toBatch(out, "append", numPartitions = 4)
-          .orderBy("doc_id", "chunk_no")
-      },
-      Some(PipelineQueries.chunkOracleSql)),
+    PipelineQueries.chunkDocs.stream,
 
     // INCREMENTAL MinHash-LSH near-dup at ingestion — the jaccard face
     // of the "new data versus the existing training set" family
-    // (exact/bloom, span, semantic, and now near-dup): the training
-    // subset's band-signature table and per-doc shingle arrays are
-    // static cached relations built offline; each incoming document
-    // computes its signatures and band sigs as PURE COLUMN work (the
-    // native MinHashSigs kernel + the stream-safe lshBandsColumn — no
-    // groupBy, so the band stage needs no streaming-aggregation state),
-    // explodes to (band, bandsig) rows, equi-joins the static band
-    // table for candidates, and exact-verifies each candidate pair with
-    // the fused native SortedJaccard over the carried SORTED shingle
-    // arrays (distinct string grams — the same |A∩B|/|A∪B| the oracle
-    // computes; no hash-space intersection, so a gram-hash collision
-    // cannot skew the count; sorting is once per document, and min-hash
-    // signatures are order-free so the sorted array feeds them
-    // unchanged). The threshold lives INSIDE the aggregation
-    // (min/max over `when(j ≥ τ)`), not a row filter — a filter's
-    // predicate pushes into the join condition where Catalyst inlines
-    // the verify expression multiple times (the built-in
-    // array_intersect rendering measured 4+ hash-set builds per row,
-    // 24 s at sf0.1; fused + conditional agg runs the two-pointer merge
-    // once per candidate row). Multi-band collisions duplicate
-    // candidate pairs; the per-doc aggregation uses ONLY
-    // duplicate-insensitive min/max (rep_id, j_max), which is what
-    // makes a distinct-pair stage — a second streaming aggregation —
-    // unnecessary; docs whose candidates all fail the threshold yield a
-    // NULL rep_id and drop in the stateless post-agg filter.
+    // (exact/bloom, span, semantic, and near-dup): the training slice's
+    // band-signature table and per-doc shingle arrays are static cached
+    // relations built offline ([[minhashIndex]]); each incoming document
+    // computes its band signatures in-expression, equi-joins the band
+    // table and exact-verifies each candidate ([[minhashProbe]]).
     // Self-pairs included: a re-ingested training doc flags against
-    // itself at jaccard 1, like the span twin. Carrying the gram arrays
-    // through the ×4 band explode multiplies payload modestly; the
-    // alternative (re-joining the raw stream by id post-candidate)
-    // would cost a second stateful join — the carried-array shape is
-    // the honest streaming plan.
+    // itself at jaccard 1, like the span twin.
     Q("stream_dedup_minhash",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.{hash60, wordShingles}
-        val training = graft.Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(4)) === 0)
-        val trBands = graft.Caches.track(
-          graft.dedup.Dedup.lshBands(
-            graft.dedup.Dedup.minhashSignatures(
-              training.select(col("doc_id"),
-                transform(wordShingles(col("text"), 3), g => hash60(g)).as("hs")),
-              "doc_id", 12),
-            "doc_id", 3)
-            .select(col("doc_id").as("a_id"), col("band"), col("bandsig")))
-        val trVerify = graft.Caches.track(
-          training.select(col("doc_id").as("a_id"),
-            sort_array(wordShingles(col("text"), 3)).as("sh_a")))
-        val incoming = StreamSources.documents(s, dir)
-          .select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
-          .withColumn("sigs", graft.functions.expressions.MinHashSigs.of(
-            transform(col("sh_b"), g => hash60(g)), 12))
-          .withColumn("bb", explode(
-            graft.dedup.Dedup.lshBandsColumn(col("sigs"), 12, 3)))
-          .select(col("doc_id"), col("sh_b"),
-            col("bb.band").as("band"), col("bb.bandsig").as("bandsig"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val verified = incoming
-          .join(trBands, Seq("band", "bandsig"))
-          .join(trVerify, Seq("a_id"))
-          .select(col("event_time"), col("doc_id"), col("a_id"),
-            graft.functions.expressions.SortedJaccard
-              .of(col("sh_b"), col("sh_a")).as("jaccard"))
-        val flagged = verified
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(when(col("jaccard") >= 0.6, col("a_id"))).as("rep_id"),
-            max(when(col("jaccard") >= 0.6, col("jaccard"))).as("j_max"))
-          .filter(col("rep_id").isNotNull)
-          .select("doc_id", "rep_id", "j_max")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        minhashProbe(docShingles(StreamSources.documents(s, dir)), Seq("doc_id"),
+          cachedIndex(minhashIndex(trainingSlice(s, dir))))(DocFlags).orderBy("doc_id")
       },
       Some(PipelineQueries.minhashIncrementalSql(0.6))),
 
     // split-LEAKAGE monitoring AT INGESTION — the leak audit run as new
-    // data arrives: the TRAIN side's band table + shingle arrays are
-    // static cached relations (the split is a pure id hash, so both
-    // sides are plain filters); each incoming doc on the EVAL side
-    // computes its bands as pure column work, equi-joins the static
-    // train bands, exact-verifies candidates with the fused SortedJaccard
-    // and aggregates per eval doc with duplicate-insensitive min/max —
-    // an eval doc flags the moment a near-identical train doc exists.
-    // Self-pairs impossible (the sides are disjoint by construction).
+    // data arrives: the TRAIN side's MinHash index is static and cached
+    // (the split is a pure id hash, so both sides are plain filters);
+    // each incoming doc on the EVAL side probes it — an eval doc flags
+    // the moment a near-identical train doc exists. Self-pairs are
+    // impossible (the sides are disjoint by construction).
     Q("stream_pipeline_split_leakage",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.{hash60, wordShingles}
-        val thr = graft.pipeline.Mixing
-          .splitThresholds(Seq(("train", 80), ("eval", 20))).head._2
-        val train = graft.Tables.documents(s, dir)
-          .filter(graft.pipeline.Mixing.mixHash("doc_id") < lit(thr))
-        val trBands = graft.Caches.track(
-          graft.dedup.Dedup.lshBands(
-            graft.dedup.Dedup.minhashSignatures(
-              train.select(col("doc_id"),
-                transform(wordShingles(col("text"), 3), g => hash60(g)).as("hs")),
-              "doc_id", 12),
-            "doc_id", 3)
-            .select(col("doc_id").as("a_id"), col("band"), col("bandsig")))
-        val trVerify = graft.Caches.track(
-          train.select(col("doc_id").as("a_id"),
-            sort_array(wordShingles(col("text"), 3)).as("sh_a")))
-        val incoming = StreamSources.documents(s, dir)
-          .filter(graft.pipeline.Mixing.mixHash("doc_id") >= lit(thr))
-          .select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
-          .withColumn("sigs", graft.functions.expressions.MinHashSigs.of(
-            transform(col("sh_b"), g => hash60(g)), 12))
-          .withColumn("bb", explode(
-            graft.dedup.Dedup.lshBandsColumn(col("sigs"), 12, 3)))
-          .select(col("doc_id"), col("sh_b"),
-            col("bb.band").as("band"), col("bb.bandsig").as("bandsig"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val verified = incoming
-          .join(trBands, Seq("band", "bandsig"))
-          .join(trVerify, Seq("a_id"))
-          .select(col("event_time"), col("doc_id"), col("a_id"),
-            graft.functions.expressions.SortedJaccard
-              .of(col("sh_b"), col("sh_a")).as("jaccard"))
-        val flagged = verified
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(when(col("jaccard") >= 0.6, col("a_id"))).as("rep_id"),
-            max(when(col("jaccard") >= 0.6, col("jaccard"))).as("j_max"))
-          .filter(col("rep_id").isNotNull)
-          .select("doc_id", "rep_id", "j_max")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        val (train, isEval) = leakSides(s, dir)
+        minhashProbe(docShingles(StreamSources.documents(s, dir).filter(isEval)),
+          Seq("doc_id"), cachedIndex(minhashIndex(train)))(DocFlags).orderBy("doc_id")
       },
       Some(PipelineQueries.splitLeakIncrementalSql(0.6, 80))),
 
@@ -1091,322 +1201,67 @@ object StreamingQueries {
     Q("stream_pipeline_split_leakage_loaded",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.{hash60, wordShingles}
-        val thr = graft.pipeline.Mixing
-          .splitThresholds(Seq(("train", 80), ("eval", 20))).head._2
-        val train = graft.Tables.documents(s, dir)
-          .filter(graft.pipeline.Mixing.mixHash("doc_id") < lit(thr))
-        val root = PipelineQueries.serveRoot("splitleak_index", dir)
-        graft.pipeline.ModelStore.ensure(s, root, Seq(
-          "bands" -> graft.dedup.Dedup.lshBands(
-            graft.dedup.Dedup.minhashSignatures(
-              train.select(col("doc_id"),
-                transform(wordShingles(col("text"), 3), g => hash60(g)).as("hs")),
-              "doc_id", 12),
-            "doc_id", 3)
-            .select(col("doc_id").as("a_id"), col("band"), col("bandsig")),
-          "verify" -> train.select(col("doc_id").as("a_id"),
-            sort_array(wordShingles(col("text"), 3)).as("sh_a"))))
-        val trBands = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
-        val trVerify = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "verify"))
-        val incoming = StreamSources.documents(s, dir)
-          .filter(graft.pipeline.Mixing.mixHash("doc_id") >= lit(thr))
-          .select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
-          .withColumn("sigs", graft.functions.expressions.MinHashSigs.of(
-            transform(col("sh_b"), g => hash60(g)), 12))
-          .withColumn("bb", explode(
-            graft.dedup.Dedup.lshBandsColumn(col("sigs"), 12, 3)))
-          .select(col("doc_id"), col("sh_b"),
-            col("bb.band").as("band"), col("bb.bandsig").as("bandsig"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val verified = incoming
-          .join(trBands, Seq("band", "bandsig"))
-          .join(trVerify, Seq("a_id"))
-          .select(col("event_time"), col("doc_id"), col("a_id"),
-            graft.functions.expressions.SortedJaccard
-              .of(col("sh_b"), col("sh_a")).as("jaccard"))
-        val flagged = verified
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(when(col("jaccard") >= 0.6, col("a_id"))).as("rep_id"),
-            max(when(col("jaccard") >= 0.6, col("jaccard"))).as("j_max"))
-          .filter(col("rep_id").isNotNull)
-          .select("doc_id", "rep_id", "j_max")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        val (train, isEval) = leakSides(s, dir)
+        val ix = servedIndex(s, PipelineQueries.serveRoot("splitleak_index", dir),
+          "bands", "verify")(minhashIndex(train))
+        minhashProbe(docShingles(StreamSources.documents(s, dir).filter(isEval)),
+          Seq("doc_id"), ix)(DocFlags).orderBy("doc_id")
       },
       Some(PipelineQueries.splitLeakIncrementalSql(0.6, 80))),
 
     // INCREMENTAL n-gram-Jaccard near-dup — the EXACT-candidate sibling
     // of stream_dedup_minhash: instead of probabilistic band collisions,
-    // candidates come from the training set's df-capped inverted gram
-    // index (built offline; grams above the cap never index, so a
-    // boilerplate gram costs nothing at the join). Each incoming doc
-    // explodes its grams (pure column work), probes the index
-    // stream-static, row-verifies the candidate with exact set Jaccard
-    // — the fused native SortedJaccard over carried SORTED shingle
-    // arrays, thresholded INSIDE the aggregation rather than a row
-    // filter (same rationale as the minhash twin: a filter pushes into
-    // the join condition and multiplies the verify evaluation; measured
-    // 24 s → ~7 s at sf0.1) — and the per-doc flag aggregates with the
-    // same duplicate-insensitive min/max as the LSH twins — multi-gram
-    // collisions need no distinct stage; all-below-threshold docs drop
-    // in the stateless post-agg NULL filter.
+    // candidates come from the training slice's df-capped inverted gram
+    // index ([[ngramIndex]], built offline); each incoming doc explodes
+    // its gram digests, probes the index stream-static and row-verifies
+    // each candidate with the same exact SortedJaccard flag as the LSH
+    // twins ([[ngramProbe]]).
     Q("stream_dedup_ngram",
-      (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.wordShingles
-        val training = graft.Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(4)) === 0)
-        // the inverted index keys on the 60-bit gram DIGEST, not the gram
-        // string: gram text never enters the probe join's shuffle or the
-        // index relation (int64 keys end-to-end) — safe because candidates only
-        // GATE the exact SortedJaccard verify (a digest collision adds a
-        // candidate the verify then judges on the true shingle arrays),
-        // and the oracle hashes identically so even collision-born
-        // candidates agree cross-engine. The df cap counts digests — the
-        // same policy axis, on the column the index actually stores.
-        val trGrams = graft.Caches.track(
-          graft.dedup.Dedup.shingles(training, "doc_id", "text", 3)
-            .select(col("doc_id").as("a_id"),
-              graft.functions.GraftFunctions.hash60(col("gram")).as("gh"))
-            .withColumn("__df", count(lit(1)).over(
-              org.apache.spark.sql.expressions.Window.partitionBy("gh")))
-            .filter(col("__df") <= 100)
-            .drop("__df"))
-        val trVerify = graft.Caches.track(
-          training.select(col("doc_id").as("a_id"),
-            sort_array(wordShingles(col("text"), 3)).as("sh_a")))
-        val incoming = fanOut(StreamSources.documents(s, dir))
-          .select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
-          .select(col("doc_id"), col("sh_b"), explode(col("sh_b")).as("gram"))
-          .select(col("doc_id"), col("sh_b"),
-            graft.functions.GraftFunctions.hash60(col("gram")).as("gh"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        // broadcast the STATIC index sides explicitly: a micro-batch's
-        // stream side has no usable size statistic, and left alone the
-        // planner broadcast the exploded gram stream — 118× the doc
-        // count WITH each doc's full shingle array riding every row —
-        // while the df-capped index (66k two-long rows at sf0.1) sat on
-        // the probe side (measured 6.5 s/batch; hinted: the stream never
-        // leaves its partitions)
-        val verified = incoming
-          .join(broadcast(trGrams), Seq("gh"))
-          .join(broadcast(trVerify), Seq("a_id"))
-          .select(col("event_time"), col("doc_id"), col("a_id"),
-            graft.functions.expressions.SortedJaccard
-              .of(col("sh_b"), col("sh_a")).as("jaccard"))
-        val flagged = verified
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(when(col("jaccard") >= 0.6, col("a_id"))).as("rep_id"),
-            max(when(col("jaccard") >= 0.6, col("jaccard"))).as("j_max"))
-          .filter(col("rep_id").isNotNull)
-          .select("doc_id", "rep_id", "j_max")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
-      },
+      (s, dir) => ngramProbe(s, dir, cachedIndex(ngramIndex(trainingSlice(s, dir)))),
       Some(PipelineQueries.ngramIncrementalSql(0.6, 100))),
 
     // INCREMENTAL SimHash near-dup at ingestion — the hamming face of
     // the new-data-vs-training-set family, completing the dedup-family
-    // symmetry (exact/bloom, span, semantic, minhash-jaccard, and now
-    // simhash). The training subset's banded signature table is a static
-    // cached relation; each incoming doc reduces to ONE int64 signature
-    // via the native single-pass SimHashSig kernel (pure column work —
-    // stream-safe, the signature never leaves its row), explodes to 4
-    // band keys, equi-joins the static bands, and verifies candidates
-    // with a per-row bit_count xor — no stream-side shuffle before the
-    // final flag aggregation. Multi-band collisions are absorbed by the
-    // duplicate-insensitive min/min flag (rep_id, h_min), the same
-    // argument that spares the minhash twin a distinct-pair stage.
-    // Self-pairs included: a re-ingested training doc flags against
-    // itself at hamming 0.
+    // symmetry (exact/bloom, span, semantic, minhash-jaccard, and
+    // simhash). The training slice's banded signature table is a static
+    // cached relation; each incoming doc reduces to one signature,
+    // explodes to 4 band keys, equi-joins the static bands and verifies
+    // candidates with a per-row bit_count xor — no stream-side shuffle
+    // before the final flag aggregation. Self-pairs included: a
+    // re-ingested training doc flags against itself at hamming 0.
     Q("stream_dedup_simhash",
-      (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.{hash60, tokens}
-        val training = graft.Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(4)) === 0)
-        val trBanded = graft.Caches.track(
-          graft.dedup.Dedup.simhash(training, "doc_id", "text")
-            .select(col("doc_id").as("a_id"), col("simhash").as("sh_a"),
-              explode(sequence(lit(0), lit(3))).as("band"))
-            .withColumn("bkey",
-              expr("shiftright(sh_a, CAST(band * 15 AS INT)) & 32767")))
-        val incoming = StreamSources.documents(s, dir)
-          .select(col("doc_id"),
-            transform(tokens(col("text")), t => hash60(t)).as("hs"))
-          .filter(size(col("hs")) > 0)
-          .select(col("doc_id"),
-            graft.functions.expressions.SimHashSig.of(col("hs")).as("sh_b"))
-          .withColumn("band", explode(sequence(lit(0), lit(3))))
-          .withColumn("bkey",
-            expr("shiftright(sh_b, CAST(band * 15 AS INT)) & 32767"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val flagged = incoming
-          .join(trBanded, Seq("band", "bkey"))
-          .withColumn("hamming", expr("CAST(bit_count(sh_b ^ sh_a) AS INT)"))
-          .filter(col("hamming") <= 10)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("a_id")).as("rep_id"), min(col("hamming")).as("h_min"))
-          .select("doc_id", "rep_id", "h_min")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
-      },
+      (s, dir) => simhashProbe(s, dir, Caches.track(simhashBands(trainingSlice(s, dir)))),
       Some(PipelineQueries.simhashIncrementalSql(10))),
 
     // ========== the near-dup family served from PERSISTED indexes ==========
-    // Each inline incremental twin above re-derives its archive-side
-    // index (band table, verify arrays, inverted gram index, banded
-    // signatures) per run. These rows commit the index through
-    // IndexStore (one nightly job) and probe the LOADED relations —
-    // sharing the inline twin's oracle, so green == the round trip is
+    // Each inline incremental twin above derives its archive-side index
+    // (band table, verify arrays, inverted gram index, banded signatures)
+    // per run. These rows commit the SAME builder's relations once
+    // ([[servedIndex]]) and run the SAME probe over the LOADED relations
+    // — sharing the inline twin's oracle, so green == the round trip is
     // value-exact. Band tables and verify arrays are per-document rows:
     // a disjoint increment appends by plain union (no re-aggregation),
     // which is why persisting them is the right 100 TB maintenance shape.
     Q("stream_dedup_minhash_loaded",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.{hash60, wordShingles}
-        val training = graft.Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(4)) === 0)
-        val root = PipelineQueries.serveRoot("minhash_index", dir)
-        graft.pipeline.ModelStore.ensure(s, root, Seq(
-          "bands" -> graft.dedup.Dedup.lshBands(
-            graft.dedup.Dedup.minhashSignatures(
-              training.select(col("doc_id"),
-                transform(wordShingles(col("text"), 3), g => hash60(g)).as("hs")),
-              "doc_id", 12),
-            "doc_id", 3)
-            .select(col("doc_id").as("a_id"), col("band"), col("bandsig")),
-          "verify" -> training.select(col("doc_id").as("a_id"),
-            sort_array(wordShingles(col("text"), 3)).as("sh_a"))))
-        val trBands = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
-        val trVerify = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "verify"))
-        val incoming = StreamSources.documents(s, dir)
-          .select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
-          .withColumn("sigs", graft.functions.expressions.MinHashSigs.of(
-            transform(col("sh_b"), g => hash60(g)), 12))
-          .withColumn("bb", explode(
-            graft.dedup.Dedup.lshBandsColumn(col("sigs"), 12, 3)))
-          .select(col("doc_id"), col("sh_b"),
-            col("bb.band").as("band"), col("bb.bandsig").as("bandsig"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val verified = incoming
-          .join(trBands, Seq("band", "bandsig"))
-          .join(trVerify, Seq("a_id"))
-          .select(col("event_time"), col("doc_id"), col("a_id"),
-            graft.functions.expressions.SortedJaccard
-              .of(col("sh_b"), col("sh_a")).as("jaccard"))
-        val flagged = verified
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(when(col("jaccard") >= 0.6, col("a_id"))).as("rep_id"),
-            max(when(col("jaccard") >= 0.6, col("jaccard"))).as("j_max"))
-          .filter(col("rep_id").isNotNull)
-          .select("doc_id", "rep_id", "j_max")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        val ix = servedIndex(s, PipelineQueries.serveRoot("minhash_index", dir),
+          "bands", "verify")(minhashIndex(trainingSlice(s, dir)))
+        minhashProbe(docShingles(StreamSources.documents(s, dir)), Seq("doc_id"), ix)(
+          DocFlags).orderBy("doc_id")
       },
       Some(PipelineQueries.minhashIncrementalSql(0.6))),
 
     Q("stream_dedup_ngram_loaded",
-      (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.wordShingles
-        val training = graft.Tables.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(4)) === 0)
-        val root = PipelineQueries.serveRoot("ngram_index", dir)
-        // the persisted index stores 60-bit gram DIGESTS (int64) instead
-        // of gram strings — fixed-width probe keys, no text in the index;
-        // exactness rides the SortedJaccard verify (see the inline twin)
-        graft.pipeline.ModelStore.ensure(s, root, Seq(
-          "grams" -> graft.dedup.Dedup.dfCapped(
-            graft.dedup.Dedup.shingles(training, "doc_id", "text", 3)
-              .select(col("doc_id").as("a_id"),
-                graft.functions.GraftFunctions.hash60(col("gram")).as("gh")),
-            "gh", 100),
-          "verify" -> training.select(col("doc_id").as("a_id"),
-            sort_array(wordShingles(col("text"), 3)).as("sh_a"))))
-        val trGrams = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "grams"))
-        val trVerify = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "verify"))
-        val incoming = fanOut(StreamSources.documents(s, dir))
-          .select(col("doc_id"), sort_array(wordShingles(col("text"), 3)).as("sh_b"))
-          .select(col("doc_id"), col("sh_b"), explode(col("sh_b")).as("gram"))
-          .select(col("doc_id"), col("sh_b"),
-            graft.functions.GraftFunctions.hash60(col("gram")).as("gh"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        // static sides broadcast explicitly — see the inline twin: the
-        // planner otherwise broadcasts the array-carrying gram stream
-        val verified = incoming
-          .join(broadcast(trGrams), Seq("gh"))
-          .join(broadcast(trVerify), Seq("a_id"))
-          .select(col("event_time"), col("doc_id"), col("a_id"),
-            graft.functions.expressions.SortedJaccard
-              .of(col("sh_b"), col("sh_a")).as("jaccard"))
-        val flagged = verified
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(when(col("jaccard") >= 0.6, col("a_id"))).as("rep_id"),
-            max(when(col("jaccard") >= 0.6, col("jaccard"))).as("j_max"))
-          .filter(col("rep_id").isNotNull)
-          .select("doc_id", "rep_id", "j_max")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
-      },
+      (s, dir) => ngramProbe(s, dir,
+        servedIndex(s, PipelineQueries.serveRoot("ngram_index", dir), "grams", "verify")(
+          ngramIndex(trainingSlice(s, dir)))),
       Some(PipelineQueries.ngramIncrementalSql(0.6, 100))),
 
     Q("stream_dedup_simhash_loaded",
-      (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.{hash60, tokens}
-        val root = PipelineQueries.serveRoot("simhash_index", dir)
-        graft.pipeline.ModelStore.ensure(s, root, Seq(
-          "bands" -> graft.dedup.Dedup.simhash(
-            graft.Tables.documents(s, dir)
-              .filter(pmod(col("doc_id"), lit(4)) === 0),
-            "doc_id", "text")
-            .select(col("doc_id").as("a_id"), col("simhash").as("sh_a"),
-              explode(sequence(lit(0), lit(3))).as("band"))
-            .withColumn("bkey",
-              expr("shiftright(sh_a, CAST(band * 15 AS INT)) & 32767"))))
-        val trBanded = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
-        val incoming = StreamSources.documents(s, dir)
-          .select(col("doc_id"),
-            transform(tokens(col("text")), t => hash60(t)).as("hs"))
-          .filter(size(col("hs")) > 0)
-          .select(col("doc_id"),
-            graft.functions.expressions.SimHashSig.of(col("hs")).as("sh_b"))
-          .withColumn("band", explode(sequence(lit(0), lit(3))))
-          .withColumn("bkey",
-            expr("shiftright(sh_b, CAST(band * 15 AS INT)) & 32767"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val flagged = incoming
-          .join(trBanded, Seq("band", "bkey"))
-          .withColumn("hamming", expr("CAST(bit_count(sh_b ^ sh_a) AS INT)"))
-          .filter(col("hamming") <= 10)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("a_id")).as("rep_id"), min(col("hamming")).as("h_min"))
-          .select("doc_id", "rep_id", "h_min")
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
-      },
+      (s, dir) => simhashProbe(s, dir,
+        servedIndex(s, PipelineQueries.serveRoot("simhash_index", dir), "bands")(
+          Seq("bands" -> simhashBands(trainingSlice(s, dir))))("bands")),
       Some(PipelineQueries.simhashIncrementalSql(10))),
 
     // REJECTION ATTRIBUTION AT INGESTION — the funnel as a live crawl
@@ -1423,8 +1278,8 @@ object StreamingQueries {
         implicit val sp = s
         val pq = PipelineQueries
         val st = pq.corpusV3Stages(s, dir)
-        def ids(df: org.apache.spark.sql.DataFrame, flag: String) =
-          graft.Caches.track(df.select(col("doc_id"), lit(1).as(flag)))
+        def ids(df: DataFrame, flag: String) =
+          Caches.track(df.select(col("doc_id"), lit(1).as(flag)))
         val s3 = ids(st.exactDeduped, "s3")
         val s4 = ids(st.spanKept, "s4")
         val s5 = ids(st.decontaminated, "s5")
@@ -1467,39 +1322,22 @@ object StreamingQueries {
     // signature via the deterministic resize→dhash map (per-row work,
     // stream-safe — the payload never leaves its row), explodes to the
     // family's 4 hamming bands, equi-joins the static bands and
-    // verifies with a per-row bit_count xor; the per-media flag uses
-    // the duplicate-insensitive (min rep, min hamming) aggregate.
+    // verifies with a per-row bit_count xor ([[hammingProbe]]).
     Q("stream_multimodal_phash",
-      (s, dir) => {
-        implicit val sp = s
-        val archive = graft.Caches.track(phashBandFrame(s,
-          graft.Tables.documents(s, dir).select("doc_id", "text")))
-        StreamRun.toBatch(phashProbe(s, dir, archive), "update",
-          numPartitions = 4, requireSingleDataBatch = true)
-          .orderBy("media_id")
-      },
+      (s, dir) => phashProbe(s, dir, Caches.track(phashBandFrame(s,
+        Tables.documents(s, dir).select("doc_id", "text")))),
       Some(PipelineQueries.phashIncrementalOracleSql)),
 
-    // the media band index PERSISTED (r14 judge #5 — the one dedup
-    // family that still re-derived its archive index per run): the
-    // dHash band relation commits as an IndexStore generation via the
-    // serve-root ensure-memo (nightly build, untimed in bench), and the
-    // ingest deployment probes the LOADED relation — shared oracle, so
-    // green == the round trip is value-exact. Symmetric with the other
-    // seven persisted dedup families.
+    // the media band index PERSISTED: the dHash band relation commits as
+    // an IndexStore generation via the serve-root ensure-memo (nightly
+    // build, untimed in bench), and the ingest deployment probes the
+    // LOADED relation — shared oracle, so green == the round trip is
+    // value-exact. Symmetric with the other persisted dedup families.
     Q("stream_multimodal_phash_loaded",
-      (s, dir) => {
-        implicit val sp = s
-        val root = PipelineQueries.serveRoot("phash_index", dir)
-        graft.pipeline.ModelStore.ensure(s, root, Seq(
-          "bands" -> phashBandFrame(s,
-            graft.Tables.documents(s, dir).select("doc_id", "text"))))
-        val archive = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
-        StreamRun.toBatch(phashProbe(s, dir, archive), "update",
-          numPartitions = 4, requireSingleDataBatch = true)
-          .orderBy("media_id")
-      },
+      (s, dir) => phashProbe(s, dir,
+        servedIndex(s, PipelineQueries.serveRoot("phash_index", dir), "bands")(
+          Seq("bands" -> phashBandFrame(s,
+            Tables.documents(s, dir).select("doc_id", "text"))))("bands")),
       Some(PipelineQueries.phashIncrementalOracleSql)),
 
     // media index APPEND maintenance: band rows are per-MEDIA rows, so
@@ -1511,54 +1349,24 @@ object StreamingQueries {
     // append ≡ rebuild (the family's standing maintenance contract).
     Q("stream_multimodal_phash_appended",
       (s, dir) => {
-        implicit val sp = s
-        val docs = graft.Tables.documents(s, dir).select("doc_id", "text")
+        val docs = Tables.documents(s, dir).select("doc_id", "text")
+        def half(r: Int) = phashBandFrame(s, docs.filter(pmod(col("doc_id"), lit(2)) === r))
         val root = PipelineQueries.modelRootShared("phash_index_app")
-        graft.pipeline.ModelStore.save(s, root, Seq(
-          "bands" -> phashBandFrame(s,
-            docs.filter(pmod(col("doc_id"), lit(2)) === 0))))
-        graft.pipeline.ModelStore.save(s, root, Seq(
-          "bands" -> graft.pipeline.ModelStore.loadRelation(s, root, "bands")
-            .unionByName(phashBandFrame(s,
-              docs.filter(pmod(col("doc_id"), lit(2)) === 1)))))
-        val archive = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "bands"))
-        StreamRun.toBatch(phashProbe(s, dir, archive), "update",
-          numPartitions = 4, requireSingleDataBatch = true)
-          .orderBy("media_id")
+        ModelStore.save(s, root, Seq("bands" -> half(0)))
+        ModelStore.save(s, root, Seq("bands" ->
+          ModelStore.loadRelation(s, root, "bands").unionByName(half(1))))
+        phashProbe(s, dir, Caches.track(ModelStore.loadRelation(s, root, "bands")))
       },
       Some(PipelineQueries.phashIncrementalOracleSql)),
 
     // n-gram LM scoring AT INGESTION — the literal CCNet deployment: the
     // bigram model trains OFFLINE on the reference subset (same
-    // derivation as text_lm_score), the stream probes the static model
-    // relations per micro-batch (stream-static LEFT joins — no join
-    // state, no watermark on the probe; smoothing covers misses) and the
-    // per-doc sum rides a watermarked ingress-window aggregation (update
-    // mode, single-batch delivery asserted). Zero-bigram docs emit no
-    // rows (no exploded input → no aggregation state), hence the
-    // scored-docs-only oracle variant.
+    // derivation as text_lm_score) and the stream scores against it
+    // ([[lmScoreProbe]]).
     Q("stream_text_lm_score",
       (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val docs = PipelineQueries.lmPlant(graft.Tables.documents(s, dir))
-        val m = graft.text.NgramLm.train(
-          docs.filter(pmod(col("doc_id"), lit(4)) === 0), "text")
-        val incoming = PipelineQueries.lmPlant(StreamSources.documents(s, dir))
-          .select(col("doc_id"), explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val scored = graft.text.NgramLm.probeQq(incoming, m, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
-          .select(col("doc_id"), col("n_bigrams"), col("lm_logp_q"),
-            ((-col("lm_logp_q")).cast("double") /
-              (col("n_bigrams").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-        StreamRun.toBatch(scored, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        val m = quarterLm(PipelineQueries.lmPlant(Tables.documents(s, dir)))
+        lmScoreProbe(s, dir, NgramLm.probeQq(_, m, fitsBroadcast = true))
       },
       Some(PipelineQueries.lmScoreStreamOracleSql)),
 
@@ -1570,32 +1378,14 @@ object StreamingQueries {
     // only if merge ≡ retrain and both round trips are value-exact.
     Q("stream_text_lm_score_merged",
       (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val docs = PipelineQueries.lmPlant(graft.Tables.documents(s, dir))
+        val docs = PipelineQueries.lmPlant(Tables.documents(s, dir))
+        def counts(r: Int) =
+          NgramLm.countTables(docs.filter(pmod(col("doc_id"), lit(4)) === r), "text")
         val root = PipelineQueries.modelRootShared("lm_counts_stream")
-        graft.text.NgramLm.saveCounts(s,
-          graft.text.NgramLm.countTables(
-            docs.filter(pmod(col("doc_id"), lit(4)) === 0), "text"), root)
-        graft.text.NgramLm.mergeIntoStore(s, root,
-          graft.text.NgramLm.countTables(
-            docs.filter(pmod(col("doc_id"), lit(4)) === 2), "text"))
-        val m = graft.text.NgramLm.modelFromCounts(
-          graft.text.NgramLm.loadCounts(s, root))
-        val incoming = PipelineQueries.lmPlant(StreamSources.documents(s, dir))
-          .select(col("doc_id"), explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val scored = graft.text.NgramLm.probeQq(incoming, m, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
-          .select(col("doc_id"), col("n_bigrams"), col("lm_logp_q"),
-            ((-col("lm_logp_q")).cast("double") /
-              (col("n_bigrams").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-        StreamRun.toBatch(scored, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        NgramLm.saveCounts(s, counts(0), root)
+        NgramLm.mergeIntoStore(s, root, counts(2))
+        val m = NgramLm.modelFromCounts(NgramLm.loadCounts(s, root))
+        lmScoreProbe(s, dir, NgramLm.probeQq(_, m, fitsBroadcast = true))
       },
       Some(PipelineQueries.lmScoreMergedStreamOracleSql)),
 
@@ -1603,38 +1393,29 @@ object StreamingQueries {
     // as a crawl monitor: BOTH bigram models (in-domain + general)
     // derive offline, the stream's exploded bigrams probe the two model
     // relations in sequence (four stream-static LEFT joins — no join
-    // state; smoothing covers misses on each side), and one watermarked
+    // state; smoothing covers misses on each side), and one ingress
     // window aggregation collects n and both quantized sums, the delta
     // taken AFTER aggregation as exact integer math. Zero-bigram docs
     // emit no rows, hence the scored-docs-only oracle variant.
     Q("stream_text_moore_lewis",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val docs = PipelineQueries.mlPlant(graft.Tables.documents(s, dir))
-        val mIn = graft.text.NgramLm.train(PipelineQueries.mlTrainIn(docs), "text")
-        val mGen = graft.text.NgramLm.train(PipelineQueries.mlTrainGen(docs), "text")
-        val incoming = PipelineQueries.mlPlant(StreamSources.documents(s, dir))
-          .select(col("doc_id"), explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val probed = graft.text.NgramLm.probeQq(
-          graft.text.NgramLm.probeQq(incoming, mIn, fitsBroadcast = true,
-            out = "qq_in", keepBigram = true),
-          mGen, fitsBroadcast = true, out = "qq_gen")
-        val scored = probed
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"),
-            sum(col("qq_in")).as("lm_in_q"),
-            sum(col("qq_gen")).as("lm_gen_q"))
-          .select(col("doc_id"), col("n_bigrams"), col("lm_in_q"),
-            col("lm_gen_q"),
-            (col("lm_in_q") - col("lm_gen_q")).as("ml_q"),
-            ((col("lm_gen_q") - col("lm_in_q")).cast("double") /
-              (col("n_bigrams").cast("double")
-                * lit(graft.text.NgramLm.Scale))).as("ml_xent"))
-        StreamRun.toBatch(scored, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        val docs = PipelineQueries.mlPlant(Tables.documents(s, dir))
+        val mIn = NgramLm.train(PipelineQueries.mlTrainIn(docs), "text")
+        val mGen = NgramLm.train(PipelineQueries.mlTrainGen(docs), "text")
+        ingressWindow(bigrams(PipelineQueries.mlPlant(StreamSources.documents(s, dir))),
+          "doc_id")(
+          probe = in => NgramLm.probeQq(
+            NgramLm.probeQq(in, mIn, fitsBroadcast = true, out = "qq_in", keepBigram = true),
+            mGen, fitsBroadcast = true, out = "qq_gen"),
+          agg = _.agg(count(lit(1)).as("n_bigrams"),
+              sum(col("qq_in")).as("lm_in_q"),
+              sum(col("qq_gen")).as("lm_gen_q"))
+            .select(col("doc_id"), col("n_bigrams"), col("lm_in_q"),
+              col("lm_gen_q"),
+              (col("lm_in_q") - col("lm_gen_q")).as("ml_q"),
+              ((col("lm_gen_q") - col("lm_in_q")).cast("double") /
+                (col("n_bigrams").cast("double") * lit(NgramLm.Scale))).as("ml_xent")))
           .orderBy("doc_id")
       },
       Some(PipelineQueries.mooreLewisStreamOracleSql)),
@@ -1643,30 +1424,14 @@ object StreamingQueries {
     // stream_text_lm_score: offline-trained MLE bigram table + unigram
     // table probed per micro-batch (stream-static LEFT joins, no join
     // state; the miss path re-derives 0.4·c1(w2)/N per row), per-doc sum
-    // as the same watermarked ingress-window aggregation. OOV gibberish
-    // hits the portable log's finite floor in-flight exactly as in batch.
+    // on the same ingress window. OOV gibberish hits the portable log's
+    // finite floor in-flight exactly as in batch.
     Q("stream_text_lm_score_backoff",
       (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val docs = PipelineQueries.lmPlant(graft.Tables.documents(s, dir))
-        val m = graft.text.NgramLm.trainBackoff(
+        val docs = PipelineQueries.lmPlant(Tables.documents(s, dir))
+        val m = NgramLm.trainBackoff(
           docs.filter(pmod(col("doc_id"), lit(4)) === 0), "text")
-        val incoming = PipelineQueries.lmPlant(StreamSources.documents(s, dir))
-          .select(col("doc_id"), explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val scored = graft.text.NgramLm
-          .probeQqBackoff(incoming, m, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
-          .select(col("doc_id"), col("n_bigrams"), col("lm_logp_q"),
-            ((-col("lm_logp_q")).cast("double") /
-              (col("n_bigrams").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-        StreamRun.toBatch(scored, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        lmScoreProbe(s, dir, NgramLm.probeQqBackoff(_, m, fitsBroadcast = true))
       },
       Some(PipelineQueries.lmBackoffStreamOracleSql)),
 
@@ -1675,30 +1440,21 @@ object StreamingQueries {
     // all three model tables train OFFLINE and are probed by
     // stream-static LEFT joins on one exploded trigram stream (no join
     // state; the unigram level derives per row), the per-doc sum rides
-    // the same watermarked ingress-window aggregation as the bigram
-    // twins. Closes the one batch/ingestion asymmetry in the LM family:
-    // every LM scheme now has both a batch row and its deployment twin.
+    // the same ingress window as the bigram twins. Every LM scheme has
+    // both a batch row and its deployment twin.
     Q("stream_text_lm_score_backoff3",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val docs = PipelineQueries.lmPlant(graft.Tables.documents(s, dir))
-        val m = graft.text.NgramLm.trainBackoff3(
+        val docs = PipelineQueries.lmPlant(Tables.documents(s, dir))
+        val m = NgramLm.trainBackoff3(
           docs.filter(pmod(col("doc_id"), lit(4)) === 0), "text")
-        val incoming = PipelineQueries.lmPlant(StreamSources.documents(s, dir))
-          .select(col("doc_id"), explode(wordGrams(col("text"), 3)).as("trigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val scored = graft.text.NgramLm
-          .probeQqBackoff3(incoming, m, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(count(lit(1)).as("n_trigrams"), sum(col("qq")).as("lm_logp_q"))
-          .select(col("doc_id"), col("n_trigrams"), col("lm_logp_q"),
-            ((-col("lm_logp_q")).cast("double") /
-              (col("n_trigrams").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-        StreamRun.toBatch(scored, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        ingressWindow(PipelineQueries.lmPlant(StreamSources.documents(s, dir))
+            .select(col("doc_id"), explode(wordGrams(col("text"), 3)).as("trigram")),
+          "doc_id")(
+          probe = NgramLm.probeQqBackoff3(_, m, fitsBroadcast = true),
+          agg = _.agg(count(lit(1)).as("n_trigrams"), sum(col("qq")).as("lm_logp_q"))
+            .select(col("doc_id"), col("n_trigrams"), col("lm_logp_q"),
+              xent("lm_logp_q", "n_trigrams").as("xent")))
           .orderBy("doc_id")
       },
       Some(PipelineQueries.lmBackoff3StreamOracleSql)),
@@ -1717,7 +1473,7 @@ object StreamingQueries {
         implicit val sp = s
         graft.text.CorpusStats.heavyHittersIngest(
           PipelineQueries.heavyHitterPlant(StreamSources.documents(s, dir)),
-          PipelineQueries.heavyHitterPlant(graft.Tables.documents(s, dir)),
+          PipelineQueries.heavyHitterPlant(Tables.documents(s, dir)),
           "text").orderBy("token")
       },
       Some(PipelineQueries.heavyHittersOracleSql)),
@@ -1744,31 +1500,26 @@ object StreamingQueries {
     // column work (literal query explode, tf = filter-count over the
     // doc's own token array, idf from a literal map, the same pinned
     // quantized dag), and the per-query top-k happens inside the
-    // windowed aggregation over the bounded scored set. Streaming the
-    // archive reproduces the batch ranks — shared oracle.
+    // ingress-window aggregation over the bounded scored set. Streaming
+    // the archive reproduces the batch ranks — shared oracle.
     Q("stream_text_bm25_topk",
       (s, dir) => {
         implicit val sp = s
-        val docs = PipelineQueries.heavyHitterPlant(graft.Tables.documents(s, dir))
+        val docs = PipelineQueries.heavyHitterPlant(Tables.documents(s, dir))
         val queries = docs.filter(pmod(col("doc_id"), lit(31)) === 0)
           .select(col("doc_id").as("query_id"),
-            concat(array_join(
-              slice(graft.functions.GraftFunctions.tokens(col("text")), 3, 8), " "),
+            concat(array_join(slice(tokens(col("text")), 3, 8), " "),
               lit(" xq"), col("doc_id").cast("string")).as("qtext"))
         val scored = graft.text.Bm25.streamScored(
           PipelineQueries.heavyHitterPlant(StreamSources.documents(s, dir)),
           docs, "doc_id", "text", queries, "query_id", "qtext")
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-          .groupBy(window(col("event_time"), "1 hour"), col("query_id"))
-          .agg(collect_list(struct((-col("score_q")).as("ns"),
-            col("doc_id").as("did"), col("score_q").as("sq"))).as("cand"))
-          .select(col("query_id"),
-            posexplode(slice(array_sort(col("cand")), 1, 5)))
-          .select(col("query_id"), (col("pos") + 1).cast("int").as("rnk"),
-            col("col.did").as("doc_id"), col("col.sq").as("score_q"))
-        graft.streaming.StreamRun.toBatch(scored, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        ingressWindow(scored, "query_id")(
+          agg = _.agg(collect_list(struct((-col("score_q")).as("ns"),
+              col("doc_id").as("did"), col("score_q").as("sq"))).as("cand"))
+            .select(col("query_id"),
+              posexplode(slice(array_sort(col("cand")), 1, 5)))
+            .select(col("query_id"), (col("pos") + 1).cast("int").as("rnk"),
+              col("col.did").as("doc_id"), col("col.sq").as("score_q")))
           .orderBy("query_id", "rnk")
       },
       Some(PipelineQueries.bm25OracleSql)),
@@ -1810,7 +1561,7 @@ object StreamingQueries {
     Q("stream_text_corpus_overlap_kmv",
       (s, dir) => {
         implicit val sp = s
-        val (_, refB) = PipelineQueries.overlapSides(graft.Tables.documents(s, dir))
+        val (_, refB) = PipelineQueries.overlapSides(Tables.documents(s, dir))
         val streamA = StreamSources.documents(s, dir)
           .filter(col("doc_id") % 2 === 0)
           .select(concat(col("text"), lit(" xa"),
@@ -1827,7 +1578,7 @@ object StreamingQueries {
     Q("stream_pipeline_sample_bottomk",
       (s, dir) => {
         implicit val sp = s
-        graft.pipeline.Mixing.bottomKSampleIngest(
+        Mixing.bottomKSampleIngest(
           StreamSources.documents(s, dir).select("doc_id"), "doc_id",
           PipelineQueries.BottomKSampleSize).orderBy("doc_id")
       },
@@ -1841,7 +1592,7 @@ object StreamingQueries {
     Q("stream_pipeline_sample_weighted",
       (s, dir) => {
         implicit val sp = s
-        graft.pipeline.Mixing.weightedSampleIngest(
+        Mixing.weightedSampleIngest(
           StreamSources.documents(s, dir).select("doc_id", "n_chars"),
           "doc_id", col("n_chars"), PipelineQueries.BottomKSampleSize)
           .orderBy("doc_id")
@@ -1859,7 +1610,7 @@ object StreamingQueries {
     Q("stream_pipeline_data_budget",
       (s, dir) => {
         implicit val sp = s
-        graft.pipeline.Mixing.dataBudgetIngest(
+        Mixing.dataBudgetIngest(
           StreamSources.documents(s, dir).select(
             when(pmod(col("doc_id"), lit(10)) < 7, lit("web"))
               .when(pmod(col("doc_id"), lit(10)) < 9, lit("books"))
@@ -1906,7 +1657,7 @@ object StreamingQueries {
         implicit val sp = s
         graft.pipeline.Profiling.lengthDriftPsiIngest(
           PipelineQueries.driftPlant(StreamSources.documents(s, dir)),
-          PipelineQueries.driftPlant(graft.Tables.documents(s, dir)),
+          PipelineQueries.driftPlant(Tables.documents(s, dir)),
           "source", "text").orderBy("source")
       },
       Some(PipelineQueries.driftPsiOracleSql)),
@@ -1926,7 +1677,7 @@ object StreamingQueries {
         implicit val sp = s
         graft.pipeline.Profiling.tokenDriftPsiIngest(
           PipelineQueries.tokenDriftPlant(StreamSources.documents(s, dir)),
-          PipelineQueries.tokenDriftPlant(graft.Tables.documents(s, dir)),
+          PipelineQueries.tokenDriftPlant(Tables.documents(s, dir)),
           "source", "text").orderBy("source")
       },
       Some(PipelineQueries.tokenDriftPsiOracleSql)),
@@ -1934,43 +1685,35 @@ object StreamingQueries {
     // MODEL drift AT INGESTION — the LM-xent face of the drift monitor
     // run where it matters: the reference bigram LM and each source's
     // BASELINE xent histogram derive OFFLINE from the raw archive, each
-    // arriving doc's quantized log-prob aggregates on the watermarked
-    // ingress window (the streaming-LM shape — update mode, single
-    // emission under AvailableNow), bins are the same EXACT integer
-    // 1/16-xent cut, and the keyed-PSI tail charges each source only
-    // for shifts vs its own past. Streaming the archive reproduces the
-    // batch row exactly (shared oracle); in production the stream is
-    // the new crawl scored against last night's LM and baselines.
+    // arriving doc's quantized log-prob aggregates on the ingress
+    // window (the streaming-LM shape — update mode, single emission
+    // under AvailableNow), bins are the same EXACT integer 1/16-xent
+    // cut, and the keyed-PSI tail charges each source only for shifts
+    // vs its own past. Streaming the archive reproduces the batch row
+    // exactly (shared oracle); in production the stream is the new
+    // crawl scored against last night's LM and baselines.
     Q("stream_pipeline_lm_drift_psi",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val raw = graft.Tables.documents(s, dir)
+        val raw = Tables.documents(s, dir)
         // stratified reference split — see the batch twin
         val ref = raw.filter(expr("(doc_id div 20) % 2 = 0"))
-        val m = graft.text.NgramLm.train(ref, "text")
-        val base = graft.Caches.track(
-          graft.text.NgramLm.score(ref, "doc_id", "text", m)
+        val m = NgramLm.train(ref, "text")
+        val base = Caches.track(
+          NgramLm.score(ref, "doc_id", "text", m)
             .join(raw.select("doc_id", "source"), "doc_id")
             .filter(col("n_bigrams") > 0)
             .select(col("source"),
               expr("((-lm_logp_q) * 16) div (n_bigrams * 1000000)").as("bin"))
             .groupBy("source", "bin").agg(count(lit(1)).as("cnt")))
-        val incoming = PipelineQueries.lmDriftPlant(
-            StreamSources.documents(s, dir))
+        val incoming = PipelineQueries.lmDriftPlant(StreamSources.documents(s, dir))
           .select(col("doc_id"), col("source"),
             explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val perDoc = graft.text.NgramLm.probeQq(incoming, m, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"),
-            col("doc_id"), col("source"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
-          .select(col("doc_id"), col("source"),
-            col("n_bigrams"), col("lm_logp_q"))
-        val scored = StreamRun.toBatch(perDoc, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-        val byKey = graft.Caches.track(scored
+        val scored = ingressWindow(incoming, "doc_id", "source")(
+          probe = NgramLm.probeQq(_, m, fitsBroadcast = true),
+          agg = _.agg(count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
+            .select(col("doc_id"), col("source"), col("n_bigrams"), col("lm_logp_q")))
+        val byKey = Caches.track(scored
           .select(col("source"),
             expr("((-lm_logp_q) * 16) div (n_bigrams * 1000000)").as("bin"))
           .groupBy("source", "bin").agg(count(lit(1)).as("cnt")))
@@ -1991,10 +1734,9 @@ object StreamingQueries {
     Q("stream_pipeline_embedding_drift_psi",
       (s, dir) => {
         implicit val sp = s
-        val ref = graft.Caches.track(PipelineQueries.embDriftPlant(s, dir))
-        val cents = graft.similarity.Similarity.kmeansCentroidsQuantized(
-          ref, "vec_id", "embedding", k = 16, iters = 2)
-        val srcs = graft.Caches.track(graft.Tables.documents(s, dir)
+        val ref = Caches.track(PipelineQueries.embDriftPlant(s, dir))
+        val cents = semanticCentroids(ref)
+        val srcs = Caches.track(Tables.documents(s, dir)
           .select(col("doc_id").as("vec_id"), col("source")))
         val stream = StreamSources.embeddings(s, dir)
           .join(broadcast(srcs), "vec_id")
@@ -2012,32 +1754,27 @@ object StreamingQueries {
     // for df statistics: the vocabulary (token → document frequency)
     // derives OFFLINE from the archived corpus, the stream probes it as
     // a stream-static broadcast join per exploded token and the per-doc
-    // sums ride the same watermarked ingress-window aggregation as the
-    // LM twins. Zero-token docs emit no rows (no exploded input → no
-    // aggregation state), hence the scored-docs-only oracle tail.
+    // sums ride the ingress window like the LM twins. Zero-token docs
+    // emit no rows (no exploded input → no aggregation state), hence the
+    // scored-docs-only oracle tail.
     Q("stream_text_df_score",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.tokens
-        val docs = PipelineQueries.plantRareTokens(graft.Tables.documents(s, dir))
-        val vocab = graft.Caches.track(
+        val docs = PipelineQueries.plantRareTokens(Tables.documents(s, dir))
+        val vocab = Caches.track(
           graft.text.CorpusStats.vocabulary(docs, "doc_id", "text"))
-        val incoming = PipelineQueries.plantRareTokens(StreamSources.documents(s, dir))
-          .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val scored = incoming.join(broadcast(vocab), "token")
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(count(lit(1)).as("n_tokens"),
-            sum(col("df")).as("sum_df"),
-            sum((col("df") === 1L).cast("long")).as("n_hapax"))
-          .select(col("doc_id"), col("n_tokens"), col("sum_df"),
-            (col("sum_df").cast("double") / col("n_tokens").cast("double"))
-              .as("mean_df"),
-            (col("n_hapax").cast("double") / col("n_tokens").cast("double"))
-              .as("hapax_ratio"))
-        StreamRun.toBatch(scored, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        ingressWindow(PipelineQueries.plantRareTokens(StreamSources.documents(s, dir))
+            .select(col("doc_id"), explode(tokens(col("text"))).as("token")),
+          "doc_id")(
+          probe = _.join(broadcast(vocab), "token"),
+          agg = _.agg(count(lit(1)).as("n_tokens"),
+              sum(col("df")).as("sum_df"),
+              sum((col("df") === 1L).cast("long")).as("n_hapax"))
+            .select(col("doc_id"), col("n_tokens"), col("sum_df"),
+              (col("sum_df").cast("double") / col("n_tokens").cast("double"))
+                .as("mean_df"),
+              (col("n_hapax").cast("double") / col("n_tokens").cast("double"))
+                .as("hapax_ratio")))
           .orderBy("doc_id")
       },
       Some(PipelineQueries.dfScoreStreamOracleSql)),
@@ -2048,17 +1785,7 @@ object StreamingQueries {
     // per row — pure column work, append mode, no state, no watermark;
     // the batch oracle checks it verbatim because the decision never
     // depended on anything but the row.
-    Q("stream_pipeline_source_mix",
-      (s, dir) => {
-        implicit val sp = s
-        val out = graft.pipeline.Mixing.sourceMix(
-          StreamSources.documents(s, dir).select("doc_id", "source"),
-          "doc_id", "source", PipelineQueries.MixWeights,
-          PipelineQueries.MixDefaultWeight)
-        StreamRun.toBatch(out, "append", numPartitions = 4)
-          .orderBy("doc_id", "copy")
-      },
-      Some(PipelineQueries.sourceMixOracleSql)),
+    PipelineQueries.sourceMix.stream,
 
     // CDC chunk dedup AT INGESTION — the re-crawl monitor: the archive's
     // (%4 residue) chunk-digest representatives derive offline, incoming
@@ -2070,14 +1797,8 @@ object StreamingQueries {
       (s, dir) => {
         implicit val sp = s
         val ck = graft.pipeline.Chunking
-        val archive = ck.cdcChunks(
-          graft.Tables.documents(s, dir)
-            .filter(pmod(col("doc_id"), lit(4)) === 0),
-          "doc_id", "text", mask = PipelineQueries.CdcMask)
-        val out = ck.chunkDedupAgainst(
-          ck.cdcChunks(StreamSources.documents(s, dir), "doc_id", "text",
-            mask = PipelineQueries.CdcMask),
-          archive, "doc_id", "chunk_no", "chunk_text")
+        val out = ck.chunkDedupAgainst(cdcChunks(StreamSources.documents(s, dir)),
+          cdcChunks(trainingSlice(s, dir)), "doc_id", "chunk_no", "chunk_text")
         StreamRun.toBatch(out, "append", numPartitions = 4)
           .orderBy("doc_id", "chunk_no")
       },
@@ -2092,19 +1813,11 @@ object StreamingQueries {
       (s, dir) => {
         implicit val sp = s
         val ck = graft.pipeline.Chunking
-        val root = PipelineQueries.serveRoot("cdc_digest_index", dir)
-        graft.pipeline.ModelStore.ensure(s, root, Seq("reps" ->
-          ck.chunkDigestReps(
-            ck.cdcChunks(
-              graft.Tables.documents(s, dir)
-                .filter(pmod(col("doc_id"), lit(4)) === 0),
-              "doc_id", "text", mask = PipelineQueries.CdcMask),
-            "doc_id", "chunk_no", "chunk_text")))
-        val out = ck.chunkDedupAgainstReps(
-          ck.cdcChunks(StreamSources.documents(s, dir), "doc_id", "text",
-            mask = PipelineQueries.CdcMask),
-          graft.Caches.track(graft.pipeline.ModelStore.loadRelation(s, root, "reps")),
-          "doc_id", "chunk_no", "chunk_text")
+        val reps = servedIndex(s, PipelineQueries.serveRoot("cdc_digest_index", dir),
+          "reps")(Seq("reps" -> ck.chunkDigestReps(cdcChunks(trainingSlice(s, dir)),
+            "doc_id", "chunk_no", "chunk_text")))("reps")
+        val out = ck.chunkDedupAgainstReps(cdcChunks(StreamSources.documents(s, dir)),
+          reps, "doc_id", "chunk_no", "chunk_text")
         StreamRun.toBatch(out, "append", numPartitions = 4)
           .orderBy("doc_id", "chunk_no")
       },
@@ -2113,24 +1826,16 @@ object StreamingQueries {
     // chunk-level NEAR-dup AT INGESTION — the re-crawl monitor for
     // EDITED boilerplate: the archive's distinct-chunk representatives
     // carry static band + sorted-shingle tables; each incoming document
-    // chunks per row (CDC is pure column work), computes its chunks'
-    // band signatures in-expression, equi-joins the static bands and
-    // exact-verifies with the fused SortedJaccard — flagging per
-    // (doc, chunk) with the duplicate-insensitive min/max aggregation.
-    // Self-pairs included (a re-ingested archive chunk flags against its
-    // own representative at jaccard 1). Sub-2-token chunks carry no
+    // chunks per row (CDC is pure column work) and its chunks run the
+    // MinHash band probe ([[minhashProbe]]) per (doc, chunk). Self-pairs
+    // included (a re-ingested archive chunk flags against its own
+    // representative at jaccard 1). Sub-2-token chunks carry no
     // shingles and never flag — the family's no-signature contract.
     Q("stream_pipeline_cdc_chunk_neardup",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.{hash60, wordShingles}
-        val ck = graft.pipeline.Chunking
-        val kb = ck.ChunkKeyBase
-        val archive = ck.cdcChunks(
-          graft.Tables.documents(s, dir)
-            .filter(pmod(col("doc_id"), lit(4)) === 0),
-          "doc_id", "text", mask = PipelineQueries.CdcMask)
-        val aReps = graft.Caches.track(archive
+        val kb = graft.pipeline.Chunking.ChunkKeyBase
+        val aReps = Caches.track(cdcChunks(trainingSlice(s, dir))
           .select(md5(col("chunk_text")).as("__d"),
             struct(col("doc_id"), col("chunk_no")).as("__rc"),
             col("chunk_text"))
@@ -2141,44 +1846,22 @@ object StreamingQueries {
               .cast("long").as("a_id"),
             sort_array(wordShingles(col("__t"), 2)).as("sh_a"))
           .filter(size(col("sh_a")) > 0))
-        val aBands = graft.Caches.track(
-          graft.dedup.Dedup.lshBands(
-            graft.dedup.Dedup.minhashSignatures(
-              aReps.select(col("a_id"),
-                transform(col("sh_a"), g => hash60(g)).as("hs")),
+        val aBands = Caches.track(
+          Dedup.lshBands(
+            Dedup.minhashSignatures(
+              aReps.select(col("a_id"), transform(col("sh_a"), g => hash60(g)).as("hs")),
               "a_id", 12),
             "a_id", 3))
-        val incoming = ck.cdcChunks(StreamSources.documents(s, dir),
-            "doc_id", "text", mask = PipelineQueries.CdcMask)
+        val incoming = cdcChunks(StreamSources.documents(s, dir))
           .select(col("doc_id"), col("chunk_no"),
             sort_array(wordShingles(col("chunk_text"), 2)).as("sh_b"))
           .filter(size(col("sh_b")) > 0)
-          .withColumn("sigs", graft.functions.expressions.MinHashSigs.of(
-            transform(col("sh_b"), g => hash60(g)), 12))
-          .withColumn("bb", explode(
-            graft.dedup.Dedup.lshBandsColumn(col("sigs"), 12, 3)))
-          .select(col("doc_id"), col("chunk_no"), col("sh_b"),
-            col("bb.band").as("band"), col("bb.bandsig").as("bandsig"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val verified = incoming
-          .join(aBands, Seq("band", "bandsig"))
-          .join(aReps, Seq("a_id"))
-          .select(col("event_time"), col("doc_id"), col("chunk_no"), col("a_id"),
-            graft.functions.expressions.SortedJaccard
-              .of(col("sh_b"), col("sh_a")).as("jaccard"))
-        val flagged = verified
-          .groupBy(window(col("event_time"), "1 hour"),
-            col("doc_id"), col("chunk_no"))
-          .agg(min(when(col("jaccard") >= 0.6, col("a_id"))).as("rep"),
-            max(when(col("jaccard") >= 0.6, col("jaccard"))).as("j_max"))
-          .filter(col("rep").isNotNull)
-          .select(col("doc_id"), col("chunk_no"),
-            expr(s"rep div $kb").as("rep_doc"),
-            expr(s"rep % $kb").cast("int").as("rep_chunk"),
-            col("j_max"))
-        StreamRun.toBatch(flagged, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        minhashProbe(incoming, Seq("doc_id", "chunk_no"),
+          Map("bands" -> aBands, "verify" -> aReps))(
+          _.select(col("doc_id"), col("chunk_no"),
+            expr(s"rep_id div $kb").as("rep_doc"),
+            expr(s"rep_id % $kb").cast("int").as("rep_chunk"),
+            col("j_max")))
           .orderBy("doc_id", "chunk_no")
       },
       Some(PipelineQueries.cdcNearDupIncrementalOracleSql)),
@@ -2187,17 +1870,7 @@ object StreamingQueries {
     // monitor: the entropy kernel is pure per-row column work, so it
     // streams as-is (append, zero state) and emits the batch row's exact
     // output — shared oracle.
-    Q("stream_text_entropy",
-      (s, dir) => {
-        implicit val sp = s
-        val cols = graft.text.TextAnalysis.entropyColumns(col("text"))
-          .map { case (n, c) => c.as(n) }
-        val out = StreamSources.documents(s, dir)
-          .select(col("doc_id") +: cols: _*)
-        StreamRun.toBatch(out, "append", numPartitions = 4)
-          .orderBy("doc_id")
-      },
-      Some(PipelineQueries.entropyOracleSql)),
+    PipelineQueries.entropy.stream,
 
     // TEMPERATURE mixing AT INGESTION — the derived-weight variant with
     // the production split: per-source counts are not streamable, so the
@@ -2210,10 +1883,10 @@ object StreamingQueries {
     Q("stream_pipeline_source_mix_temp",
       (s, dir) => {
         implicit val sp = s
-        val weights = graft.pipeline.Mixing.temperatureWeights(
-          PipelineQueries.skewedSources(graft.Tables.documents(s, dir)),
+        val weights = Mixing.temperatureWeights(
+          PipelineQueries.skewedSources(Tables.documents(s, dir)),
           "source", PipelineQueries.TempMixTarget)
-        val out = graft.pipeline.Mixing.sourceMix(
+        val out = Mixing.sourceMix(
           PipelineQueries.skewedSources(StreamSources.documents(s, dir)),
           "doc_id", "source", weights, defaultWeight = 0.0)
         StreamRun.toBatch(out, "append", numPartitions = 4)
@@ -2231,18 +1904,7 @@ object StreamingQueries {
     // mode, no state. Streaming the archive reproduces the batch row
     // exactly (shared oracle); in production the stream is the new
     // crawl resampled under last night's domain weights.
-    Q("stream_pipeline_doremi_mix",
-      (s, dir) => {
-        implicit val sp = s
-        val weights = PipelineQueries.doremiWeightTable(s, dir)
-        val out = graft.pipeline.Mixing.sourceMix(
-          PipelineQueries.doremiPlant(StreamSources.documents(s, dir))
-            .select("doc_id", "source"),
-          "doc_id", "source", weights, defaultWeight = 0.0)
-        StreamRun.toBatch(out, "append", numPartitions = 4)
-          .orderBy("doc_id", "copy")
-      },
-      Some(PipelineQueries.doremiMixOracleSql)),
+    PipelineQueries.doremiMix.stream,
 
     // deterministic SPLIT AT INGESTION — the property that makes the
     // hash split right for a growing corpus, exercised where it matters:
@@ -2250,16 +1912,7 @@ object StreamingQueries {
     // split gives it (pure per-row hash, no RNG state, no dependence on
     // what else arrived), so eval membership never leaks across
     // increments. Append mode, zero state; the batch oracle verbatim.
-    Q("stream_pipeline_split",
-      (s, dir) => {
-        implicit val sp = s
-        val out = graft.pipeline.Mixing.hashSplit(
-          StreamSources.documents(s, dir).select("doc_id"),
-          "doc_id", PipelineQueries.SplitSpec)
-        StreamRun.toBatch(out, "append", numPartitions = 4)
-          .orderBy("doc_id")
-      },
-      Some(PipelineQueries.splitOracleSql)),
+    PipelineQueries.docSplit.stream,
 
     // the MODEL-ERA composite AT INGESTION — v5's whole chain in its
     // deployment shape: both models and every boundary derive OFFLINE
@@ -2269,7 +1922,7 @@ object StreamingQueries {
     // explode), canonical-copy probe (stream-static join on md5 digest:
     // a doc survives iff it IS the archive's minimum-id copy — the
     // re-ingestion dedup rule), LM scoring through the stream-static
-    // probe + one watermarked window agg, the τ2 threshold (≤ keeps
+    // probe + one ingress-window agg, the τ2 threshold (≤ keeps
     // boundary tie classes whole, which here coincides with the batch
     // rank gate: rank ≤ 2n/3 implies xent ≤ τ2 and every canonical doc
     // is rank-kept), then per-row mixing draws and the split CASE. The
@@ -2278,42 +1931,26 @@ object StreamingQueries {
     Q("stream_pipeline_corpus_full_v5",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val qc = graft.text.QualityClassifier
         // the offline chain (models, τ₂, digest map, dedup survivors)
-        // comes from the ONE shared v5 builder — the r16 de-duplication
-        // of the inline re-derivation this row used to carry (V5Stages)
+        // comes from the ONE shared v5 builder (V5Stages)
         val st = PipelineQueries.corpusV5Stages(s, dir)
-        val (cm, lmm, tau2, repMap) = (st.cm, st.lmm, st.tau2, st.repMap)
-        val weights = graft.pipeline.Mixing.temperatureWeights(st.deduped,
+        val weights = Mixing.temperatureWeights(st.deduped,
           "source", PipelineQueries.CorpusV5MixTarget)
         val incoming = PipelineQueries.corpusV5PlantOf(StreamSources.documents(s, dir))
-          .withColumn("__mg", qc.presenceMarginCol(col("text"), cm))
+          .withColumn("__mg", QualityClassifier.presenceMarginCol(col("text"), st.cm))
           .filter(col("__mg") >= lit(0.0))
           .withColumn("__dg", md5(col("text")))
-          .join(repMap, Seq("__dg"))
+          .join(st.repMap, Seq("__dg"))
           .filter(col("__rep_id") === col("doc_id"))
           .select(col("doc_id"), col("source"),
             explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val agg = graft.text.NgramLm.probeQq(incoming, lmm, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("source")).as("source"),
-            count(lit(1)).as("nb"), sum(col("qq")).as("lq"))
-          .select(col("doc_id"), col("source"),
-            ((-col("lq")).cast("double") /
-              (col("nb").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-          .filter(col("xent") <= lit(tau2))
-        val mixed = graft.pipeline.Mixing.sourceMix(
-          agg.select("doc_id", "source"), "doc_id", "source", weights,
-          defaultWeight = 0.0)
-        val out = graft.pipeline.Mixing.hashSplit(mixed, "doc_id",
-          PipelineQueries.SplitSpec)
-          .select("doc_id", "source", "copy", "split")
-        StreamRun.toBatch(out, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        ingressWindow(incoming, "doc_id")(
+          probe = NgramLm.probeQq(_, st.lmm, fitsBroadcast = true),
+          agg = g => mixAndSplit(g
+            .agg(min(col("source")).as("source"),
+              count(lit(1)).as("nb"), sum(col("qq")).as("lq"))
+            .select(col("doc_id"), col("source"), xent("lq", "nb").as("xent"))
+            .filter(col("xent") <= lit(st.tau2)), weights))
           .orderBy("doc_id", "copy")
       },
       Some(PipelineQueries.corpusV5Sql)),
@@ -2325,44 +1962,31 @@ object StreamingQueries {
     // the perplexity gate compares the streamed doc's xent to the
     // offline tertile boundary (the composite's τ₂ convention), and the
     // dedup gate probes the offline keep-first digest map — all
-    // stream-static/stateless before one windowed per-doc aggregation.
-    // CASE order preserves first-drop semantics; the oracle is the v5
-    // survivor ladder at per-doc grain.
+    // stream-static/stateless before one ingress-window per-doc
+    // aggregation. CASE order preserves first-drop semantics; the oracle
+    // is the v5 survivor ladder at per-doc grain.
     Q("stream_pipeline_reject_report_v5",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val qc = graft.text.QualityClassifier
-        val pq = PipelineQueries
-        // the offline chain (models, τ₂, digest map) comes from the ONE
-        // shared v5 builder — the r16 de-duplication of the inline
-        // re-derivation this row used to carry (see V5Stages)
-        val st = pq.corpusV5Stages(s, dir)
-        val (cm, lmm, tau2, repMap) = (st.cm, st.lmm, st.tau2, st.repMap)
-        val incoming = pq.corpusV5PlantOf(StreamSources.documents(s, dir))
-          .withColumn("__mg", qc.presenceMarginCol(col("text"), cm))
+        val st = PipelineQueries.corpusV5Stages(s, dir)
+        val incoming = PipelineQueries.corpusV5PlantOf(StreamSources.documents(s, dir))
+          .withColumn("__mg", QualityClassifier.presenceMarginCol(col("text"), st.cm))
           .withColumn("__dg", md5(col("text")))
-          .join(repMap, Seq("__dg"), "left")
+          .join(st.repMap, Seq("__dg"), "left")
           .select(col("doc_id"), col("source"), col("__mg"), col("__rep_id"),
             explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val agg = graft.text.NgramLm.probeQq(incoming, lmm, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("source")).as("source"), min(col("__mg")).as("mg"),
-            min(col("__rep_id")).as("rep"),
-            count(lit(1)).as("nb"), sum(col("qq")).as("lq"))
-          .select(col("doc_id"), col("source"), col("mg"), col("rep"),
-            ((-col("lq")).cast("double") /
-              (col("nb").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-        val out = agg.select(col("doc_id"), col("source"),
-          when(col("mg") < lit(0.0), "classifier")
-            .when(col("xent") > lit(tau2), "ppl_tail")
-            .when(col("rep").isNull || col("rep") =!= col("doc_id"), "exact_dup")
-            .otherwise("kept").as("first_drop"))
-        StreamRun.toBatch(out, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        ingressWindow(incoming, "doc_id")(
+          probe = NgramLm.probeQq(_, st.lmm, fitsBroadcast = true),
+          agg = _.agg(min(col("source")).as("source"), min(col("__mg")).as("mg"),
+              min(col("__rep_id")).as("rep"),
+              count(lit(1)).as("nb"), sum(col("qq")).as("lq"))
+            .select(col("doc_id"), col("source"), col("mg"), col("rep"),
+              xent("lq", "nb").as("xent"))
+            .select(col("doc_id"), col("source"),
+              when(col("mg") < lit(0.0), "classifier")
+                .when(col("xent") > lit(st.tau2), "ppl_tail")
+                .when(col("rep").isNull || col("rep") =!= col("doc_id"), "exact_dup")
+                .otherwise("kept").as("first_drop")))
           .orderBy("doc_id")
       },
       Some(PipelineQueries.rejectReportV5StreamOracleSql)),
@@ -2373,21 +1997,18 @@ object StreamingQueries {
     // corpus-dependent stage, so the stream probes it as a stateless
     // stream-static join, exactly the dedup-gate convention), every
     // per-row gate (classifier margin, digest rep, media membership)
-    // evaluates before the one windowed LM aggregation, and the tail is
-    // the same mix + split. Shares the batch composite's oracle.
+    // evaluates before the one ingress-window LM aggregation, and the
+    // tail is the same mix + split. Shares the batch composite's oracle.
     Q("stream_pipeline_corpus_full_v6",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val pq = PipelineQueries
-        val qc = graft.text.QualityClassifier
-        val st = pq.corpusV6Stages(s, dir)
-        val weights = graft.pipeline.Mixing.temperatureWeights(st.mediaKept,
-          "source", pq.CorpusV5MixTarget)
+        val st = PipelineQueries.corpusV6Stages(s, dir)
+        val weights = Mixing.temperatureWeights(st.mediaKept,
+          "source", PipelineQueries.CorpusV5MixTarget)
         val mdrop = st.mediaDropped
           .select(col("doc_id"), lit(1).as("__mdrop"))
-        val incoming = pq.corpusV6PlantOf(StreamSources.documents(s, dir))
-          .withColumn("__mg", qc.presenceMarginCol(col("text"), st.cm))
+        val incoming = PipelineQueries.corpusV6PlantOf(StreamSources.documents(s, dir))
+          .withColumn("__mg", QualityClassifier.presenceMarginCol(col("text"), st.cm))
           .filter(col("__mg") >= lit(0.0))
           .withColumn("__dg", md5(col("text")))
           .join(st.repMap, Seq("__dg"))
@@ -2396,30 +2017,19 @@ object StreamingQueries {
           .filter(col("__mdrop").isNull)
           .select(col("doc_id"), col("source"),
             explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val agg = graft.text.NgramLm.probeQq(incoming, st.lmm, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("source")).as("source"),
-            count(lit(1)).as("nb"), sum(col("qq")).as("lq"))
-          .select(col("doc_id"), col("source"),
-            ((-col("lq")).cast("double") /
-              (col("nb").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-          // the RANK rule's boundary is lexicographic on (xent, doc_id):
-          // the shared captions are identical texts with identical xent,
-          // so the tie group straddles the cut and a bare xent threshold
-          // mis-attributes the boundary doc (see V6Stages)
-          .filter(col("xent") < lit(st.tau2) ||
-            (col("xent") === lit(st.tau2) && col("doc_id") <= lit(st.tau2Id)))
-        val mixed = graft.pipeline.Mixing.sourceMix(
-          agg.select("doc_id", "source"), "doc_id", "source", weights,
-          defaultWeight = 0.0)
-        val out = graft.pipeline.Mixing.hashSplit(mixed, "doc_id",
-          PipelineQueries.SplitSpec)
-          .select("doc_id", "source", "copy", "split")
-        StreamRun.toBatch(out, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        ingressWindow(incoming, "doc_id")(
+          probe = NgramLm.probeQq(_, st.lmm, fitsBroadcast = true),
+          agg = g => mixAndSplit(g
+            .agg(min(col("source")).as("source"),
+              count(lit(1)).as("nb"), sum(col("qq")).as("lq"))
+            .select(col("doc_id"), col("source"), xent("lq", "nb").as("xent"))
+            // the RANK rule's boundary is lexicographic on (xent, doc_id):
+            // the shared captions are identical texts with identical xent,
+            // so the tie group straddles the cut and a bare xent threshold
+            // mis-attributes the boundary doc (see V6Stages)
+            .filter(col("xent") < lit(st.tau2) ||
+              (col("xent") === lit(st.tau2) && col("doc_id") <= lit(st.tau2Id))),
+            weights))
           .orderBy("doc_id", "copy")
       },
       Some(PipelineQueries.corpusV6Sql)),
@@ -2432,43 +2042,33 @@ object StreamingQueries {
     Q("stream_pipeline_reject_report_v6",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val pq = PipelineQueries
-        val qc = graft.text.QualityClassifier
-        val st = pq.corpusV6Stages(s, dir)
+        val st = PipelineQueries.corpusV6Stages(s, dir)
         val mdrop = st.mediaDropped
           .select(col("doc_id"), lit(1).as("__mdrop"))
-        val incoming = pq.corpusV6PlantOf(StreamSources.documents(s, dir))
-          .withColumn("__mg", qc.presenceMarginCol(col("text"), st.cm))
+        val incoming = PipelineQueries.corpusV6PlantOf(StreamSources.documents(s, dir))
+          .withColumn("__mg", QualityClassifier.presenceMarginCol(col("text"), st.cm))
           .withColumn("__dg", md5(col("text")))
           .join(st.repMap, Seq("__dg"), "left")
           .join(mdrop, Seq("doc_id"), "left")
           .select(col("doc_id"), col("source"), col("__mg"),
             col("__rep_id"), col("__mdrop"),
             explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val agg = graft.text.NgramLm.probeQq(incoming, st.lmm, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("source")).as("source"), min(col("__mg")).as("mg"),
-            min(col("__rep_id")).as("rep"), min(col("__mdrop")).as("mdrop"),
-            count(lit(1)).as("nb"), sum(col("qq")).as("lq"))
-          .select(col("doc_id"), col("source"), col("mg"), col("rep"),
-            col("mdrop"),
-            ((-col("lq")).cast("double") /
-              (col("nb").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-        val out = agg.select(col("doc_id"), col("source"),
-          when(col("mg") < lit(0.0), "classifier")
-            // lexicographic (xent, doc_id) boundary — see V6Stages
-            .when(col("xent") > lit(st.tau2) ||
-              (col("xent") === lit(st.tau2) && col("doc_id") > lit(st.tau2Id)),
-              "ppl_tail")
-            .when(col("rep").isNull || col("rep") =!= col("doc_id"), "exact_dup")
-            .when(col("mdrop").isNotNull, "media_dup")
-            .otherwise("kept").as("first_drop"))
-        StreamRun.toBatch(out, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        ingressWindow(incoming, "doc_id")(
+          probe = NgramLm.probeQq(_, st.lmm, fitsBroadcast = true),
+          agg = _.agg(min(col("source")).as("source"), min(col("__mg")).as("mg"),
+              min(col("__rep_id")).as("rep"), min(col("__mdrop")).as("mdrop"),
+              count(lit(1)).as("nb"), sum(col("qq")).as("lq"))
+            .select(col("doc_id"), col("source"), col("mg"), col("rep"),
+              col("mdrop"), xent("lq", "nb").as("xent"))
+            .select(col("doc_id"), col("source"),
+              when(col("mg") < lit(0.0), "classifier")
+                // lexicographic (xent, doc_id) boundary — see V6Stages
+                .when(col("xent") > lit(st.tau2) ||
+                  (col("xent") === lit(st.tau2) && col("doc_id") > lit(st.tau2Id)),
+                  "ppl_tail")
+                .when(col("rep").isNull || col("rep") =!= col("doc_id"), "exact_dup")
+                .when(col("mdrop").isNotNull, "media_dup")
+                .otherwise("kept").as("first_drop")))
           .orderBy("doc_id")
       },
       Some(PipelineQueries.rejectReportV6StreamOracleSql)),
@@ -2487,40 +2087,28 @@ object StreamingQueries {
     Q("stream_pipeline_quality_profile",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val qc = graft.text.QualityClassifier
-        val base = PipelineQueries.qualityProfilePlant(graft.Tables.documents(s, dir))
-        val feats = graft.Caches.track(qc.features(base, "doc_id", "text",
-          (pmod(col("doc_id"), lit(6)) === 0).cast("int")))
-        val cm = qc.train(feats)
-        val lmm = graft.text.NgramLm.train(
-          base.filter(pmod(col("doc_id"), lit(4)) === 0), "text")
+        val qc = QualityClassifier
+        val base = PipelineQueries.qualityProfilePlant(Tables.documents(s, dir))
+        val cm = classifierOn(base)
+        val lmm = quarterLm(base)
+        val streamed = PipelineQueries.qualityProfilePlant(StreamSources.documents(s, dir))
         // ingest aggregation 1: doc-level counts + margin sums
-        val s1 = PipelineQueries.qualityProfilePlant(StreamSources.documents(s, dir))
-          .select(col("source"),
-            qc.presenceMarginCol(col("text"), cm).as("mg"))
-          .select(col("source"),
-            floor(lit(qc.ScoreScale) * col("mg")).cast("long").as("score_q"),
-            (col("mg") >= lit(0.0)).cast("long").as("pred"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-          .groupBy(window(col("event_time"), "1 hour"), col("source"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("pred")).as("n_pred_pos"),
-            sum(col("score_q")).as("sum_score_q"))
-          .select("source", "n_docs", "n_pred_pos", "sum_score_q")
-        val d1 = StreamRun.toBatch(s1, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        val d1 = ingressWindow(streamed
+            .select(col("source"), qc.presenceMarginCol(col("text"), cm).as("mg"))
+            .select(col("source"),
+              floor(lit(qc.ScoreScale) * col("mg")).cast("long").as("score_q"),
+              (col("mg") >= lit(0.0)).cast("long").as("pred")),
+          "source")(
+          agg = _.agg(count(lit(1)).as("n_docs"), sum(col("pred")).as("n_pred_pos"),
+              sum(col("score_q")).as("sum_score_q"))
+            .select("source", "n_docs", "n_pred_pos", "sum_score_q"))
         // ingest aggregation 2: bigram-level LM sums via the model probe
-        val s2 = PipelineQueries.qualityProfilePlant(StreamSources.documents(s, dir))
-          .select(col("source"), explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val lmAgg = graft.text.NgramLm.probeQq(s2, lmm, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("source"))
-          .agg(count(lit(1)).as("sum_bigrams"), sum(col("qq")).as("sum_lm_q"))
-          .select("source", "sum_bigrams", "sum_lm_q")
-        val d2 = StreamRun.toBatch(lmAgg, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        val d2 = ingressWindow(streamed
+            .select(col("source"), explode(wordGrams(col("text"), 2)).as("bigram")),
+          "source")(
+          probe = NgramLm.probeQq(_, lmm, fitsBroadcast = true),
+          agg = _.agg(count(lit(1)).as("sum_bigrams"), sum(col("qq")).as("sum_lm_q"))
+            .select("source", "sum_bigrams", "sum_lm_q"))
         d1.join(d2, Seq("source"), "left")
           .select(col("source"), col("n_docs"), col("n_pred_pos"),
             col("sum_score_q"),
@@ -2528,61 +2116,22 @@ object StreamingQueries {
             coalesce(col("sum_lm_q"), lit(0L)).as("sum_lm_q"),
             when(coalesce(col("sum_bigrams"), lit(0L)) > 0,
               (-col("sum_lm_q")).cast("double") /
-                (col("sum_bigrams").cast("double") * lit(graft.text.NgramLm.Scale)))
+                (col("sum_bigrams").cast("double") * lit(NgramLm.Scale)))
               .otherwise(lit(0.0)).as("mean_xent"))
           .orderBy("source")
       },
       Some(PipelineQueries.qualityProfileOracleSql)),
 
     // CCNet BUCKETING AT INGESTION — the tertile boundaries derive
-    // OFFLINE (the xent at ranks n/3 and 2n/3 of the archived corpus)
-    // and ship as two scalars; each streamed doc scores through the
-    // stream-static LM probe and lands in a bucket by two comparisons.
-    // Ties at a boundary take the better bucket with their class (≤ —
-    // a threshold keeps a tie class together where the rank split it;
-    // pinned in the twin's own oracle).
+    // OFFLINE (the xent at ranks n/3 and 2n/3 of the archived corpus,
+    // [[ccnetBounds]]) and ship as two scalars; each streamed doc scores
+    // through the stream-static LM probe and lands in a bucket by two
+    // comparisons ([[ccnetProbe]]).
     Q("stream_pipeline_ccnet_buckets",
       (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val docs = PipelineQueries.lmPlant(graft.Tables.documents(s, dir))
-        val m = graft.text.NgramLm.train(
-          docs.filter(pmod(col("doc_id"), lit(4)) === 0), "text")
-        // cached: the count, the range-partition sampling and the prefix
-        // scan otherwise each re-run the scoring chain (two extra corpus
-        // scans at 100 TB)
-        val scored = graft.Caches.track(
-          graft.text.NgramLm.score(docs, "doc_id", "text", m)
-            .select(col("doc_id"), col("xent")))
-        val n = scored.count()
-        val ranked = graft.operators.PrefixSum.runningSum(
-          scored.withColumn("__one", lit(1L)), "__one", Seq("xent", "doc_id"))
-        // both tertile boundaries in ONE job (each was its own
-        // filter+agg run over the prefix scan)
-        val bs = ranked
-          .filter(col("running___one").isin(n / 3, 2 * n / 3))
-          .groupBy(col("running___one")).agg(min(col("xent")).as("x"))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        val t1 = bs.getOrElse(n / 3, Double.NegativeInfinity)
-        val t2 = bs.getOrElse(2 * n / 3, Double.NegativeInfinity)
-        val incoming = PipelineQueries.lmPlant(StreamSources.documents(s, dir))
-          .select(col("doc_id"), explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val out = graft.text.NgramLm.probeQq(incoming, m, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
-          .select(col("doc_id"),
-            ((-col("lm_logp_q")).cast("double") /
-              (col("n_bigrams").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-          .select(col("doc_id"), col("xent"),
-            when(col("xent") <= lit(t1), "head")
-              .when(col("xent") <= lit(t2), "middle")
-              .otherwise("tail").as("ppl_bucket"))
-        StreamRun.toBatch(out, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        val docs = PipelineQueries.lmPlant(Tables.documents(s, dir))
+        val m = quarterLm(docs)
+        ccnetProbe(s, dir, m, Left(ccnetBounds(docs, m)))
       },
       Some(PipelineQueries.ccnetBucketsStreamOracleSql)),
 
@@ -2597,57 +2146,24 @@ object StreamingQueries {
     // value-exactly.
     Q("stream_pipeline_ccnet_buckets_loaded",
       (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
         val lmRoot = PipelineQueries.serveRoot("ccnet_lm", dir)
         val bRoot = PipelineQueries.serveRoot("ccnet_bounds", dir)
         // ---- the nightly half: train, derive boundaries, persist ----
         // (through the serve-root ensure-memo — see the batch `_loaded`
         // family: first touch per process+corpus builds, re-measures
         // load + score only)
-        if (graft.pipeline.ModelStore.latestGen(s, bRoot).isEmpty) {
-          val docs = PipelineQueries.lmPlant(graft.Tables.documents(s, dir))
-          val trained = graft.text.NgramLm.train(
-            docs.filter(pmod(col("doc_id"), lit(4)) === 0), "text")
-          val scored = graft.Caches.track(
-            graft.text.NgramLm.score(docs, "doc_id", "text", trained)
-              .select(col("doc_id"), col("xent")))
-          val n = scored.count()
-          val ranked = graft.operators.PrefixSum.runningSum(
-            scored.withColumn("__one", lit(1L)), "__one", Seq("xent", "doc_id"))
-          // both tertile boundaries in ONE job (each was its own
-          // filter+agg run over the prefix scan)
-          val bs = ranked
-            .filter(col("running___one").isin(n / 3, 2 * n / 3))
-            .groupBy(col("running___one")).agg(min(col("xent")).as("x"))
-            .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-          graft.text.NgramLm.save(s, trained, lmRoot)
-          graft.pipeline.ModelStore.save(s, bRoot, Seq(),
-            Map("t1" -> bs.getOrElse(n / 3, Double.NegativeInfinity).toString,
-              "t2" -> bs.getOrElse(2 * n / 3, Double.NegativeInfinity).toString))
+        if (ModelStore.latestGen(s, bRoot).isEmpty) {
+          val docs = PipelineQueries.lmPlant(Tables.documents(s, dir))
+          val trained = quarterLm(docs)
+          val (t1, t2) = ccnetBounds(docs, trained)
+          NgramLm.save(s, trained, lmRoot)
+          ModelStore.save(s, bRoot, Seq(),
+            Map("t1" -> t1.toString, "t2" -> t2.toString))
         }
         // ---- the serving half: load and score the stream ----
-        val m = graft.text.NgramLm.load(s, lmRoot)
-        val bounds = graft.pipeline.ModelStore.loadParams(s, bRoot)
-        val (t1, t2) = (bounds("t1").toDouble, bounds("t2").toDouble)
-        val incoming = PipelineQueries.lmPlant(StreamSources.documents(s, dir))
-          .select(col("doc_id"), explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val out = graft.text.NgramLm.probeQq(incoming, m, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
-          .select(col("doc_id"),
-            ((-col("lm_logp_q")).cast("double") /
-              (col("n_bigrams").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-          .select(col("doc_id"), col("xent"),
-            when(col("xent") <= lit(t1), "head")
-              .when(col("xent") <= lit(t2), "middle")
-              .otherwise("tail").as("ppl_bucket"))
-        StreamRun.toBatch(out, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        val bounds = ModelStore.loadParams(s, bRoot)
+        ccnetProbe(s, dir, NgramLm.load(s, lmRoot),
+          Left((bounds("t1").toDouble, bounds("t2").toDouble)))
       },
       Some(PipelineQueries.ccnetBucketsStreamOracleSql)),
 
@@ -2656,26 +2172,22 @@ object StreamingQueries {
     // on Wikipedia-trained models, applied to the crawl in flight): the
     // per-source tertile boundaries derive offline from the archive
     // (one keyed rank window — parallel across sources — then a
-    // #sources-row collect), ride as a BROADCAST table, and each
-    // streamed doc lands in its source's bucket by two comparisons
-    // after the stream-static LM probe. Tie/absence semantics exactly
-    // as the global twin: ≤ keeps a tie class together, a source too
-    // small to have a rank gets −∞ boundaries (everything 'tail'...
-    // after 'head'/'middle' fail), zero-bigram docs are absent.
+    // #sources-row table), ride as a BROADCAST table, and each streamed
+    // doc lands in its source's bucket by two comparisons after the
+    // stream-static LM probe. Tie/absence semantics exactly as the
+    // global twin: ≤ keeps a tie class together, a source too small to
+    // have a rank gets −∞ boundaries (everything 'tail'... after
+    // 'head'/'middle' fail), zero-bigram docs are absent.
     Q("stream_pipeline_ccnet_buckets_by_source",
       (s, dir) => {
-        implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        import org.apache.spark.sql.expressions.Window
-        val raw = graft.Tables.documents(s, dir)
+        val raw = Tables.documents(s, dir)
         val docs = PipelineQueries.lmPlant(raw)
-        val m = graft.text.NgramLm.train(
-          docs.filter(pmod(col("doc_id"), lit(4)) === 0), "text")
-        val scored = graft.text.NgramLm.score(docs, "doc_id", "text", m)
+        val m = quarterLm(docs)
+        val scored = NgramLm.score(docs, "doc_id", "text", m)
           .join(raw.select("doc_id", "source"), "doc_id")
         val w = Window.partitionBy("source")
           .orderBy(col("xent"), col("doc_id"))
-        val rk = graft.Caches.track(scored
+        val rk = Caches.track(scored
           .withColumn("r", row_number().over(w))
           .withColumn("n", count(lit(1)).over(Window.partitionBy("source"))))
         val b1 = rk.filter(col("r") === expr("n div 3"))
@@ -2687,31 +2199,16 @@ object StreamingQueries {
           .select(col("source"),
             coalesce(col("t1"), lit(Double.NegativeInfinity)).as("t1"),
             coalesce(col("t2"), lit(Double.NegativeInfinity)).as("t2"))
-        val incoming = PipelineQueries.lmPlant(StreamSources.documents(s, dir))
-          .join(broadcast(graft.Caches.track(raw.select("doc_id", "source"))),
-            "doc_id")
-          .select(col("doc_id"), col("source"),
-            explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val out = graft.text.NgramLm.probeQq(incoming, m, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("source")).as("source"),
-            count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
-          .select(col("doc_id"), col("source"),
-            ((-col("lm_logp_q")).cast("double") /
-              (col("n_bigrams").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-          .join(broadcast(bounds), "source")
-          .select(col("doc_id"), col("source"), col("xent"),
-            when(col("xent") <= col("t1"), "head")
-              .when(col("xent") <= col("t2"), "middle")
-              .otherwise("tail").as("ppl_bucket"))
-        StreamRun.toBatch(out, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
-          .orderBy("doc_id")
+        ccnetProbe(s, dir, m, Right(bounds))
       },
       Some(PipelineQueries.ccnetBucketsBySourceStreamOracleSql)),
+
+    // unigram-tokenizer segmentation AT INGESTION — the tokenizer is
+    // trained offline (the batch row's exact Viterbi-EM), the stream
+    // pays one kernel pass per document (model as a plan Literal — pure
+    // column work, append mode, no state); the batch apply oracle checks
+    // it verbatim.
+    PipelineQueries.unigramApply.stream,
 
     // DSIR scoring AT INGESTION — importance-score the stream against a
     // model fit OFFLINE on the batch corpus (the production DSIR shape:
@@ -2720,38 +2217,7 @@ object StreamingQueries {
     // gram fold, no aggregation), so the stream plan is the batch plan
     // on a streaming frame — append mode, no state, no watermark; the
     // batch row's oracle checks it verbatim.
-    // unigram-tokenizer segmentation AT INGESTION — the tokenizer is
-    // trained offline (the batch row's exact Viterbi-EM), the stream
-    // pays one kernel pass per document (model as a plan Literal — pure
-    // column work, append mode, no state); the batch apply oracle checks
-    // it verbatim.
-    Q("stream_text_unigram_apply",
-      (s, dir) => {
-        implicit val sp = s
-        val m = graft.text.Unigram.train(
-          graft.Tables.documents(s, dir)
-            .filter(pmod(col("doc_id"), lit(4)) === 0),
-          "text", rounds = PipelineQueries.UnigramRounds)
-        val out = graft.text.Unigram.score(
-          StreamSources.documents(s, dir), "doc_id", "text", m)
-        StreamRun.toBatch(out, "append", numPartitions = 4)
-          .orderBy("doc_id")
-      },
-      Some(PipelineQueries.unigramApplyOracleSql)),
-
-    Q("stream_text_dsir_score",
-      (s, dir) => {
-        implicit val sp = s
-        val docs = PipelineQueries.dsirPlant(graft.Tables.documents(s, dir))
-        val m = graft.text.Dsir.fit(docs, "text",
-          pmod(col("doc_id"), lit(7)) === 0)
-        val out = graft.text.Dsir.score(
-          PipelineQueries.dsirPlant(StreamSources.documents(s, dir)),
-          "doc_id", "text", m)
-        StreamRun.toBatch(out, "append", numPartitions = 4)
-          .orderBy("doc_id")
-      },
-      Some(PipelineQueries.dsirScoreOracleSql)),
+    PipelineQueries.dsirScore.stream,
 
     // DSIR SELECTION AT INGESTION — the top-k rank is batch-shaped, so
     // the deployment twin ships the boundary as a scalar derived
@@ -2763,10 +2229,10 @@ object StreamingQueries {
     Q("stream_pipeline_dsir_select",
       (s, dir) => {
         implicit val sp = s
-        val docs = PipelineQueries.dsirPlant(graft.Tables.documents(s, dir))
+        val docs = PipelineQueries.dsirPlant(Tables.documents(s, dir))
         val m = graft.text.Dsir.fit(docs, "text",
           pmod(col("doc_id"), lit(7)) === 0)
-        val scored = graft.Caches.track(
+        val scored = Caches.track(
           graft.text.Dsir.score(docs, "doc_id", "text", m))
         val k = docs.count() / 5
         val boundary = graft.text.Dsir.selectTopK(scored, "doc_id", k)
@@ -2792,12 +2258,8 @@ object StreamingQueries {
     Q("stream_text_classifier",
       (s, dir) => {
         implicit val sp = s
-        val qc = graft.text.QualityClassifier
-        val docs = PipelineQueries.classifierPlant(graft.Tables.documents(s, dir))
-        val feats = graft.Caches.track(qc.features(docs, "doc_id", "text",
-          (pmod(col("doc_id"), lit(6)) === 0).cast("int")))
-        val m = qc.train(feats)
-        val out = qc.scorePresenceFold(
+        val m = classifierOn(PipelineQueries.classifierPlant(Tables.documents(s, dir)))
+        val out = QualityClassifier.scorePresenceFold(
           PipelineQueries.classifierPlant(StreamSources.documents(s, dir)),
           "doc_id", "text", m)
         StreamRun.toBatch(out, "append", numPartitions = 4)
@@ -2819,13 +2281,9 @@ object StreamingQueries {
     Q("stream_text_classifier_calibration",
       (s, dir) => {
         implicit val sp = s
-        val qc = graft.text.QualityClassifier
-        val docs = PipelineQueries.classifierPlant(graft.Tables.documents(s, dir))
-        val feats = graft.Caches.track(qc.features(docs, "doc_id", "text",
-          (pmod(col("doc_id"), lit(6)) === 0).cast("int")))
-        val m = qc.train(feats)
+        val m = classifierOn(PipelineQueries.classifierPlant(Tables.documents(s, dir)))
         val w = PipelineQueries.CalBinW
-        val binned = qc.scorePresenceFold(
+        val binned = QualityClassifier.scorePresenceFold(
             PipelineQueries.classifierPlant(StreamSources.documents(s, dir)),
             "doc_id", "text", m)
           .select(
@@ -2857,11 +2315,8 @@ object StreamingQueries {
     Q("stream_text_classifier_reliability",
       (s, dir) => {
         implicit val sp = s
-        val qc = graft.text.QualityClassifier
-        val docs = PipelineQueries.classifierPlant(graft.Tables.documents(s, dir))
-        val feats = graft.Caches.track(qc.features(docs, "doc_id", "text",
-          (pmod(col("doc_id"), lit(6)) === 0).cast("int")))
-        val m = qc.train(feats)
+        val qc = QualityClassifier
+        val m = classifierOn(PipelineQueries.classifierPlant(Tables.documents(s, dir)))
         val ps = qc.ProbScale
         val w = ps / qc.ReliabilityBins
         val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
@@ -2908,19 +2363,17 @@ object StreamingQueries {
     Q("stream_pipeline_model_gate",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordGrams
-        val qc = graft.text.QualityClassifier
+        val qc = QualityClassifier
         val docs = PipelineQueries.lmPlant(
-          PipelineQueries.classifierPlant(graft.Tables.documents(s, dir)))
-        val feats = graft.Caches.track(qc.features(docs, "doc_id", "text",
+          PipelineQueries.classifierPlant(Tables.documents(s, dir)))
+        val feats = Caches.track(qc.features(docs, "doc_id", "text",
           (pmod(col("doc_id"), lit(6)) === 0).cast("int")))
         val cm = qc.train(feats)
-        val lmm = graft.text.NgramLm.train(
-          docs.filter(pmod(col("doc_id"), lit(4)) === 0), "text")
+        val lmm = quarterLm(docs)
         // offline τ: rank the batch survivors exactly as the batch gate
-        val surv = graft.Caches.track(
+        val surv = Caches.track(
           qc.score(feats, "doc_id", cm).filter(col("pred") === 1)
-            .join(graft.text.NgramLm.score(docs, "doc_id", "text", lmm)
+            .join(NgramLm.score(docs, "doc_id", "text", lmm)
               .select(col("doc_id"), col("xent")), Seq("doc_id")))
         val n = surv.count()
         val ranked = graft.operators.PrefixSum.runningSum(
@@ -2936,21 +2389,14 @@ object StreamingQueries {
           .filter(col("margin") >= 0.0)
           .select(col("doc_id"), col("margin"),
             explode(wordGrams(col("text"), 2)).as("bigram"))
-          .withColumn("event_time", current_timestamp())
-          .withWatermark("event_time", "1 hour")
-        val out = graft.text.NgramLm.probeQq(incoming, lmm, fitsBroadcast = true)
-          .groupBy(window(col("event_time"), "1 hour"), col("doc_id"))
-          .agg(min(col("margin")).as("margin"),
-            count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
-          .select(col("doc_id"),
-            floor(lit(graft.text.QualityClassifier.ScoreScale) * col("margin"))
-              .cast("long").as("score_q"),
-            ((-col("lm_logp_q")).cast("double") /
-              (col("n_bigrams").cast("double") * lit(graft.text.NgramLm.Scale)))
-              .as("xent"))
-          .filter(col("xent") < lit(tau))
-        StreamRun.toBatch(out, "update", numPartitions = 4,
-          requireSingleDataBatch = true, noDataBatch = false)
+        ingressWindow(incoming, "doc_id")(
+          probe = NgramLm.probeQq(_, lmm, fitsBroadcast = true),
+          agg = _.agg(min(col("margin")).as("margin"),
+              count(lit(1)).as("n_bigrams"), sum(col("qq")).as("lm_logp_q"))
+            .select(col("doc_id"),
+              floor(lit(qc.ScoreScale) * col("margin")).cast("long").as("score_q"),
+              xent("lm_logp_q", "n_bigrams").as("xent"))
+            .filter(col("xent") < lit(tau)))
           .orderBy("doc_id")
       },
       Some(PipelineQueries.modelGateStreamOracleSql)),
@@ -2958,58 +2404,24 @@ object StreamingQueries {
     // BPE tokenization AT INGESTION against a frozen tokenizer — the
     // production shape (training on the stream would drift the
     // vocabulary with arrival order): merges train OFFLINE on the
-    // %4 == 0 training subset (the same distributed rounds as
-    // text_bpe_train), then the stream applies the frozen merge table as
-    // a chain of R broadcast-literal rewrites — pure per-row column
-    // work, no shuffle, no state, no watermark; the stream plan never
-    // changes shape with R. The oracle re-derives the merge table from
-    // the training subset and applies it to every doc (two CTE chains,
-    // same generator family as the batch row).
+    // training slice (the same distributed rounds as text_bpe_train),
+    // then the stream applies the frozen merge table ([[mergesApplied]]).
+    // The oracle re-derives the merge table from the training slice and
+    // applies it to every doc (two CTE chains, same generator family as
+    // the batch row).
     Q("stream_text_bpe_apply",
-      (s, dir) => {
-        implicit val sp = s
-        val (merges, _) = graft.text.Bpe.train(
-          graft.Tables.documents(s, dir)
-            .filter(pmod(col("doc_id"), lit(4)) === 0),
-          "doc_id", "text", rounds = PipelineQueries.BpeRounds)
-        val out = StreamSources.documents(s, dir)
-          .select(col("doc_id"),
-            graft.text.Bpe.applyMerges(col("text"), merges).as("s"))
-          .select(col("doc_id"),
-            org.apache.spark.sql.functions.size(
-              graft.functions.GraftFunctions.tokens(col("s")))
-              .cast("int").as("n_symbols"),
-            col("s").as("text_bpe"))
-        StreamRun.toBatch(out, "append", numPartitions = 4)
-          .orderBy("doc_id")
-      },
+      (s, dir) => mergesApplied(s, dir, graft.text.Bpe.train(trainingSlice(s, dir),
+        "doc_id", "text", rounds = PipelineQueries.BpeRounds)._1, "text_bpe"),
       Some(PipelineQueries.bpeApplyOracleSql(PipelineQueries.BpeRounds))),
 
     // WordPiece tokenization AT INGESTION — the same frozen-tokenizer
-    // deployment as the BPE twin (training on the stream would drift the
-    // vocabulary with arrival order): the likelihood-scored merge table
-    // trains OFFLINE on the %4 == 0 subset, the stream replays it as the
-    // R broadcast-literal rewrite chain — per-row column work, no
-    // shuffle, no state. Completes streaming coverage across all three
-    // tokenizer families (BPE, unigram, WordPiece).
+    // deployment as the BPE twin: the likelihood-scored merge table
+    // trains OFFLINE on the training slice and the stream replays it.
+    // Completes streaming coverage across all three tokenizer families
+    // (BPE, unigram, WordPiece).
     Q("stream_text_wordpiece_apply",
-      (s, dir) => {
-        implicit val sp = s
-        val (merges, _) = graft.text.WordPiece.train(
-          graft.Tables.documents(s, dir)
-            .filter(pmod(col("doc_id"), lit(4)) === 0),
-          "doc_id", "text", rounds = PipelineQueries.WpRounds)
-        val out = StreamSources.documents(s, dir)
-          .select(col("doc_id"),
-            graft.text.Bpe.applyMerges(col("text"), merges).as("s"))
-          .select(col("doc_id"),
-            org.apache.spark.sql.functions.size(
-              graft.functions.GraftFunctions.tokens(col("s")))
-              .cast("int").as("n_symbols"),
-            col("s").as("text_wp"))
-        StreamRun.toBatch(out, "append", numPartitions = 4)
-          .orderBy("doc_id")
-      },
+      (s, dir) => mergesApplied(s, dir, graft.text.WordPiece.train(trainingSlice(s, dir),
+        "doc_id", "text", rounds = PipelineQueries.WpRounds)._1, "text_wp"),
       Some(PipelineQueries.wpApplyOracleSqlFor(
         PipelineQueries.WpRounds, "doc_id % 4 = 0"))),
 
@@ -3017,44 +2429,12 @@ object StreamingQueries {
     // streaming face of dedup_bloom, completing the "new data versus the
     // existing training set" family: the training digests fold into a
     // broadcast Bloom filter built OFFLINE (once per run, not per
-    // trigger), each incoming document probes it as a pure column
-    // predicate, and the exact verify rides the SAME stream-static left
-    // join by nulling the join key for bloom-negatives — a null key never
-    // matches and skips the hash probe, so the genuinely-new majority
-    // costs one bit-array read per row while the flag stays EXACT (md5
-    // equality decides; the filter only prunes). One scan, one plan, no
-    // join state, no watermark. The static digest side is cached but NOT
-    // force-broadcast — at training-set scale the planner's shuffle-side
-    // join is the honest fallback, and the bloom's pruning is what keeps
-    // the probe volume small either way. Same %8 plant and oracle as the
-    // batch rows.
+    // trigger) and each incoming document probes it ([[bloomProbe]]).
+    // Same %8 plant and oracle as the batch rows.
     Q("stream_dedup_bloom",
       (s, dir) => {
-        implicit val sp = s
-        val tr = graft.Caches.track(
-          graft.Tables.documents(s, dir)
-            .withColumn("text", PipelineQueries.bloomPlantText)
-            .filter(pmod(col("doc_id"), lit(4)) === 0)
-            .select(md5(col("text")).as("tdg")).distinct())
-        val n = tr.count()
-        // buildBloom, not stat.bloomFilter: the raw stat call clamps the
-        // filter at the runtime-filter bit ceiling (8 MB) — see the
-        // Dedup.buildBloom scaladoc for the measured degradation
-        val bf = graft.dedup.Dedup.buildBloom(tr,
-          graft.functions.GraftFunctions.hash60(col("tdg")), n, 0.01)
-        val bc = s.sparkContext.broadcast(bf)
-        val probed = StreamSources.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(4)) =!= 0)
-          .withColumn("text", PipelineQueries.bloomPlantText)
-          .select(col("doc_id"), md5(col("text")).as("dg"))
-          .withColumn("pos",
-            graft.functions.expressions.BloomMightContainLong.of(
-              bc, graft.functions.GraftFunctions.hash60(col("dg"))))
-        val flagged = probed
-          .join(tr, when(col("pos"), col("dg")) === col("tdg"), "left")
-          .select(col("doc_id"), col("tdg").isNotNull.cast("int").as("in_training"))
-        StreamRun.toBatch(flagged, "append", numPartitions = 4)
-          .orderBy("doc_id")
+        val tr = Caches.track(bloomDigests(s, dir))
+        bloomProbe(s, dir, bloomOf(tr, tr.count()), tr)
       },
       Some(PipelineQueries.bloomMembershipOracleSql)),
 
@@ -3067,34 +2447,14 @@ object StreamingQueries {
     // OR-merge at identical parameters.
     Q("stream_dedup_bloom_loaded",
       (s, dir) => {
-        implicit val sp = s
-        val trBuild = graft.Tables.documents(s, dir)
-          .withColumn("text", PipelineQueries.bloomPlantText)
-          .filter(pmod(col("doc_id"), lit(4)) === 0)
-          .select(md5(col("text")).as("tdg")).distinct()
         val root = PipelineQueries.serveRoot("bloom_index", dir)
-        graft.dedup.IndexStore.ensureBloom(s, root, {
-          val n = trBuild.count()
-          (graft.dedup.Dedup.buildBloom(trBuild,
-            graft.functions.GraftFunctions.hash60(col("tdg")), n, 0.01),
-            trBuild, n)
+        IndexStore.ensureBloom(s, root, {
+          val tr = bloomDigests(s, dir)
+          val n = tr.count()
+          (bloomOf(tr, n), tr, n)
         }, 0.01)
-        val tr = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "digests"))
-        val bc = s.sparkContext.broadcast(
-          graft.dedup.IndexStore.loadBloom(s, root))
-        val probed = StreamSources.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(4)) =!= 0)
-          .withColumn("text", PipelineQueries.bloomPlantText)
-          .select(col("doc_id"), md5(col("text")).as("dg"))
-          .withColumn("pos",
-            graft.functions.expressions.BloomMightContainLong.of(
-              bc, graft.functions.GraftFunctions.hash60(col("dg"))))
-        val flagged = probed
-          .join(tr, when(col("pos"), col("dg")) === col("tdg"), "left")
-          .select(col("doc_id"), col("tdg").isNotNull.cast("int").as("in_training"))
-        StreamRun.toBatch(flagged, "append", numPartitions = 4)
-          .orderBy("doc_id")
+        bloomProbe(s, dir, IndexStore.loadBloom(s, root),
+          Caches.track(ModelStore.loadRelation(s, root, "digests")))
       },
       Some(PipelineQueries.bloomMembershipOracleSql)),
 
@@ -3107,38 +2467,17 @@ object StreamingQueries {
     // candidate and flip a verify answer — green == merge ≡ rebuild.
     Q("stream_dedup_bloom_appended",
       (s, dir) => {
-        implicit val sp = s
-        val tr = graft.Caches.track(
-          graft.Tables.documents(s, dir)
-            .withColumn("text", PipelineQueries.bloomPlantText)
-            .filter(pmod(col("doc_id"), lit(4)) === 0)
-            .select(md5(col("text")).as("tdg")).distinct())
+        val tr = Caches.track(bloomDigests(s, dir))
         val n = tr.count()
-        val h = graft.functions.GraftFunctions.hash60(col("tdg"))
+        val h = hash60(col("tdg"))
         // both halves size for the FULL n so bit width and hash count
         // match — the mergeInPlace compatibility contract
-        val bf = graft.dedup.Dedup.buildBloom(
-          tr.filter(pmod(h, lit(2)) === 0), h, n, 0.01)
-        bf.mergeInPlace(graft.dedup.Dedup.buildBloom(
-          tr.filter(pmod(h, lit(2)) === 1), h, n, 0.01))
+        val bf = bloomOf(tr.filter(pmod(h, lit(2)) === 0), n)
+        bf.mergeInPlace(bloomOf(tr.filter(pmod(h, lit(2)) === 1), n))
         val root = PipelineQueries.modelRootShared("bloom_index_app")
-        graft.dedup.IndexStore.saveBloom(s, root, bf, tr, n, 0.01)
-        val trL = graft.Caches.track(
-          graft.pipeline.ModelStore.loadRelation(s, root, "digests"))
-        val bc = s.sparkContext.broadcast(
-          graft.dedup.IndexStore.loadBloom(s, root))
-        val probed = StreamSources.documents(s, dir)
-          .filter(pmod(col("doc_id"), lit(4)) =!= 0)
-          .withColumn("text", PipelineQueries.bloomPlantText)
-          .select(col("doc_id"), md5(col("text")).as("dg"))
-          .withColumn("pos",
-            graft.functions.expressions.BloomMightContainLong.of(
-              bc, graft.functions.GraftFunctions.hash60(col("dg"))))
-        val flagged = probed
-          .join(trL, when(col("pos"), col("dg")) === col("tdg"), "left")
-          .select(col("doc_id"), col("tdg").isNotNull.cast("int").as("in_training"))
-        StreamRun.toBatch(flagged, "append", numPartitions = 4)
-          .orderBy("doc_id")
+        IndexStore.saveBloom(s, root, bf, tr, n, 0.01)
+        bloomProbe(s, dir, IndexStore.loadBloom(s, root),
+          Caches.track(ModelStore.loadRelation(s, root, "digests")))
       },
       Some(PipelineQueries.bloomMembershipOracleSql)),
 
@@ -3156,11 +2495,10 @@ object StreamingQueries {
     Q("stream_pipeline_decontaminate",
       (s, dir) => {
         implicit val sp = s
-        import graft.functions.GraftFunctions.wordShingles
         // the static side of a stream-static join re-executes per
         // micro-batch: cache the benchmark gram set so its corpus scan +
         // shingle explode run once per run, not once per trigger
-        val bench = broadcast(graft.Caches.track(
+        val bench = broadcast(Caches.track(
           PipelineQueries.decontamBenchGrams(s, dir).distinct()))
         val hits = StreamSources.documents(s, dir)
           .select(col("doc_id"),
@@ -3206,22 +2544,7 @@ object StreamingQueries {
     // Iterable flavor — the buffer is bounded by (keys × window span), and
     // a deployment must cap window span (or spill via RocksDB state) the
     // same way the reference's win archives are memory-bound per replica.
-    Q("stream_win_tb_noninc",
-      (s, dir) => {
-        implicit val sp = s
-        val H6 = 6L * Q.HourUs
-        val agg = StreamSources.events(s, dir)
-          .selectExpr("user_id", s"((ts div 1000) div $H6) * $H6 AS win_start_us",
-            "CAST(round(value * 100) AS BIGINT) AS cents")
-          .groupBy("user_id", "win_start_us")
-          .agg(count(lit(1)).as("cnt"),
-            expr("sort_array(collect_list(cents))").as("buf"))
-          .select(col("user_id"), col("win_start_us"), col("cnt"),
-            expr("buf[CAST((cnt + 1) div 2 AS INT) - 1]").as("median_cents"),
-            expr("buf[CAST(cnt AS INT) - 1] - buf[0]").as("range_cents"))
-        StreamRun.toBatch(agg, "complete").orderBy("user_id", "win_start_us")
-      },
-      Some(WindowQueries.winTbNonincOracleSql)),
+    WindowQueries.noninc.stream,
 
     // the BOUNDED-state plan for the Iterable flavor — per-(key, window)
     // buffer in flatMapGroupsWithState, emitted exactly once when the

@@ -151,6 +151,36 @@ object WindowQueries {
         FROM e GROUP BY user_id, win_start_us
         ORDER BY user_id, win_start_us"""
 
+  // ---- rows with a complete-mode stream twin (StreamingQueries
+  //      registers each `stream`): the explode rendering of hopping with
+  //      gaps (Spark's window() requires slide ≤ len) and the
+  //      full-buffer Iterable flavor ----
+
+  private[queries] lazy val hopping = Twin("win_tb_hopping", Twin.Events,
+      "complete", Seq("event_type", "win_start_us"), Some(winTbHoppingOracleSql)) {
+    (_, _, events) => events
+      .select(col("event_type"), expr(Q.TsUsSpark).as("ts_us"), col("value"))
+      .withColumn("wmin", expr(s"(ts_us - $M10) div $M30 + 1"))
+      .withColumn("wmax", expr(s"ts_us div $M30"))
+      .withColumn("w", explode(expr("CASE WHEN wmin <= wmax THEN sequence(wmin, wmax) END")))
+      .select(col("event_type"), expr(s"w * $M30").as("win_start_us"), col("value"))
+      .groupBy("event_type", "win_start_us")
+      .agg(count(lit(1)).as("cnt"), expr(SumVal).as("sum_value"))
+  }
+
+  private[queries] lazy val noninc = Twin("win_tb_noninc", Twin.Events,
+      "complete", Seq("user_id", "win_start_us"), Some(winTbNonincOracleSql)) {
+    (_, _, events) => events
+      .select(col("user_id"), expr(s"((${Q.TsUsSpark}) div $H6) * $H6").as("win_start_us"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+      .groupBy("user_id", "win_start_us")
+      .agg(count(lit(1)).as("cnt"),
+        expr("sort_array(collect_list(cents))").as("buf"))
+      .select(col("user_id"), col("win_start_us"), col("cnt"),
+        expr("buf[CAST((cnt + 1) div 2 AS INT) - 1]").as("median_cents"),
+        expr("buf[CAST(cnt AS INT) - 1] - buf[0]").as("range_cents"))
+  }
+
   def all: Seq[Q] = Seq(
 
     // ---- Reduce: per-key rolling fold, one emission per input ----
@@ -246,17 +276,7 @@ object WindowQueries {
     // ---- TB hopping with gaps (len 10m < slide 30m,
     //      wf/window_replica.hpp:267-273): rows between hops match no
     //      window and are dropped ----
-    Q("win_tb_hopping",
-      (s, dir) => Tables.events(s, dir)
-        .select(col("event_type"), expr(Q.TsUsSpark).as("ts_us"), col("value"))
-        .withColumn("wmin", expr(s"(ts_us - $M10) div $M30 + 1"))
-        .withColumn("wmax", expr(s"ts_us div $M30"))
-        .withColumn("w", explode(expr("CASE WHEN wmin <= wmax THEN sequence(wmin, wmax) END")))
-        .select(col("event_type"), expr(s"w * $M30").as("win_start_us"), col("value"))
-        .groupBy("event_type", "win_start_us")
-        .agg(count(lit(1)).as("cnt"), expr(SumVal).as("sum_value"))
-        .orderBy("event_type", "win_start_us"),
-      Some(winTbHoppingOracleSql)),
+    hopping.batch,
 
     // ---- CB tumbling (len 100) per key: count-index via row_number over
     //      (ts, id) — the reference's per-key arrival index
@@ -364,17 +384,6 @@ object WindowQueries {
 
     // ---- non-incremental window logic: order statistics over the full
     //      sorted window buffer (Iterable flavor, wf/iterable.hpp:47-55) ----
-    Q("win_tb_noninc",
-      (s, dir) => Tables.events(s, dir)
-        .select(col("user_id"), expr(s"((${Q.TsUsSpark}) div $H6) * $H6").as("win_start_us"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy("user_id", "win_start_us")
-        .agg(count(lit(1)).as("cnt"),
-          expr("sort_array(collect_list(cents))").as("buf"))
-        .select(col("user_id"), col("win_start_us"), col("cnt"),
-          expr("buf[CAST((cnt + 1) div 2 AS INT) - 1]").as("median_cents"),
-          expr("buf[CAST(cnt AS INT) - 1] - buf[0]").as("range_cents"))
-        .orderBy("user_id", "win_start_us"),
-      Some(winTbNonincOracleSql))
+    noninc.batch
   )
 }

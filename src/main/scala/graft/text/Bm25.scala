@@ -91,7 +91,7 @@ object Bm25 {
     */
   def streamScored(stream: DataFrame, archive: DataFrame, idCol: String,
       textCol: String, queries: DataFrame, qidCol: String,
-      qtextCol: String, parallelism: Int = 32): DataFrame = {
+      qtextCol: String): DataFrame = {
     val m = fit(archive, idCol, textCol, queries, qidCol, qtextCol)
     // the model rides as ONE nested Literal into the native
     // [[graft.functions.expressions.Bm25Scores]] kernel — a single plan
@@ -112,9 +112,10 @@ object Bm25 {
       // a file-stream batch arrives in as few partitions as it has files
       // (often ONE) — without an explicit stateless shuffle here the
       // whole scoring projection would run single-threaded upstream of
-      // the aggregation exchange
+      // the aggregation exchange; the shuffle spreads it over the
+      // session's cores
       .select(col(idCol), col(textCol))
-      .repartition(parallelism)
+      .repartition(stream.sparkSession.sparkContext.defaultParallelism)
       .select(col(idCol),
         explode(graft.functions.expressions.Bm25Scores
           .of(col(textCol), modelLit, m.avgdl)).as("__qs"))

@@ -27,13 +27,38 @@ class ContractSpec extends AnyFunSuite {
     val prevFallback = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    // rows whose oracle SQL is the same text (a stream twin, a `_loaded`
+    // or `_appended` row and the row it derives from) claim the same
+    // result: their outputs are collected, columns by name, rows sorted
+    val groups = SparkEntry.oracleSql.groupBy(_._2).values
+      .map(_.keySet.toList.sorted).filter(_.size > 1).toList
+    val shared = groups.flatten.toSet
+    val outputs = scala.collection.mutable.Map.empty[String, (List[String], List[String])]
     try {
       SparkEntry.queries.foreach { case (name, fn) =>
-        withClue(name) { assert(fn(spark, TestSpark.SF).count() >= 0) }
+        withClue(name) {
+          val df = fn(spark, TestSpark.SF)
+          if (shared(name)) {
+            val cols = df.columns.toList.sorted
+            outputs(name) = (cols,
+              df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+                .collect().map(_.toString).toList.sorted)
+          } else assert(df.count() >= 0)
+        }
       }
     } finally {
       spark.conf.set("spark.sql.codegen.fallback", prevFallback)
       spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+    assert(groups.nonEmpty)
+    groups.foreach { g =>
+      val (cols, rows) = outputs(g.head)
+      g.tail.foreach { other =>
+        withClue(s"$other vs ${g.head}: ") {
+          assert(outputs(other)._1 == cols)
+          assert(outputs(other)._2 == rows)
+        }
+      }
     }
   }
 
@@ -82,23 +107,40 @@ class ContractSpec extends AnyFunSuite {
     assert(Bench.historyMedians(Nil, Map("new" -> 1.5))("new") == 1.5)
   }
 
+  /** `src/main` Scala files, other than those named in `allowed`, whose
+    * source contains any of `needles` (paths relative to `src/main/scala`). */
+  private def sourcesContaining(allowed: Set[String], needles: String*): List[String] = {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !allowed(p.getFileName.toString))
+      .filter { p =>
+        val src = new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8)
+        needles.exists(src.contains)
+      }
+      .map(root.relativize(_).toString).toList.sorted
+    finally files.close()
+  }
+
   test("library code reads no environment variable: only the mains do") {
     // a debug switch inside an operator is invisible to its caller and
     // untested; the mains own every env knob (Dev observes runs through
     // Spark's listeners instead)
-    val mains = Set("Bench.scala", "Verify.scala", "Dev.scala")
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = java.nio.file.Files.walk(root)
-    val offenders =
-      try files.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala") && !mains(p.getFileName.toString))
-        .filter { p =>
-          val src = new String(java.nio.file.Files.readAllBytes(p),
-            java.nio.charset.StandardCharsets.UTF_8)
-          src.contains("sys.env") || src.contains("System.getenv")
-        }
-        .map(root.relativize(_).toString).toList.sorted
-      finally files.close()
+    val offenders = sourcesContaining(Set("Bench.scala", "Verify.scala", "Dev.scala"),
+      "sys.env", "System.getenv")
     assert(offenders.isEmpty, s"env reads outside the mains: $offenders")
+  }
+
+  test("library code writes no session conf: only session set-up and the stream run do") {
+    // a session conf is global: a write inside an operator reaches every
+    // query running on the session meanwhile. GraftSession sets the
+    // session up (and adopts a foreign one); StreamRun owns the
+    // query-start window, because Spark reads the state partition count
+    // and the no-data-batch switch from the session at start and has no
+    // per-query option for them
+    val offenders = sourcesContaining(Set("GraftSession.scala", "StreamRun.scala"),
+      "conf.set(")
+    assert(offenders.isEmpty, s"session conf writes outside set-up: $offenders")
   }
 }
